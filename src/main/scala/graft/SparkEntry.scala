@@ -448,18 +448,21 @@ object SparkEntry {
       // Structured Streaming surface: same aggregation as q08 via readStream
       val schema = t(s, dir, "events").schema
       // file-stream source requires a directory: stage the parquet file
+      // (deleted once the query stops: the memory sink holds the rows)
       val stage = java.nio.file.Files.createTempDirectory("graft_stream_src")
-      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
-        stage.resolve("events.parquet"))
-      val stream = s.readStream.schema(schema).parquet(stage.toString)
-        .withColumn("ts", col("ts").cast("timestamp")) // NTZ → session-UTC event time
-      val agg = stream
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
       val qname = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = agg.writeStream.outputMode("complete").format("memory").queryName(qname).start()
-      q.processAllAvailable(); q.stop()
+      try {
+        java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
+          stage.resolve("events.parquet"))
+        val stream = s.readStream.schema(schema).parquet(stage.toString)
+          .withColumn("ts", col("ts").cast("timestamp")) // NTZ → session-UTC event time
+        val agg = stream
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+          .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
+        val q = agg.writeStream.outputMode("complete").format("memory").queryName(qname).start()
+        q.processAllAvailable(); q.stop()
+      } finally graft.jobs.Staging.deleteTree(stage)
       s.table(qname)
         .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour"), col("event_type"),
           col("n"), col("sum_value"))
@@ -1083,36 +1086,39 @@ object SparkEntry {
       // The memory sink is an oracle surface only — the production sink is
       // a checkpointed file/Kafka sink (PLANS.md).
       import s.implicits._
+      // (deleted once the query stops: the memory sink holds the rows)
       val stage = java.nio.file.Files.createTempDirectory("graft_stream_docs")
-      // the table may be a single parquet file (driver testdata) or a
-      // Spark-written DIRECTORY of part files (derived scale data) — stage
-      // whichever part files exist, not the bare directory entry
-      val srcP = java.nio.file.Paths.get(s"$dir/documents.parquet")
-      if (java.nio.file.Files.isDirectory(srcP)) {
-        val listing = java.nio.file.Files.list(srcP)
-        try {
-          val it = listing.iterator()
-          while (it.hasNext) {
-            val p = it.next()
-            val nm = p.getFileName.toString
-            if (nm.endsWith(".parquet")) java.nio.file.Files.copy(p, stage.resolve(nm))
-          }
-        } finally listing.close() // the stream holds a directory fd
-      } else java.nio.file.Files.copy(srcP, stage.resolve("documents.parquet"))
-      val schema = s.read.parquet(stage.toString).schema
-      val stream = s.readStream.schema(schema).parquet(stage.toString)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-      val extracted = stream
-        .mapPartitions(_.map { case (id, text) =>
-          // tokens/sha only — the hand-pruned extractOne projection
-          val (_, nTok, sha) = Extraction.extractTextStats(
-            PageRow(id.toString, null, Array.empty[Byte], text, ""))
-          (id, nTok.toLong, sha)
-        })
-        .toDF("doc_id", "n_tokens", "text_sha256")
       val qname = "graft_stream_extract_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = extracted.writeStream.outputMode("append").format("memory").queryName(qname).start()
-      q.processAllAvailable(); q.stop()
+      try {
+        // the table may be a single parquet file (driver testdata) or a
+        // Spark-written DIRECTORY of part files (derived scale data) — stage
+        // whichever part files exist, not the bare directory entry
+        val srcP = java.nio.file.Paths.get(s"$dir/documents.parquet")
+        if (java.nio.file.Files.isDirectory(srcP)) {
+          val listing = java.nio.file.Files.list(srcP)
+          try {
+            val it = listing.iterator()
+            while (it.hasNext) {
+              val p = it.next()
+              val nm = p.getFileName.toString
+              if (nm.endsWith(".parquet")) java.nio.file.Files.copy(p, stage.resolve(nm))
+            }
+          } finally listing.close() // the stream holds a directory fd
+        } else java.nio.file.Files.copy(srcP, stage.resolve("documents.parquet"))
+        val schema = s.read.parquet(stage.toString).schema
+        val stream = s.readStream.schema(schema).parquet(stage.toString)
+          .select(col("doc_id"), col("text")).as[(Long, String)]
+        val extracted = stream
+          .mapPartitions(_.map { case (id, text) =>
+            // tokens/sha only — the hand-pruned extractOne projection
+            val (_, nTok, sha) = Extraction.extractTextStats(
+              PageRow(id.toString, null, Array.empty[Byte], text, ""))
+            (id, nTok.toLong, sha)
+          })
+          .toDF("doc_id", "n_tokens", "text_sha256")
+        val q = extracted.writeStream.outputMode("append").format("memory").queryName(qname).start()
+        q.processAllAvailable(); q.stop()
+      } finally graft.jobs.Staging.deleteTree(stage)
       s.table(qname).orderBy(col("doc_id"))
     }),
     "q45_salted_agg" -> ((s, dir) => {
@@ -2565,29 +2571,30 @@ object SparkEntry {
       s"<article><p>$text</p></article>" +
       "<footer><a href=\"/d\">privacy</a> <a href=\"/e\">terms</a></footer></body></html>"
 
-  // q75's WARC staging: one archive-set build per sf dir per JVM (bench
-  // trial 2 measures the read+extract path, not the serialization);
-  // production reads the crawler's own archives, it never builds them.
-  private val q75WarcDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The page set q75 and q91 stage as WARC archives: each document's text
+    * in the [[boilerplateWrap]] template at a closed-form url and capture
+    * time, spread one archive per core slot (staging gzip work must use
+    * the session's full parallelism, not a fixed file count — a fixed 8
+    * made the sf1 staging 4x slower than the read it feeds).
+    */
+  private def wrappedPages(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    t(s, dir, "documents").select(col("doc_id"), col("text")).as[(Long, String)]
+      .mapPartitions(_.map { case (id, text) =>
+        (s"https://docs.example.com/d/$id",
+          new java.sql.Timestamp((1700000000L + id) * 1000L),
+          boilerplateWrap(text).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      })
+      .toDF("url", "warc_ts", "html")
+      .repartition(math.max(8, s.sparkContext.defaultParallelism))
+  }
 
+  // q75's WARC staging, built once per sf dir per JVM (bench trial 2
+  // measures the read+extract path, not the serialization); production
+  // reads the crawler's own archives, it never builds them.
   private def cachedWarcDir(s: SparkSession, dir: String): String =
-    q75WarcDirs.computeIfAbsent(dir, { _ =>
-      import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft_warc_q75").toString
-      val pages = t(s, dir, "documents").select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) =>
-          (s"https://docs.example.com/d/$id",
-            new java.sql.Timestamp((1700000000L + id) * 1000L),
-            boilerplateWrap(text).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        })
-        .toDF("url", "warc_ts", "html")
-      // one archive per core-slot: staging gzip work must spread across the
-      // session's full parallelism, not a fixed file count (a fixed 8 made
-      // the sf1 staging 4x slower than the read it feeds)
-      graft.sources.Warc.write(
-        pages.repartition(math.max(8, s.sparkContext.defaultParallelism)), out)
-      out
-    })
+    graft.jobs.Staging.cachedDir("graft_warc_q75", dir)(
+      graft.sources.Warc.write(wrappedPages(s, dir), _))
 
   /** q92's page set: every 3 consecutive docs declare the SAME
     * `rel=canonical` target (the mirror/variant-URL shape), so canonical
@@ -2656,39 +2663,22 @@ object SparkEntry {
   /** q95's segmented-index staging: two disjoint crawl-batch segments
     * (even/odd doc_id), one build per sf dir per JVM.
     */
-  private val q95Dirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedSegmentedIndexDir(key: String, s: SparkSession, docs: DataFrame): String =
-    q95Dirs.computeIfAbsent(key, { _ =>
-      val out = java.nio.file.Files.createTempDirectory("graft_bm25_seg").toString
+    graft.jobs.Staging.cachedDir("graft_bm25_seg", key) { out =>
       graft.jobs.RetrievalIndexJob.addSegment(
         s, out, docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", "batch-even")
       graft.jobs.RetrievalIndexJob.addSegment(
         s, out, docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", "batch-odd")
-      out
-    })
+    }
 
   /** q91's indexed WARC staging: archives + member-index parquet, one
     * build per sf dir per JVM (the cachedWarcDir convention).
     */
-  private val q91Dirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedIndexedWarcDir(s: SparkSession, dir: String): String =
-    q91Dirs.computeIfAbsent(dir, { _ =>
-      import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft_warc_q91").toString
-      val pages = t(s, dir, "documents").select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) =>
-          (s"https://docs.example.com/d/$id",
-            new java.sql.Timestamp((1700000000L + id) * 1000L),
-            boilerplateWrap(text).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        })
-        .toDF("url", "warc_ts", "html")
-      graft.sources.Warc.writeIndexed(
-          pages.repartition(math.max(8, s.sparkContext.defaultParallelism)), s"$out/warc")
+    graft.jobs.Staging.cachedDir("graft_warc_q91", dir) { out =>
+      graft.sources.Warc.writeIndexed(wrappedPages(s, dir), s"$out/warc")
         .write.mode("overwrite").parquet(s"$out/index")
-      out
-    })
+    }
 
   /** q72's split weights and the 14-token cross-split slogan (planted on
     * every 11th document — guaranteed heldout↔train overlap witness).

@@ -129,15 +129,35 @@ object Rx {
     var start = -1
     val n = text.length
     while (i <= n) {
-      val ws = i == n || {
-        val c = text.charAt(i); c == ' ' || c == '\n' || c == '\t' || c == '\f'
-      }
+      val ws = i == n || isTokenSeparator(text.charAt(i))
       if (!ws && start < 0) start = i
       else if (ws && start >= 0) { out += (start.toLong << 32) | i.toLong; start = -1 }
       i += 1
     }
     out.result()
   }
+
+  /** `whitespaceTokensPacked(text).length` without the span array — the
+    * count-only projection of the tokenizer.
+    */
+  def whitespaceTokenCount(text: String): Int = {
+    var n = 0
+    var inTok = false
+    var i = 0
+    while (i < text.length) {
+      val ws = isTokenSeparator(text.charAt(i))
+      if (!ws && !inTok) n += 1
+      inTok = !ws
+      i += 1
+    }
+    n
+  }
+
+  /** The whitespace tokenizer's separators: space, `\n`, `\t` and `\f`
+    * (`\r` and no-break space stay inside tokens).
+    */
+  @inline private def isTokenSeparator(c: Char): Boolean =
+    c == ' ' || c == '\n' || c == '\t' || c == '\f'
 
   /** Tokenizer contract (konfuzio_sdk/tokenizer/regex.py:38-88): group spans
     * only (`keep_full_match=False`), deduped by (start, end), input order.

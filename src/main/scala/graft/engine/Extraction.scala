@@ -40,11 +40,6 @@ object Extraction {
     * combined interval as a percentage iff it still normalizes — the M2
     * type-preserving rule applied across the token boundary.
     */
-  private[engine] def attachPercentSigns(
-      text: String, spans: Seq[Span], scored: Vector[Scorer.Scored]): Vector[Scorer.Scored] =
-    attachPercentSignsPacked(text,
-      spans.iterator.map(sp => (sp.start.toLong << 32) | sp.end.toLong).toArray, scored)
-
   private[engine] def attachPercentSignsPacked(
       text: String, packed: Array[Long], scored: Vector[Scorer.Scored]): Vector[Scorer.Scored] = {
     if (scored.isEmpty) return scored
@@ -183,25 +178,6 @@ object Extraction {
     )
   }
 
-  /** Token count with [[graft.core.Rx.whitespaceTokensPacked]]'s exact
-    * boundary semantics but no span array allocation — the count-only
-    * projection of the tokenizer.
-    */
-  private[engine] def countWhitespaceTokens(text: String): Int = {
-    var i = 0
-    var inTok = false
-    var n = 0
-    val len = text.length
-    while (i < len) {
-      val c = text.charAt(i)
-      val ws = c == ' ' || c == '\n' || c == '\t' || c == '\f'
-      if (!ws && !inTok) { n += 1; inTok = true }
-      else if (ws) inTok = false
-      i += 1
-    }
-    n
-  }
-
   /** The (extracted_text, n_tokens, text_sha256) projection of
     * [[extractOne]]. Catalyst cannot prune columns through an opaque
     * mapPartitions closure, so callers that consume ONLY these three
@@ -217,7 +193,7 @@ object Extraction {
       if (row.text != null && row.text.nonEmpty) row.text
       else if (row.html != null && row.html.nonEmpty) Html.extract(Html.decodeBytes(row.html)).text
       else ""
-    (text, countWhitespaceTokens(text), sha256Hex(text))
+    (text, Rx.whitespaceTokenCount(text), sha256Hex(text))
   }
 
   /** The `labels` projection of [[extractOne]] over a pre-extracted text —

@@ -127,15 +127,10 @@ object Scorer {
 
   def score(text: String, span: Span): Option[Scored] = scoreToken(text, span.start, span.end)
 
-  /** Score all spans; drop below-label-threshold results (F6 semantics:
-    * threshold filter with per-label thresholds, broadcast map).
+  /** Score all packed `(start << 32) | end` token spans; drop
+    * below-label-threshold results (F6 semantics: threshold filter with
+    * per-label thresholds, broadcast map).
     */
-  def scoreSpans(text: String, spans: Seq[Span]): Vector[Scored] =
-    spans.iterator.flatMap(sp => scoreToken(text, sp.start, sp.end))
-      .filter(sc => sc.confidence >= Labels.byName(sc.label).threshold)
-      .toVector
-
-  /** Packed-span variant for the extraction hot path. */
   def scorePacked(text: String, packed: Array[Long]): Vector[Scored] = {
     val out = Vector.newBuilder[Scored]
     var i = 0

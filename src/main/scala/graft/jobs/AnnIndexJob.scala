@@ -116,17 +116,8 @@ object AnnIndexJob {
   def cachedIndex(key: String, corpus: Dataset[(Long, Array[Float])], nCells: Int = 16): Similarity.IvfIndex =
     cache.computeIfAbsent(key, _ => Similarity.buildIvfIndexLocal(corpus, nCells))
 
-  // persisted-layout cache: one on-disk index build per corpus key per JVM;
-  // the value is the index dir. Lives under java.io.tmpdir — a bench/oracle
-  // surface cache, not a production artifact (production calls build()
-  // against a durable path itself).
-  private val builtDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** [[build]] once per corpus key per JVM ([[Staging.cachedDir]]). */
   def cachedIndexDir(key: String, spark: SparkSession,
       corpus: Dataset[(Long, Array[Float])], nCells: Int = 16): String =
-    builtDirs.computeIfAbsent(key, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_index").toString
-      build(spark, corpus, dir, nCells)
-      dir
-    })
+    Staging.cachedDir("graft_ann_index", key)(build(spark, corpus, _, nCells))
 }

@@ -298,16 +298,8 @@ object DedupIndexJob {
     negatives.unionByName(confirmed).drop("__sha", "__bucket")
   }
 
-  // bench/oracle surface cache: one on-disk index build per snapshot key
-  // per JVM (trial 2 of a bench query must not pay the build again);
-  // production calls build() against a durable path itself.
-  private val builtDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** [[build]] once per snapshot key per JVM ([[Staging.cachedDir]]). */
   def cachedIndexDir(key: String, spark: SparkSession, snapshot: DataFrame,
       textCol: String, nBuckets: Int, fpp: Double = 0.01): String =
-    builtDirs.computeIfAbsent(key, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_dedup_index").toString
-      build(spark, snapshot, textCol, dir, nBuckets, fpp)
-      dir
-    })
+    Staging.cachedDir("graft_dedup_index", key)(build(spark, snapshot, textCol, _, nBuckets, fpp))
 }

@@ -99,10 +99,9 @@ object FixtureGoldenJob {
     // one doc per partition (partial-gradient combine order is fixed), the
     // per-partition arrays collected ONCE: 5 payslips of ~270-wide frame
     // rows are a few MB — a bounded collect — and the `iters`-step fit then
-    // runs on the driver via fitSoftmaxLocal, which is bit-identical to the
-    // distributed fitSoftmax (same partition-ordered partial combines) but
-    // costs one Spark job instead of iters+2 (measured: the 80 per-step
-    // jobs of milliseconds of arithmetic each were ~the whole train wall).
+    // runs on the driver via fitSoftmaxLocal: one Spark job instead of one
+    // per step (measured: 80 per-step jobs of milliseconds of arithmetic
+    // each were ~the whole train wall).
     val parts: IndexedSeq[Array[ExampleS]] = spark.sparkContext
       .parallelize(trainIds, trainIds.length)
       .mapPartitionsWithIndex { (pid, it) =>

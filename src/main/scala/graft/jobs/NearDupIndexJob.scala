@@ -203,17 +203,8 @@ object NearDupIndexJob {
     nFresh
   }
 
-  private val builtDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** [[build]] once per session per key (the q47/q74/q84 discipline:
-    * contract queries probe a PERSISTED index without rebuilding it per
-    * call).
-    */
+  /** [[build]] once per corpus key per JVM ([[Staging.cachedDir]]). */
   def cachedIndexDir(key: String, spark: SparkSession,
       corpus: Dataset[(Long, String)], nBuckets: Int): String =
-    builtDirs.computeIfAbsent(key, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_neardup_index").toString
-      build(spark, corpus, dir, nBuckets)
-      dir
-    })
+    Staging.cachedDir("graft_neardup_index", key)(build(spark, corpus, _, nBuckets))
 }

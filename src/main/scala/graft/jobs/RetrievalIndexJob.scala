@@ -189,16 +189,8 @@ object RetrievalIndexJob {
       nDocs, totalTerms.toDouble / nDocs.toDouble, minMatchNum, minMatchDen, k1, b)
   }
 
-  // query-surface cache: one on-disk index per corpus key per JVM (bench
-  // trial 2 measures the search path, not the build; production builds
-  // against a durable path itself)
-  private val builtDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** [[build]] once per corpus key per JVM ([[Staging.cachedDir]]). */
   def cachedIndexDir(key: String, spark: SparkSession, docs: DataFrame,
       idCol: String, textCol: String, nBuckets: Int = 64): String =
-    builtDirs.computeIfAbsent(key, { _ =>
-      val out = java.nio.file.Files.createTempDirectory("graft_bm25_idx").toString
-      build(spark, docs, idCol, textCol, out, nBuckets)
-      out
-    })
+    Staging.cachedDir("graft_bm25_idx", key)(build(spark, docs, idCol, textCol, _, nBuckets))
 }

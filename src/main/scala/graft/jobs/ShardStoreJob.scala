@@ -38,15 +38,7 @@ object ShardStoreJob {
       .withColumn("shard", col("shard").cast("long"))
       .orderBy("shard", "pos_in_shard")
 
-  private val builtDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Per-JVM memoized build (the AnnIndexJob.cachedIndexDir discipline):
-    * the contract query and repeated bench trials share one store per
-    * corpus key instead of rebuilding per call. */
+  /** [[build]] once per corpus key per JVM ([[Staging.cachedDir]]). */
   def cachedStoreDir(key: String, layout: => DataFrame): String =
-    builtDirs.computeIfAbsent(key, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_shard_store").toString
-      build(layout, dir)
-      dir
-    })
+    Staging.cachedDir("graft_shard_store", key)(build(layout, _))
 }

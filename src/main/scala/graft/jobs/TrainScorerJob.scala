@@ -130,126 +130,13 @@ object TrainScorerJob {
 
   /** C1 multiclass fit: full-batch softmax regression over the assembled
     * frame — the engine's deterministic stand-in for the reference's
-    * RandomForest (information_extraction.py:2950-2963). Same plan shape as
-    * [[fitBinary]]: broadcast (W, b) → one narrow mapPartitions producing a
-    * per-partition (K×dim gradient, K bias-gradient, loss) partial → small
-    * collect combined in partition order → driver update. Deterministic
-    * given the input partitioning, independent of core count.
-    */
-  def fitSoftmax(
-      ds: Dataset[ExampleK], numClasses: Int, dim: Int,
-      classWeights: Array[Double],
-      iters: Int = 200, lr: Double = 0.5, l2: Double = 1e-4,
-      momentum: Double = 0.0,
-      classes: Array[String] = Array.empty): FittedK = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val (mean, scale) = stats(ds.map(ex => Example(0.0, ex.features)), dim)
-    // weighted n via per-partition partials collected in PARTITION order —
-    // Dataset.reduce merges in task-completion order, and FP addition is
-    // non-associative, so a reduce here would make nW (and through it every
-    // gradient step) drift across runs, breaking the pinned q49 tuple set
-    val nW = ds.mapPartitions { it =>
-      var s = 0.0
-      it.foreach(ex => s += classWeights(ex.y))
-      Iterator.single(s)
-    }.collect().sum
-    require(nW > 0, "fitSoftmax: empty training set")
-    val bcStats = spark.sparkContext.broadcast((mean, scale))
-    val bcCW = spark.sparkContext.broadcast(classWeights)
-    var w = Array.fill(numClasses)(new Array[Double](dim))
-    var b = new Array[Double](numClasses)
-    // heavy-ball velocity (deterministic; momentum = 0 is plain GD)
-    val vW = Array.fill(numClasses)(new Array[Double](dim))
-    val vB = new Array[Double](numClasses)
-    var loss = 0.0
-    (0 until iters).foreach { _ =>
-      val bcW = spark.sparkContext.broadcast((w, b))
-      val partials = ds.mapPartitions { it =>
-        val (wts, bias) = bcW.value
-        val (m, s) = bcStats.value
-        val cw = bcCW.value
-        val grad = Array.fill(numClasses)(new Array[Double](dim))
-        val gradB = new Array[Double](numClasses)
-        var l = 0.0
-        val x = new Array[Double](dim)
-        val z = new Array[Double](numClasses)
-        it.foreach { ex =>
-          var i = 0
-          while (i < dim) { x(i) = (ex.features(i) - m(i)) / s(i); i += 1 }
-          var k = 0
-          var zMax = Double.MinValue
-          while (k < numClasses) {
-            var zz = bias(k)
-            val wk = wts(k)
-            i = 0
-            while (i < dim) { zz += wk(i) * x(i); i += 1 }
-            z(k) = zz
-            if (zz > zMax) zMax = zz
-            k += 1
-          }
-          var sumExp = 0.0
-          k = 0
-          while (k < numClasses) { z(k) = math.exp(z(k) - zMax); sumExp += z(k); k += 1 }
-          val weight = cw(ex.y)
-          k = 0
-          while (k < numClasses) {
-            val p = z(k) / sumExp
-            val err = weight * (p - (if (k == ex.y) 1.0 else 0.0))
-            val gk = grad(k)
-            i = 0
-            while (i < dim) { gk(i) += err * x(i); i += 1 }
-            gradB(k) += err
-            if (k == ex.y) l += -weight * math.log(math.max(p, 1e-12))
-            k += 1
-          }
-        }
-        Iterator.single((grad, gradB, l))
-      }.collect() // one small row per partition, combined in partition order
-      val g = Array.fill(numClasses)(new Array[Double](dim))
-      val gB = new Array[Double](numClasses)
-      var l = 0.0
-      partials.foreach { case (pg, pb, pl) =>
-        var k = 0
-        while (k < numClasses) {
-          var i = 0
-          while (i < dim) { g(k)(i) += pg(k)(i); i += 1 }
-          gB(k) += pb(k)
-          k += 1
-        }
-        l += pl
-      }
-      var k = 0
-      while (k < numClasses) {
-        var i = 0
-        while (i < dim) {
-          vW(k)(i) = momentum * vW(k)(i) - lr * (g(k)(i) / nW + l2 * w(k)(i))
-          i += 1
-        }
-        vB(k) = momentum * vB(k) - lr * gB(k) / nW
-        k += 1
-      }
-      w = Array.tabulate(numClasses)(k => Array.tabulate(dim)(i => w(k)(i) + vW(k)(i)))
-      b = Array.tabulate(numClasses)(k => b(k) + vB(k))
-      loss = l / nW
-      bcW.destroy()
-    }
-    bcStats.destroy(); bcCW.destroy() // same hygiene as the per-iteration bcW
-    FittedK(classes, w, b, mean, scale, loss, iters)
-  }
-
-  /** [[fitSoftmax]] computed entirely on the driver from pre-collected
-    * per-partition example arrays — BIT-IDENTICAL to the distributed fit:
-    * the distributed loop's only cross-partition float operations are the
-    * stats / nW / gradient partial combines, which it already pins to
-    * partition order (`collect()` returns partitions in index order), and
-    * within a partition both versions iterate rows in the same order. This
-    * local form exists because an `iters`-step fit is `iters` sequential
-    * Spark jobs of milliseconds of arithmetic each — on a 5-document
-    * fixture corpus the scheduling latency is ~100% of the wall. Callers
-    * with executor-resident data keep using [[fitSoftmax]]; callers whose
-    * training set is a bounded collect (the fixture golden) pass the
-    * per-partition arrays here.
+    * RandomForest (information_extraction.py:2950-2963). Runs on the driver
+    * over pre-collected per-partition example arrays: an `iters`-step fit
+    * is milliseconds of arithmetic per step, so one Spark job per step
+    * would be all scheduling latency on a bounded training set (the fixture
+    * golden, q49). Deterministic given the partitioning: the stats, the
+    * weighted n and the gradient partials are each combined in partition
+    * order, and rows are visited in partition order within each partition.
     */
   def fitSoftmaxLocal(
       parts: IndexedSeq[Array[ExampleK]], numClasses: Int, dim: Int,
@@ -257,9 +144,7 @@ object TrainScorerJob {
       iters: Int = 200, lr: Double = 0.5, l2: Double = 1e-4,
       momentum: Double = 0.0,
       classes: Array[String] = Array.empty): FittedK = {
-    // stats(): per-partition (n, sum, sumSq) partials combined in partition
-    // order — the same arithmetic order as the distributed mapPartitions +
-    // collect().foldLeft
+    // per-partition (n, sum, sumSq) partials combined in partition order
     val statParts = parts.map { rows =>
       var n = 0L
       val s = new Array[Double](dim)

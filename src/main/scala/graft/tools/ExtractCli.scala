@@ -2,85 +2,39 @@ package graft.tools
 
 import graft.core._
 import graft.corpus.WebCorpus
+import graft.engine.{Extraction, PageRow}
 
 /** CLI surface for the core extraction path (no Spark needed): generate or
-  * read a page, strip boilerplate, tokenize, normalize detected entities.
+  * read a page and print what [[Extraction.extractOne]] emits for it — the
+  * extracted text's size and sha, token count, language and labels.
   *
   * Usage:
   *   runMain graft.tools.ExtractCli            # 3 synthetic pages
   *   runMain graft.tools.ExtractCli <n>        # n synthetic pages
   *   runMain graft.tools.ExtractCli --file x.html
-  *   runMain graft.tools.ExtractCli --bench n  # single-thread extractOne µbench
   */
 object ExtractCli {
-
-  /** Single-threaded extractOne microbenchmark over invoice-shaped lines
-    * (the q24 kernel shape) and synthetic web pages — isolates per-call
-    * kernel cost from Spark scheduling/serialization and host parallelism.
-    */
-  private def bench(n: Int): Unit = {
-    import graft.engine.{Extraction, PageRow}
-    def lineRow(i: Long): PageRow = {
-      val cents = 100000 + i * 37 % 900000
-      PageRow(s"$i", null, Array.empty[Byte],
-        s"Rechnung Anzahl ${i % 7 + 3} Betrag ${cents / 100},${"%02d".format(cents % 100)} " +
-          s"am 1${i % 9}.0${i % 9 + 1}.199${i % 10} Rabatt ${i % 11} % Kontakt kunde$i@firma.de", "")
-    }
-    def pageRow(i: Long): PageRow = {
-      val p = WebCorpus.page(i)
-      PageRow(p.url, null, p.html, null, "")
-    }
-    Seq[(String, Long => PageRow)]("invoice-line" -> lineRow, "web-page" -> pageRow).foreach {
-      case (label, mk) =>
-        var sink = 0L
-        (0 until 3).foreach { trial =>
-          val t0 = System.nanoTime()
-          var i = 0
-          while (i < n) { sink += Extraction.extractOne(mk(i)).labels.length; i += 1 }
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"$label trial $trial: $n docs in $sec%.3f s = ${n / sec}%.0f docs/s/thread (${sec / n * 1e6}%.1f µs/doc)")
-        }
-        println(s"  [sink=$sink]")
-    }
-  }
-
   def main(args: Array[String]): Unit = {
-    args match {
-      case Array("--bench") => bench(30000); return
-      case Array("--bench", n) =>
-        // explicit parse error beats silently falling through to the
-        // default extraction mode or overflowing Int
-        bench(n.toIntOption.filter(_ > 0).getOrElse(
-          sys.error(s"--bench expects a positive Int, got '$n'")))
-        return
-      case _ => ()
-    }
-    val htmls: Seq[(String, String)] = args match {
+    val pages: Seq[(String, Array[Byte])] = args match {
       case Array("--file", path) =>
-        Seq((path, new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-          java.nio.charset.StandardCharsets.UTF_8)))
+        Seq((path, java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))))
       case Array(n) if n.forall(_.isDigit) =>
-        (0L until n.toLong).map(i => { val p = WebCorpus.page(i); (p.url, Html.decodeBytes(p.html)) })
+        (0L until n.toLong).map(i => { val p = WebCorpus.page(i); (p.url, p.html) })
       case _ =>
-        (0L until 3L).map(i => { val p = WebCorpus.page(i); (p.url, Html.decodeBytes(p.html)) })
+        (0L until 3L).map(i => { val p = WebCorpus.page(i); (p.url, p.html) })
     }
-    htmls.foreach { case (url, html) =>
-      val ex = Html.extract(html)
-      val spans = Rx.tokenSpans(ex.text, Tokenizers.whitespace)
-      val sha = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(ex.text.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
+    pages.foreach { case (url, html) =>
+      val ex = Html.extract(Html.decodeBytes(html)) // title and blocks only
+      val doc = Extraction.extractOne(PageRow(url, null, html, null, null))
+      val text = doc.extracted_text
       println(s"url=$url")
       println(s"  title   = ${ex.title}")
-      println(s"  text    = ${ex.text.length} chars, sha256/16=$sha, blocks=${ex.blockSpans.length}")
-      println(s"  tokens  = ${spans.length} (whitespace), ${Quality.bpeTokenCount(ex.text)} (bpe-ish)")
-      println(s"  lang    = ${LangId.detect(ex.text)}  quality=${f"${Quality.score(ex.text).composite}%.2f"}")
-      val entities = spans.flatMap { sp =>
-        val s = ex.text.substring(sp.start, sp.end)
-        Normalize.normalizeToDate(s).map(v => (sp, "date", v)).orElse(
-          if (s.exists(_.isDigit)) Normalize.normalizeToFloat(s).map(v => (sp, "number", v.toString)) else None)
-      }.take(8)
-      entities.foreach { case (sp, kind, v) =>
-        println(f"    [${sp.start}%5d,${sp.end}%5d) $kind%-7s ${ex.text.substring(sp.start, sp.end)}%-14s -> $v")
+      println(s"  text    = ${text.length} chars, sha256/16=${doc.text_sha256.take(16)}, blocks=${ex.blockSpans.length}")
+      println(s"  tokens  = ${doc.n_tokens} (whitespace), ${Quality.bpeTokenCount(text)} (bpe-ish)")
+      println(s"  lang    = ${doc.lang}  quality=${f"${Quality.score(text).composite}%.2f"}")
+      println(s"  labels  = ${doc.labels.length}")
+      doc.labels.take(8).foreach { l =>
+        println(f"    [${l.start}%5d,${l.end}%5d) ${l.label}%-8s ${l.text}%-14s -> ${l.normalized}")
       }
     }
   }

@@ -2,12 +2,13 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Optimization-round instrumentation: dump `.explain("formatted")` for a
-  * set of declared queries to files — the plan evidence the round's
-  * OPTIMIZATION notes cite (plans/rNN/<query>_{before,after}.txt). Not part
-  * of the measured bench; run as
+/** Dump `.explain("formatted")` — pushed filters, pruned read schemas,
+  * join strategies, codegen spans, exchanges — for a set of declared
+  * queries to `<outDir>/<query>_<suffix>.txt` (the plan evidence under
+  * plans/rNN/). Not part of the measured bench; run as
   *   sbt "runMain graft.tools.PlanDump <outDir> <suffix> [q24,q59,...]"
-  * with SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench.
+  * with SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench. A query is
+  * named in full or by its `qNN` prefix.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -26,7 +27,7 @@ object PlanDump {
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .filter { case (n, _) => only.forall(_.exists(p => n == p || n.startsWith(p + "_"))) }
       .foreach { case (name, fn) =>
         try {
           val df = fn(spark, sfDir)

@@ -2,6 +2,7 @@ package graft
 
 import graft.engine.SparkTestBase
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Smoke: every SparkEntry query runs on sf0.001 and every oracle key has a
   * query (the driver contract invariants).
@@ -13,6 +14,17 @@ class QueriesSpec extends AnyFunSuite {
   test("oracle keys are a subset of query keys") {
     val missing = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
     assert(missing.isEmpty, s"oracles without queries: $missing")
+  }
+
+  test("q44 deletes its staged stream source once the query stops") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def staged(): Set[String] = {
+      val ls = java.nio.file.Files.newDirectoryStream(tmp, "graft_stream_docs*")
+      try ls.asScala.map(_.getFileName.toString).toSet finally ls.close()
+    }
+    val before = staged()
+    assert(SparkEntry.queries("q44_stream_extract")(spark, dir).collect().nonEmpty)
+    assert(staged().diff(before).isEmpty, "q44 left a graft_stream_docs* directory behind")
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

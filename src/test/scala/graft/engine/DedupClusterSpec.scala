@@ -1,5 +1,7 @@
 package graft.engine
 
+import org.scalacheck.{Gen, Prop}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Connected-component cluster resolution over near-dup pair graphs
@@ -89,6 +91,53 @@ class DedupClusterSpec extends AnyFunSuite {
     val fm = fast.assignment.as[(Long, Long)].collect().toMap
     val dm = dist.assignment.as[(Long, Long)].collect().toMap
     assert(fm == dm, s"fast/distributed assignment divergence: ${fm.toSet.diff(dm.toSet)}")
+  }
+
+  /** Component minimum of every endpoint by breadth-first closure — the
+    * reference the union-find and the distributed rounds must both equal. */
+  private def bfsClosure(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupMap(_._1)(_._2)
+    val out = scala.collection.mutable.Map.empty[Long, Long]
+    adj.keys.toSeq.sorted.foreach { start =>
+      if (!out.contains(start)) {
+        // ascending visit order: the first unvisited node is its component's minimum
+        val queue = scala.collection.mutable.Queue(start)
+        out(start) = start
+        while (queue.nonEmpty) adj(queue.dequeue()).foreach { n =>
+          if (!out.contains(n)) { out(n) = start; queue.enqueue(n) }
+        }
+      }
+    }
+    out.toMap
+  }
+
+  /** Sparse random graphs over a small id range: chains, merges, isolated
+    * pairs, self-pairs and duplicate or reversed edges all occur. */
+  private def graphGen(maxId: Long): Gen[List[(Long, Long)]] =
+    Gen.choose(1, 80).flatMap(n => Gen.listOfN(n,
+      Gen.zip(Gen.choose(0L, maxId), Gen.choose(0L, maxId))))
+
+  test("unionFindAssignment equals the BFS closure on random graphs (property)") {
+    PropCheck(Prop.forAll(graphGen(120L)) { edges =>
+      Dedup.unionFindAssignment(edges.toArray).toMap == bfsClosure(edges)
+    }, minSuccessful = 500)
+  }
+
+  test("fast and distributed CC paths equal the BFS closure on random graphs") {
+    import spark.implicits._
+    val graphs = (1 to 8).map { i =>
+      graphGen(60L).pureApply(Gen.Parameters.default, Seed(i.toLong))
+        .filter { case (a, b) => a != b } :+ (1000L + i, 1001L + i) // ≥1 real edge
+    }
+    graphs.foreach { edges =>
+      val want = bfsClosure(edges)
+      val fast = Dedup.resolveClustersDetailed(pairsOf(edges: _*))
+      val dist = withDistributedCC { Dedup.resolveClustersDetailed(pairsOf(edges: _*)) }
+      assert(fast.iterations == 0 && dist.iterations > 0, "a CC path was not taken")
+      assert(fast.assignment.as[(Long, Long)].collect().toMap == want, s"fast path on $edges")
+      assert(dist.assignment.as[(Long, Long)].collect().toMap == want, s"distributed path on $edges")
+    }
   }
 
   test("sparsifyCandidates keeps chains intact and caps dense-family degree") {

@@ -3,6 +3,7 @@ package graft.engine
 import graft.core.Html
 import graft.corpus.WebCorpus
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
 class ExtractionSpec extends AnyFunSuite {
@@ -18,10 +19,21 @@ class ExtractionSpec extends AnyFunSuite {
     assert(a.length == 100)
   }
 
+  /** The hand-pruned projections must stay byte/field-identical to the
+    * full kernel on every input shape. */
+  private def assertProjectionsAgree(row: PageRow): Unit = {
+    val full = Extraction.extractOne(row)
+    val (text, nTok, sha) = Extraction.extractTextStats(row)
+    assert(text == full.extracted_text, s"text mismatch for ${row.url}")
+    assert(nTok == full.n_tokens, s"n_tokens mismatch for ${row.url}")
+    assert(sha == full.text_sha256, s"sha mismatch for ${row.url}")
+    val labels = Extraction.extractLabelsOnly(full.extracted_text)
+    assert(labels.toSeq == full.labels.toSeq, s"labels mismatch for ${row.url}")
+  }
+
   test("extractTextStats / extractLabelsOnly agree field-for-field with extractOne") {
-    // the hand-pruned projections must stay byte/field-identical to the
-    // full kernel on every input shape: html path, pre-extracted text path,
-    // empty row, label-dense invoice text, multiline merge candidates
+    // html path, pre-extracted text path, empty row, label-dense invoice
+    // text, multiline merge candidates
     val htmlRows = (0L until 40L).map { i =>
       val p = WebCorpus.page(i)
       PageRow(p.url, p.warc_ts, p.html, "", p.lang)
@@ -33,15 +45,22 @@ class ExtractionSpec extends AnyFunSuite {
     val invoice = PageRow("x", null, Array.empty[Byte],
       "Rechnung Anzahl 17 Betrag 1234,56 am 03.04.2020 Rabatt 7 % Kontakt a@b.de", "")
     val empty = PageRow("e", null, Array.empty[Byte], "", "")
-    (htmlRows ++ textRows ++ Seq(invoice, empty)).foreach { row =>
-      val full = Extraction.extractOne(row)
-      val (text, nTok, sha) = Extraction.extractTextStats(row)
-      assert(text == full.extracted_text, s"text mismatch for ${row.url}")
-      assert(nTok == full.n_tokens, s"n_tokens mismatch for ${row.url}")
-      assert(sha == full.text_sha256, s"sha mismatch for ${row.url}")
-      val labels = Extraction.extractLabelsOnly(full.extracted_text)
-      assert(labels.toSeq == full.labels.toSeq, s"labels mismatch for ${row.url}")
-    }
+    (htmlRows ++ textRows ++ Seq(invoice, empty)).foreach(assertProjectionsAgree)
+  }
+
+  test("projection agreement holds over random text (property)") {
+    // every whitespace class the tokenizer splits on or keeps inside a
+    // token, plus the characters that make numbers, amounts, dates and
+    // detached percent signs
+    val char = Gen.oneOf("0123456789,.%aZ€-/@ \n\t\f\r\u00a0".toSeq).map(_.toString)
+    val word = Gen.oneOf("12,34", "1.234,56", "03.04.2020", "2020-04-03", "7", "%", " % ",
+      "Betrag", "Rechnung\n", "0,5\u00a0%", "\r\n")
+    val text = Gen.choose(0, 60).flatMap(n =>
+      Gen.listOfN(n, Gen.frequency(4 -> char, 1 -> word))).map(_.mkString)
+    PropCheck(Prop.forAll(text) { t =>
+      assertProjectionsAgree(PageRow("p", null, Array.empty[Byte], t, ""))
+      true
+    })
   }
 
   test("extracted text matches the corpus golden byte-for-byte (per-url invariant)") {
