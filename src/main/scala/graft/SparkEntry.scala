@@ -1536,8 +1536,7 @@ object SparkEntry {
       // duplicate texts count too (the oracle replays both). Assignment
       // is a pure narrow projection (zero shuffle); the witness is one
       // narrow explode per side + a semi-join (heldout grams broadcast —
-      // the eval-split-sized assumption; a full-corpus-scale heldout
-      // audit passes broadcastBench = false to shuffle instead).
+      // the eval-split-sized assumption).
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .withColumn("reg_domain",
           when(col("doc_id") % 23 === 5, lit("site5.co.uk"))
@@ -1565,9 +1564,9 @@ object SparkEntry {
       // across docs; boundary windows don't, because each doc's
       // preceding context differs), and naturally duplicated documents
       // collapse to their first occurrence entirely (document dedup as
-      // the span special case — n_after = 0). broadcastRepeated: the
-      // repeated-window vocabulary here is boilerplate-sized, the normal
-      // web-corpus case, so the corpus-side join shuffle disappears.
+      // the span special case — n_after = 0). The repeated-window
+      // vocabulary here is boilerplate-sized, the normal web-corpus case,
+      // so it broadcasts and the corpus-side join never shuffles.
       // Output pins token counts before/after and the cleaned sha256.
       val prepped = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .withColumn("text",
@@ -1577,8 +1576,7 @@ object SparkEntry {
         split(trim(regexp_replace(col("text"), "\\s+", " ")), " "),
         x => x =!= ""))
       val before = prepped.select(col("doc_id"), nb.cast("long").as("n_before"))
-      val cleaned = Dedup.dedupSubstrings(prepped, "doc_id", "text",
-        minLen = 20, broadcastRepeated = true)
+      val cleaned = Dedup.dedupSubstrings(prepped, "doc_id", "text", minLen = 20)
       cleaned.join(before, Seq("doc_id"))
         .select(col("doc_id"), col("n_before"),
           when(col("text") === "", lit(0L))
@@ -2177,8 +2175,7 @@ object SparkEntry {
         .as[(Long, Long)].map { case (a, b) => Dedup.Pair(a, b) }
       val assignment = Dedup.resolveClusters(pairs)
       Sampling.splitByCluster(docs.select(col("doc_id")), "doc_id",
-          assignment, Q72Splits, salt = "cls1", keeperOut = "keeper_id",
-          broadcastAssignment = true)
+          assignment, Q72Splits, salt = "cls1", keeperOut = "keeper_id")
         .select(col("doc_id"), col("keeper_id"), col("split"))
         .orderBy("doc_id")
     }),

@@ -77,21 +77,6 @@ object Quality {
       stopRatio, lineRepeat, math.min(1.0, bigramRepeat), endPunct)
   }
 
-  /** Whitespace token count — the cheap tokenizer-aligned counter (matches
-    * the `[^ \n\t\f]+` WhitespaceTokenizer match count).
-    */
-  def tokenCount(text: String): Int = {
-    var i = 0; var n = 0; var inTok = false
-    while (i < text.length) {
-      val c = text.charAt(i)
-      val ws = c == ' ' || c == '\n' || c == '\t' || c == '\f'
-      if (!ws && !inTok) { n += 1; inTok = true }
-      else if (ws) inTok = false
-      i += 1
-    }
-    n
-  }
-
   /** Gopher-style repetition statistics over word n-grams — the standard
     * pretraining quality filter for machine-generated / boilerplate-heavy
     * pages (Rae et al. 2021 §A1.1 "repetition removal"): documents whose

@@ -154,9 +154,11 @@ object Rx {
   }
 
   /** The whitespace tokenizer's separators: space, `\n`, `\t` and `\f`
-    * (`\r` and no-break space stay inside tokens).
+    * (`\r` and no-break space stay inside tokens). Every other token
+    * boundary in the engine — the native `graft_token_count` byte scan,
+    * PII redaction — uses this one predicate.
     */
-  @inline private def isTokenSeparator(c: Char): Boolean =
+  @inline def isTokenSeparator(c: Char): Boolean =
     c == ' ' || c == '\n' || c == '\t' || c == '\f'
 
   /** Tokenizer contract (konfuzio_sdk/tokenizer/regex.py:38-88): group spans

@@ -4,6 +4,7 @@ import graft.core.Fingerprint
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 /** Corpus deduplication at scale: exact (hash groupBy), MinHash+LSH banded
   * near-dup, SimHash hamming blocking, exact n-gram-Jaccard verification,
@@ -31,8 +32,28 @@ object Dedup {
     * name. Treat it as an observability signal (zero vs non-zero, order of
     * magnitude), not an exact tally.
     */
-  private def newCappedCounter(spark: SparkSession): org.apache.spark.util.LongAccumulator =
+  private def newCappedCounter(spark: SparkSession): LongAccumulator =
     spark.sparkContext.longAccumulator("graft.dedup.cappedBuckets")
+
+  /** The capped-star pairing of one bucket of `n` members sorted by id:
+    * up to `maxBucket` members every (i, j) with i < j; above the cap only
+    * (0, j), the keeper against each other member, and the bucket is
+    * counted in `capped`. A bucket of fewer than two members pairs nothing.
+    */
+  private def cappedStar(n: Int, maxBucket: Int, capped: LongAccumulator)(
+      pair: (Int, Int) => Unit): Unit =
+    if (n > maxBucket && n >= 2) {
+      capped.add(1L)
+      var j = 1
+      while (j < n) { pair(0, j); j += 1 }
+    } else {
+      var i = 0
+      while (i < n) {
+        var j = i + 1
+        while (j < n) { pair(i, j); j += 1 }
+        i += 1
+      }
+    }
 
   /** Exact duplicate groups by content hash. Map-side partial agg → one
     * shuffle on the 128-bit hash. Returns (text_hash, n_docs, keeper_id).
@@ -117,14 +138,12 @@ object Dedup {
     * n-gram decontamination convention (GPT-3 appendix C / PaLM-style).
     */
   def contaminatedDocs(df: DataFrame, idCol: String, textCol: String,
-      benchGrams: DataFrame, n: Int = 13,
-      broadcastBench: Boolean = true): DataFrame = {
+      benchGrams: DataFrame, n: Int = 13): DataFrame = {
     val normBench = benchGrams
       .select(trim(regexp_replace(col("gram"), "\\s+", " ")).as("gram"))
       .distinct()
     wordGrams(df, idCol, textCol, n)
-      .join(if (broadcastBench) broadcast(normBench) else normBench,
-        Seq("gram"), "left_semi")
+      .join(broadcast(normBench), Seq("gram"), "left_semi")
       .select(idCol).distinct()
   }
 
@@ -134,10 +153,9 @@ object Dedup {
     * output doubles as another decontamination call's `benchGrams`, which
     * is how cross-set overlap witnesses compose ("which TRAIN documents
     * share a 13-gram with the HELDOUT split" = contaminatedDocs(train,
-    * wordGrams(heldout))). When the gram side is a full corpus split
-    * rather than an eval-set-sized benchmark, pass
-    * `broadcastBench = false` there so the join shuffles instead of
-    * broadcasting an oversized build side.
+    * wordGrams(heldout))). contaminatedDocs always broadcasts the gram
+    * side, so a gram side cut from a full corpus split rather than an
+    * eval-set-sized benchmark must still fit executor memory.
     */
   def wordGrams(df: DataFrame, idCol: String, textCol: String,
       n: Int = 13): DataFrame = {
@@ -253,12 +271,12 @@ object Dedup {
     * (id, pos, hash128) triples — proportional to corpus token count,
     * the honest price of exact-substring dedup (the suffix-array original
     * sorts the same volume). Map-side partial agg applies to the count +
-    * packed-min; `broadcastRepeated = true` removes the corpus-side join
-    * shuffle entirely when the repeated-window vocabulary fits executor
-    * memory (the boilerplate-dominated web-corpus case — mirror of
-    * dedupLines' FirstsMode.Broadcast); the final starts-per-doc table
-    * only holds AFFECTED documents, so AQE broadcasts it into the
-    * reassembly join in the normal case. Cleanup is O(T × W) per doc
+    * packed-min; the repeated-window vocabulary BROADCASTS, so the
+    * corpus-side join never shuffles — it must fit executor memory (the
+    * boilerplate-dominated web-corpus case, the same bet as dedupLines'
+    * FirstsMode.Broadcast); the final starts-per-doc table only holds
+    * AFFECTED documents, so AQE broadcasts it into the reassembly join in
+    * the normal case. Cleanup is O(T × W) per doc
     * (W = duplicate windows in that doc) via built-in `filter`/`exists` —
     * expression-only, no UDF.
     *
@@ -269,8 +287,7 @@ object Dedup {
     * Returns (idCol cast long, textCol cleaned); other columns drop.
     */
   def dedupSubstrings(df: DataFrame, idCol: String, textCol: String,
-      minLen: Int = 50, maxTokens: Long = 1L << 20,
-      broadcastRepeated: Boolean = false): DataFrame = {
+      minLen: Int = 50, maxTokens: Long = 1L << 20): DataFrame = {
     require(minLen >= 2, s"dedupSubstrings: minLen must be >= 2, got $minLen")
     val maxId = Long.MaxValue / maxTokens
     val toks = split(trim(regexp_replace(col(textCol), "\\s+", " ")), " ")
@@ -300,7 +317,7 @@ object Dedup {
       .filter(col("__n") > 1)
       .select("gh", "fkey")
     val starts = windows(guarded)
-      .join(if (broadcastRepeated) broadcast(rep) else rep, Seq("gh"))
+      .join(broadcast(rep), Seq("gh"))
       .filter(col("id") * lit(maxTokens) + col("pos") =!= col("fkey"))
       .groupBy("id")
       .agg(sort_array(collect_list(col("pos"))).as("starts"))
@@ -484,15 +501,15 @@ object Dedup {
     * whose qualifying output is BOILERPLATE-sized, so it BROADCASTS into
     * a left-anti join and the corpus lines never shuffle for the filter;
     * the only corpus-wide exchange is the ordered reassembly groupBy
-    * (sort_array(collect_list)) shared with [[dedupLines]]. Set
-    * `broadcastCommon = false` for adversarial corpora whose common-line
-    * vocabulary exceeds executor memory.
+    * (sort_array(collect_list)) shared with [[dedupLines]]. The
+    * common-line vocabulary is boilerplate-sized and must fit executor
+    * memory.
     *
     * A document whose every line is boilerplate disappears from the
     * output entirely (same reading as [[dedupLines]]).
     */
   def stripCommonLines(df: DataFrame, idCol: String, textCol: String,
-      minDocs: Long, broadcastCommon: Boolean = true): DataFrame = {
+      minDocs: Long): DataFrame = {
     require(minDocs >= 2L, s"stripCommonLines: minDocs must be >= 2, got $minDocs")
     val lines = df.select(col(idCol).cast("long").as("id"),
       posexplode(split(col(textCol), "\n")).as(Seq("idx", "line")))
@@ -502,8 +519,7 @@ object Dedup {
       .agg(countDistinct(col("id")).as("__nd"))
       .filter(col("__nd") >= minDocs)
       .select("line")
-    lines.join(if (broadcastCommon) broadcast(common) else common,
-        Seq("line"), "left_anti")
+    lines.join(broadcast(common), Seq("line"), "left_anti")
       .groupBy(col("id").as(idCol))
       .agg(
         array_join(
@@ -543,21 +559,9 @@ object Dedup {
       .groupByKey(_._1)
       .flatMapGroups { (_, it) =>
         val ids = it.map(_._2).toArray.sorted
-        if (ids.length < 2) Iterator.empty
-        else if (ids.length > maxBucket) {
-          capped.add(1L)
-          val head = ids(0)
-          ids.iterator.drop(1).map(b => Pair(head, b))
-        } else {
-          val out = scala.collection.mutable.ArrayBuffer.empty[Pair]
-          var i = 0
-          while (i < ids.length) {
-            var j = i + 1
-            while (j < ids.length) { out += Pair(ids(i), ids(j)); j += 1 }
-            i += 1
-          }
-          out.iterator
-        }
+        val out = scala.collection.mutable.ArrayBuffer.empty[Pair]
+        cappedStar(ids.length, maxBucket, capped)((i, j) => out += Pair(ids(i), ids(j)))
+        out.iterator
       }
       .distinct()
   }
@@ -577,32 +581,18 @@ object Dedup {
       .filter(_.estimated_jaccard >= threshold)
   }
 
-  /** Full MinHash-LSH near-dup pipeline over (id, text).
-    *
-    * `eager = true` (default): the signature table is cached for the two
-    * passes (bands, verify), the small pair result is materialized eagerly
-    * (localCheckpoint), and the signature cache is released before
-    * returning — repeated job-level calls don't accumulate executor memory.
-    * Tradeoff: eager materialization truncates lineage, so on a preemptible
-    * cluster an executor loss after return makes the result blocks
-    * unrecomputable.
-    *
-    * `eager = false`: returns the lazy, fully-recomputable plan (no cache,
-    * no checkpoint) — signatures are computed once per downstream pass, the
-    * full lineage survives executor loss, and callers can push further
-    * filters before execution. Job-level callers on stable executors can
-    * still `persist`/`localCheckpoint` the result themselves.
+  /** Full MinHash-LSH near-dup pipeline over (id, text). EAGER: the
+    * signature table is cached for the two passes (bands, verify), the
+    * small pair result is materialized (localCheckpoint), and the
+    * signature cache is released before returning — repeated job-level
+    * calls don't accumulate executor memory. Tradeoff: materialization
+    * truncates lineage, so on a preemptible cluster an executor loss after
+    * return makes the result blocks unrecomputable.
     */
-  def minhashNearDups(ds: Dataset[(Long, String)], threshold: Double = 0.8,
-      eager: Boolean = true): Dataset[ScoredPair] = {
-    if (eager) {
-      val sigs = signatures(ds).persist()
-      try verifyPairs(sigs, candidatePairs(sigs), threshold).localCheckpoint(true)
-      finally sigs.unpersist()
-    } else {
-      val sigs = signatures(ds)
-      verifyPairs(sigs, candidatePairs(sigs), threshold)
-    }
+  def minhashNearDups(ds: Dataset[(Long, String)], threshold: Double = 0.8): Dataset[ScoredPair] = {
+    val sigs = signatures(ds).persist()
+    try verifyPairs(sigs, candidatePairs(sigs), threshold).localCheckpoint(true)
+    finally sigs.unpersist()
   }
 
   /** Near-dup pairs by SimHash hamming distance ≤ maxDist, using
@@ -627,22 +617,10 @@ object Dedup {
       .flatMapGroups { (_, it) =>
         val members = it.map(m => (m._2, m._3)).toArray.sortBy(_._1)
         val out = scala.collection.mutable.ArrayBuffer.empty[ScoredPair]
-        def pairOf(i: Int, j: Int): Unit = {
+        cappedStar(members.length, maxBucket, capped) { (i, j) =>
           val d = Fingerprint.hamming(members(i)._2, members(j)._2)
           if (d <= maxDist && members(i)._1 != members(j)._1)
             out += ScoredPair(members(i)._1, members(j)._1, 1.0 - d / 64.0)
-        }
-        if (members.length > maxBucket) {
-          capped.add(1L)
-          var j = 1
-          while (j < members.length) { pairOf(0, j); j += 1 }
-        } else {
-          var i = 0
-          while (i < members.length) {
-            var j = i + 1
-            while (j < members.length) { pairOf(i, j); j += 1 }
-            i += 1
-          }
         }
         out.iterator
       }
@@ -683,80 +661,38 @@ object Dedup {
   }
 
   /** Embedding-cosine near-dup pairs via banded multi-table hyperplane LSH
-    * (see [[Similarity.hyperplaneKey]]): `tables` independent sign-pattern
-    * tables (distinct plane seeds) so a pair below the ~0.999 regime still
-    * collides in at least one table with high probability — at cosine 0.95
-    * the single-table hit rate of a 10-bit key is ~0.35; eight tables lift
-    * recall to ~0.97. One shuffle on the (table, key) pair; per-bucket
-    * pairing is capped at `maxBucket` members (larger buckets — clustered
-    * or degenerate embeddings, exactly the dedup target — pair only against
-    * the bucket's smallest id, keeping connectivity and linear output).
+    * (see [[Similarity.hyperplaneKey]]): eight independent 10-bit
+    * sign-pattern tables (distinct plane seeds) so a pair below the ~0.999
+    * regime still collides in at least one table with high probability —
+    * at cosine 0.95 the single-table hit rate of a 10-bit key is ~0.35;
+    * eight tables lift recall to ~0.97. One shuffle on the (table, key)
+    * pair; per-bucket pairing is capped at `maxBucket` members (larger
+    * buckets — clustered or degenerate embeddings, exactly the dedup
+    * target — pair only against the bucket's smallest id, keeping
+    * connectivity and linear output).
     */
   def embeddingNearDups(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double = 0.95, bits: Int = 10, tables: Int = 8,
-      maxBucket: Int = 1000): DataFrame = {
+      threshold: Double = 0.95, maxBucket: Int = 1000): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val capped = newCappedCounter(spark)
     val ds = df.select(col(idCol).cast("long"), col(vecCol)).as[(Long, Array[Float])]
     ds.flatMap { case (id, v) =>
-        Iterator.tabulate(tables)(t =>
-          ((t.toLong << 56) ^ Similarity.hyperplaneKey(v, bits, seed = 7L + 1013L * t), id, v))
+        Iterator.tabulate(8)(t =>
+          ((t.toLong << 56) ^ Similarity.hyperplaneKey(v, 10, seed = 7L + 1013L * t), id, v))
       }
       .groupByKey(_._1)
       .flatMapGroups { (_, it) =>
         val members = it.map(m => (m._2, m._3)).toArray.sortBy(_._1)
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-        def pairOf(i: Int, j: Int): Unit = {
+        cappedStar(members.length, maxBucket, capped) { (i, j) =>
           val c = Similarity.cosine(members(i)._2, members(j)._2)
           if (c >= threshold) out += ((members(i)._1, members(j)._1, c))
-        }
-        if (members.length > maxBucket) {
-          capped.add(1L)
-          var j = 1
-          while (j < members.length) { pairOf(0, j); j += 1 }
-        } else {
-          var i = 0
-          while (i < members.length) {
-            var j = i + 1
-            while (j < members.length) { pairOf(i, j); j += 1 }
-            i += 1
-          }
         }
         out.iterator
       }
       .toDF("a", "b", "cosine")
       .dropDuplicates("a", "b")
-  }
-
-  /** Sparsify a candidate-pair graph for DEDUP: keep each node's `k`
-    * smallest-id partners (symmetric view, then re-canonicalized). On a
-    * dense near-duplicate family of m members the LSH multi-band stars
-    * emit O(m·bands) redundant candidates, every one of which ships two
-    * shingle arrays through [[exactJaccard]]; per-node truncation toward
-    * small ids keeps the family connected W.H.P. (every non-minimum
-    * member retains a downward edge, chains terminate at the family
-    * minimum) at O(m·k) pairs. APPROXIMATE — same disclosed class as the
-    * capped-bucket star: a pruned true pair can in principle disconnect a
-    * sparse component, so use it only for cluster-resolution pipelines
-    * (where connectivity, not the pair SET, is the contract) on corpora
-    * whose candidate density makes verification the bottleneck. Cost: one
-    * window over 2·|pairs| 16-byte rows — negligible next to the array
-    * shuffle it avoids.
-    */
-  def sparsifyCandidates(pairs: Dataset[Pair], k: Int = 4): Dataset[Pair] = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val sym = pairs.toDF().select(col("a").as("n"), col("b").as("p"))
-      .union(pairs.toDF().select(col("b").as("n"), col("a").as("p")))
-      .filter(col("n") =!= col("p"))
-      .distinct()
-    val w = Window.partitionBy("n").orderBy(col("p").asc)
-    sym.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
-      .select(greatest(col("n"), col("p")).as("u"), least(col("n"), col("p")).as("v"))
-      .distinct()
-      .as[(Long, Long)]
-      .map { case (u, v) => Pair(v, u) }
   }
 
   final case class ClusterResult(assignment: DataFrame, iterations: Int)
@@ -941,10 +877,10 @@ object Dedup {
   }
 
   /** ONE-CALL near-dedup of a text corpus — the full production chain:
-    * MinHash signatures → LSH candidate pairs (capped buckets) →
-    * [optional degree sparsification] → exact word-k-gram Jaccard verify
-    * at `threshold` → connected-component resolution → anti-join
-    * non-keepers. This is the operator a pretraining pipeline calls as
+    * MinHash signatures → LSH candidate pairs (capped buckets) → exact
+    * word-3-gram Jaccard verify at `threshold` → connected-component
+    * resolution → anti-join non-keepers. This is the operator a
+    * pretraining pipeline calls as
     * `Dedup.dedupNearText(corpus, "doc_id", "text")`; q59's flagship
     * stage routes through it.
     *
@@ -953,66 +889,28 @@ object Dedup {
     * materializes the graph — the returned frame is `df` minus a small
     * non-keeper table, lazily composable downstream. The text input is
     * evaluated by two passes (signatures, shingles); feed it from a scan
-    * or checkpoint it first. `maxBucket`/`sparsifyK` trade exact pair
-    * coverage for bounded work on dense near-dup families (mirror sites;
-    * see the capped-star and sparsification scaladocs — both disclosed
-    * approximations that preserve connectivity w.h.p.).
+    * or checkpoint it first. `maxBucket` trades exact pair coverage for
+    * bounded work on dense near-dup families (mirror sites; see
+    * [[candidatePairs]] — the capped star is a disclosed approximation
+    * that preserves connectivity w.h.p.).
     */
   def dedupNearText(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.85, shingleK: Int = 3, maxBucket: Int = 1000,
-      sparsifyK: Int = 0, passes: Int = 1): DataFrame = {
-    require(passes >= 1, s"dedupNearText: passes must be >= 1, got $passes")
+      threshold: Double = 0.85, maxBucket: Int = 1000): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-
-    def onePass(in: DataFrame): (DataFrame, Long) = {
-      val ds = in.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
-      val sigs = signatures(ds, shingleK).persist()
-      try {
-        val cands0 = candidatePairs(sigs, maxBucket)
-        val cands = if (sparsifyK > 0) sparsifyCandidates(cands0, sparsifyK) else cands0
-        val pairs = exactJaccard(ds, cands, shingleK)
-          .filter(_.estimated_jaccard >= threshold)
-          .map(p => Pair(p.a, p.b))
-        val nonKeepers = resolveClusters(pairs)
-          .filter(col("id") =!= col("keeper_id"))
-          .select(col("id").cast("long").as(idCol))
-        // cheap count: the assignment derives from the checkpointed edge
-        // set, and at web scale non-keepers can be half the corpus — never
-        // collect them to the driver
-        val dropped = nonKeepers.count()
-        val out = if (dropped == 0L) in else in.join(nonKeepers, Seq(idCol), "left_anti")
-        (out, dropped)
-      } finally sigs.unpersist()
-    }
-
-    // passes > 1 recovers DIRECT capped-star leakage: above-cap buckets
-    // pair keeper-only, and a member whose every shared bucket had a
-    // different local minimum can survive pass 1 disconnected from its
-    // family; the SURVIVOR corpus re-buckets strictly smaller (usually
-    // under the cap), so a second pass pairs the leaked member with its
-    // still-present keeper and drops it. LIMIT (measured at 100×, cap 48:
-    // +286 leaked survivors single-pass vs uncapped truth, −37 recovered
-    // by pass 2): a member connected to its family only TRANSITIVELY
-    // through intermediates that pass 1 already dropped cannot reconnect
-    // — multi-pass bounds but does not eliminate the capped-star
-    // approximation; run uncapped (2.1× wall there) where exact
-    // connectivity matters. On a corpus with no capped buckets a second
-    // pass finds nothing and exits early — on the oracle-checked small
-    // corpora `passes` is therefore semantics-neutral.
-    var current = df
-    var p = 0
-    var dropped = -1L
-    while (p < passes && dropped != 0L) {
-      // checkpoint between passes: pass n+1's signature/verify chain and
-      // the final action would otherwise re-execute pass n's anti-join
-      // lineage repeatedly
-      if (p > 0) current = current.localCheckpoint(true)
-      val (out, d) = onePass(current)
-      current = out
-      dropped = d
-      p += 1
-    }
-    current
+    val ds = df.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
+    val sigs = signatures(ds).persist()
+    try {
+      val pairs = exactJaccard(ds, candidatePairs(sigs, maxBucket))
+        .filter(_.estimated_jaccard >= threshold)
+        .map(p => Pair(p.a, p.b))
+      val nonKeepers = resolveClusters(pairs)
+        .filter(col("id") =!= col("keeper_id"))
+        .select(col("id").cast("long").as(idCol))
+      // cheap count: the assignment derives from the checkpointed edge
+      // set, and at web scale non-keepers can be half the corpus — never
+      // collect them to the driver
+      if (nonKeepers.count() == 0L) df else df.join(nonKeepers, Seq(idCol), "left_anti")
+    } finally sigs.unpersist()
   }
 }

@@ -140,18 +140,37 @@ object Extraction {
       .sortBy { case (r, _) => (r.span.start, r.span.end, r.label) }
   }
 
+  /** The page's text: the pre-extracted `text` when present (the
+    * reference-parity path), else the html-stripped markup, else "".
+    */
+  private def resolveText(row: PageRow): String =
+    if (row.text != null && row.text.nonEmpty) row.text
+    else if (row.html != null && row.html.nonEmpty) Html.extract(Html.decodeBytes(row.html)).text
+    else ""
+
+  /** The labels of a text whose whitespace tokens are `packed`: score →
+    * percent-attach → horizontal merge → vertical merge → emit. A vertically
+    * merged (multi-span) annotation emits one row per member line span —
+    * text is the member's own slice, normalized is the annotation-level
+    * value (the joined text for merges).
+    */
+  private def labelsOf(text: String, packed: Array[Long]): Array[LabeledSpan] = {
+    val scored = attachPercentSignsPacked(text, packed, Scorer.scorePacked(text, packed))
+    val merged = mergeVerticalForMultiline(text, Merge.mergeHorizontal(text, scored))
+    merged.iterator.flatMap { case (m, memberSpans) =>
+      memberSpans.iterator.map(sp =>
+        LabeledSpan(m.label, sp.start, sp.end,
+          text.substring(sp.start, sp.end), m.confidence, m.normalized))
+    }.toArray
+  }
+
   /** Extract one page row — pure function, the unit of determinism: the
     * output depends only on the row's bytes (byte-identical per url across
     * runs and parallelism levels).
     */
   def extractOne(row: PageRow): ExtractedDoc = {
-    val text =
-      if (row.text != null && row.text.nonEmpty) row.text // reference-parity path: pre-extracted
-      else if (row.html != null && row.html.nonEmpty) Html.extract(Html.decodeBytes(row.html)).text
-      else ""
+    val text = resolveText(row)
     val packed = Rx.whitespaceTokensPacked(text)
-    val scored = attachPercentSignsPacked(text, packed, Scorer.scorePacked(text, packed))
-    val merged = mergeVerticalForMultiline(text, Merge.mergeHorizontal(text, scored))
     val spanArr = new Array[SpanT](packed.length)
     var si = 0
     while (si < packed.length) {
@@ -163,14 +182,7 @@ object Extraction {
       url = row.url,
       extracted_text = text,
       spans = spanArr,
-      labels = merged.iterator.flatMap { case (m, memberSpans) =>
-        // multi-span (vertically merged) annotations emit one row per
-        // member line span — text is the member's own slice, normalized is
-        // the annotation-level value (the joined text for merges)
-        memberSpans.iterator.map(sp =>
-          LabeledSpan(m.label, sp.start, sp.end,
-            text.substring(sp.start, sp.end), m.confidence, m.normalized))
-      }.toArray,
+      labels = labelsOf(text, packed),
       lang = if (row.lang != null && row.lang.nonEmpty) row.lang else LangId.detect(text),
       n_tokens = packed.length,
       text_sha256 = sha256Hex(text),
@@ -182,37 +194,25 @@ object Extraction {
     * [[extractOne]]. Catalyst cannot prune columns through an opaque
     * mapPartitions closure, so callers that consume ONLY these three
     * fields (sha/token-count oracle surfaces: q23/q44/q48/q59/q75/q77/q91)
-    * must do the pruning by hand — this runs the same html-strip and the
-    * same tokenizer boundary rules and the same sha, and skips the
-    * scorer/merge/langid/simhash kernels whose outputs such callers drop
-    * (guide §1.2: don't compute what you throw away). Field-for-field
+    * must do the pruning by hand — this shares extractOne's text
+    * resolution, counts with the same tokenizer boundary rules, and skips
+    * the scorer/merge/langid/simhash kernels whose outputs such callers
+    * drop (guide §1.2: don't compute what you throw away). Field-for-field
     * agreement with [[extractOne]] is spec-pinned (ExtractionSpec).
     */
   def extractTextStats(row: PageRow): (String, Int, String) = {
-    val text =
-      if (row.text != null && row.text.nonEmpty) row.text
-      else if (row.html != null && row.html.nonEmpty) Html.extract(Html.decodeBytes(row.html)).text
-      else ""
+    val text = resolveText(row)
     (text, Rx.whitespaceTokenCount(text), sha256Hex(text))
   }
 
   /** The `labels` projection of [[extractOne]] over a pre-extracted text —
-    * the same tokenize → score → percent-attach → horizontal merge →
-    * vertical merge chain, skipping the sha/simhash/langid fingerprint
-    * kernels and the span-array materialization that label-only consumers
-    * (q24) drop. Field-for-field agreement with [[extractOne]].labels is
-    * spec-pinned (ExtractionSpec).
+    * extractOne's own tokenize → label chain, skipping the
+    * sha/simhash/langid fingerprint kernels and the span-array
+    * materialization that label-only consumers (q24) drop. Field-for-field
+    * agreement with [[extractOne]].labels is spec-pinned (ExtractionSpec).
     */
-  def extractLabelsOnly(text: String): Array[LabeledSpan] = {
-    val packed = Rx.whitespaceTokensPacked(text)
-    val scored = attachPercentSignsPacked(text, packed, Scorer.scorePacked(text, packed))
-    val merged = mergeVerticalForMultiline(text, Merge.mergeHorizontal(text, scored))
-    merged.iterator.flatMap { case (m, memberSpans) =>
-      memberSpans.iterator.map(sp =>
-        LabeledSpan(m.label, sp.start, sp.end,
-          text.substring(sp.start, sp.end), m.confidence, m.normalized))
-    }.toArray
-  }
+  def extractLabelsOnly(text: String): Array[LabeledSpan] =
+    labelsOf(text, Rx.whitespaceTokensPacked(text))
 
   /** Typed pipeline: Dataset[PageRow] → Dataset[ExtractedDoc], zero shuffle. */
   def extract(pages: Dataset[PageRow]): Dataset[ExtractedDoc] = {

@@ -38,9 +38,8 @@ import org.apache.spark.sql.functions._
   * materialized via localCheckpoint so the scoring pass never re-reads
   * them), then one narrow corpus explode joined against the BROADCAST
   * models and re-aggregated per document — the corpus shuffles only
-  * (doc_id, partials). With `broadcastModels = false` the model joins
-  * shuffle on term instead (the huge-vocabulary fallback; at that point
-  * switch to the hashed-feature variant).
+  * (doc_id, partials). A vocabulary too large to broadcast needs the
+  * hashed-feature variant.
   *
   * Documents with fewer than 2 alnum tokens have no features and drop
   * from the output (no bigrams ⇒ the ratio is undefined); scoring a
@@ -63,8 +62,7 @@ object Importance {
     * target_mass, raw_mass, rel_mass, logratio_4dp, selected).
     */
   def importanceWeights(raw: DataFrame, target: DataFrame, idCol: String,
-      textCol: String, tau: Double = 1.0, minCount: Long = 1L,
-      broadcastModels: Boolean = true): DataFrame = {
+      textCol: String, tau: Double = 1.0, minCount: Long = 1L): DataFrame = {
     val rawCnt = bigramCounts(raw, textCol, minCount).localCheckpoint(true)
     val tgtCnt = bigramCounts(target, textCol, minCount).localCheckpoint(true)
     val rRow = rawCnt.agg(coalesce(sum("cnt"), lit(0L)).cast("long"), count(lit(1))).head
@@ -85,9 +83,8 @@ object Importance {
     // coalesce to 0 either way)
     val merged = rawCnt.withColumnRenamed("cnt", "cr")
       .join(tgtCnt.withColumnRenamed("cnt", "ct"), Seq("term"), "full_outer")
-    def model(m: DataFrame) = if (broadcastModels) F.broadcast(m) else m
     toks
-      .join(model(merged), Seq("term"), "left")
+      .join(F.broadcast(merged), Seq("term"), "left")
       .withColumn("cr", coalesce(col("cr"), lit(0L)))
       .withColumn("ct", coalesce(col("ct"), lit(0L)))
       .groupBy(col("__imp_id").as(idCol))

@@ -30,13 +30,12 @@ import org.apache.spark.sql.functions._
   * Scale notes: the model is vocabulary-sized. For web-scale corpora prune
   * with `minCount` (CCNet ships a fixed ~few-GB model for the same
   * reason); pruned-away and unseen tokens score with a floor count of 1
-  * (add-one style) via the left join's coalesce. `broadcastLm = true`
-  * (default) broadcasts the model so the corpus never shuffles for the
-  * join; set it false only when the pruned vocabulary genuinely exceeds
-  * executor memory, in which case AQE picks the join. The per-doc
-  * aggregate shuffles (doc_id, partials) only — tokens of one document
-  * are co-located in the source row, so map-side combine collapses to
-  * ~one row per doc per partition before the exchange.
+  * (add-one style) via the left join's coalesce. The model broadcasts, so
+  * the corpus never shuffles for the join; the pruned vocabulary must fit
+  * executor memory. The per-doc aggregate shuffles (doc_id, partials)
+  * only — tokens of one document are co-located in the source row, so
+  * map-side combine collapses to ~one row per doc per partition before
+  * the exchange.
   */
 object LangModel {
 
@@ -73,8 +72,7 @@ object LangModel {
     * centroid loads).
     */
   def scoreDocs(docs: DataFrame, lm: DataFrame, idCol: String, textCol: String,
-      tauHead: Double, tauTail: Double, broadcastLm: Boolean = true,
-      carry: Seq[String] = Nil): DataFrame = {
+      tauHead: Double, tauTail: Double, carry: Seq[String] = Nil): DataFrame = {
     require(tauHead >= tauTail, "scoreDocs: tauHead must be >= tauTail")
     val model = lm.localCheckpoint(true)
     val totRow = model.agg(sum(col("cnt")).cast("long"), count(lit(1))).collect()(0)
@@ -86,8 +84,7 @@ object LangModel {
       .select(col(idCol) +: carry.map(col) :+
         explode(split(col(textCol), " ", -1)).as("token"): _*)
       .where(col("token") =!= "")
-    val m = if (broadcastLm) F.broadcast(model) else model
-    val joined = toks.join(m, Seq("token"), "left")
+    val joined = toks.join(F.broadcast(model), Seq("token"), "left")
       // unseen / pruned-away tokens take the add-one floor count
       .withColumn("cnt", coalesce(col("cnt"), lit(1L)))
     joined

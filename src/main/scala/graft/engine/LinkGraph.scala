@@ -14,14 +14,13 @@ object LinkGraph {
     * (multiplicity preserved — out-degree and rank contributions weight
     * repeated links, so the aggregation decision belongs to the caller).
     * Absolute http(s) links take their own host; scheme-less links resolve
-    * to the source host when `resolveRelative` (protocol-relative `//host`
-    * links take the named host); mailto:/javascript:/fragment and other
-    * non-http schemes drop. Link extraction is one narrow mapPartitions
-    * (decode + href scan); host parsing is the codegen'd
-    * [[Blocklist.hostOf]] column. Empty hosts (unparseable) drop.
+    * to the source host (protocol-relative `//host` links take the named
+    * host); mailto:/javascript:/fragment and other non-http schemes drop.
+    * Link extraction is one narrow mapPartitions (decode + href scan);
+    * host parsing is the codegen'd [[Blocklist.hostOf]] column. Empty
+    * hosts (unparseable) drop.
     */
-  def hostEdges(df: DataFrame, urlCol: String, htmlCol: String,
-      resolveRelative: Boolean = true): DataFrame = {
+  def hostEdges(df: DataFrame, urlCol: String, htmlCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val pairs = df
@@ -37,8 +36,7 @@ object LinkGraph {
     val schemed = col("link").rlike("(?i)^[a-z][a-z0-9+.-]*:")
     val srcHost = Blocklist.hostOf(col("src_url"))
     pairs
-      .filter(httpAbs ||
-        (lit(resolveRelative) && !schemed && !col("link").startsWith("#")))
+      .filter(httpAbs || (!schemed && !col("link").startsWith("#")))
       .select(
         srcHost.as("src_host"),
         when(httpAbs, Blocklist.hostOf(col("link")))
@@ -55,8 +53,7 @@ object LinkGraph {
     * IR signal: what the WEB calls the target, aggregated downstream into
     * per-host anchor vocabularies. Same narrow-parse shape as hostEdges.
     */
-  def anchorEdges(df: DataFrame, urlCol: String, htmlCol: String,
-      resolveRelative: Boolean = true): DataFrame = {
+  def anchorEdges(df: DataFrame, urlCol: String, htmlCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val pairs = df
@@ -73,8 +70,7 @@ object LinkGraph {
     val schemed = col("link").rlike("(?i)^[a-z][a-z0-9+.-]*:")
     val srcHost = Blocklist.hostOf(col("src_url"))
     pairs
-      .filter(httpAbs ||
-        (lit(resolveRelative) && !schemed && !col("link").startsWith("#")))
+      .filter(httpAbs || (!schemed && !col("link").startsWith("#")))
       .select(
         srcHost.as("src_host"),
         when(httpAbs, Blocklist.hostOf(col("link")))
@@ -86,8 +82,9 @@ object LinkGraph {
   }
 
   /** Power-iteration PageRank over host edges: `iters` rounds of
-    * rank' = (1-d)/N + d·(Σ_in rank/out + danglingMass/N), dangling mass
-    * (hosts with no outlinks) redistributed uniformly, uniform 1/N start.
+    * rank' = (1-d)/N + d·(Σ_in rank/out + danglingMass/N) at damping
+    * d = 0.85, dangling mass (hosts with no outlinks) redistributed
+    * uniformly, uniform 1/N start.
     * Everything is keyed joins and aggregations — edges and out-degrees
     * materialize once, each round is one join-shuffle on src plus one on
     * dst, and the new rank vector is localCheckpoint'd so lineage stays
@@ -97,9 +94,9 @@ object LinkGraph {
     * `iters` (the crawl-scheduling convention — ~10 rounds, not
     * convergence-tested) rather than looping to a tolerance.
     */
-  def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int = 10): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
+    val damping = 0.85
     val spark = edges.sparkSession
     // Size-gated driver fast path (the resolveClusters discipline): each
     // distributed round is two join shuffles plus two actions of fixed

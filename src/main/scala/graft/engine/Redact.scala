@@ -1,5 +1,7 @@
 package graft.engine
 
+import graft.core.Rx
+
 /** PII redaction for training-data pipelines: mask email and url tokens
   * with fixed placeholders while preserving every other byte — whitespace,
   * punctuation-bearing tokens, offsets of untouched text all survive. Uses
@@ -7,11 +9,11 @@ package graft.engine
   * / [[Scorer.isUrlToken]]), so a span the engine labels `email` is exactly
   * a span redaction masks; the two surfaces cannot drift apart.
   *
-  * Single pass, token = maximal run of non-whitespace with EXACTLY the
-  * whitespace tokenizer's separator set (space, \n, \t, \f — NOT \r, which
-  * the tokenizer treats as part of a token and the url/email regexes then
-  * reject); pure function of the text — safe at any partitioning,
-  * deterministic for resume/lineage.
+  * Single pass, token = maximal run of non-separators under the whitespace
+  * tokenizer's own predicate ([[graft.core.Rx.isTokenSeparator]]: space,
+  * \n, \t, \f — NOT \r, which the tokenizer treats as part of a token and
+  * the url/email regexes then reject); pure function of the text — safe
+  * at any partitioning, deterministic for resume/lineage.
   */
 object Redact {
   val EmailMask = "<EMAIL>"
@@ -24,15 +26,12 @@ object Redact {
     var i = 0
     while (i < n) {
       val c = text.charAt(i)
-      if (c == ' ' || c == '\n' || c == '\t' || c == '\f') {
+      if (Rx.isTokenSeparator(c)) {
         sb.append(c)
         i += 1
       } else {
         var j = i
-        while (j < n && {
-          val d = text.charAt(j)
-          d != ' ' && d != '\n' && d != '\t' && d != '\f'
-        }) j += 1
+        while (j < n && !Rx.isTokenSeparator(text.charAt(j))) j += 1
         val tok = text.substring(i, j)
         if (Scorer.isEmailToken(tok)) sb.append(EmailMask)
         else if (Scorer.isUrlToken(tok)) sb.append(UrlMask)

@@ -293,23 +293,21 @@ object Sampling {
     * The coordinate discipline is splitByKey's own (same salt → same
     * boundaries), so the two are interchangeable downstream.
     *
-    * Scale shape: ONE keyed join of the corpus against the assignment
-    * (which covers only pair-graph members, typically a small fraction of
-    * the corpus) + the narrow split expression. With
-    * `broadcastAssignment=true` the join becomes a broadcast hash join
-    * and the corpus never shuffles — set it when the dup-graph node set
-    * fits executor memory (the `dedupLines.broadcastFirsts` discipline);
-    * the default keyed join scales to arbitrary graph sizes.
+    * Scale shape: ONE broadcast hash join of the corpus against the
+    * assignment (which covers only pair-graph members, typically a small
+    * fraction of the corpus) + the narrow split expression — the corpus
+    * never shuffles, and the dup-graph node set must fit executor memory
+    * (the bet [[Dedup.dedupLines]]' FirstsMode.Broadcast makes for its
+    * repeated-line vocabulary).
     *
     * Contract: `assignment.id` unique (resolveClusters' groupBy output);
     * `idCol` castable to long, non-null.
     */
   def splitByCluster(df: DataFrame, idCol: String, assignment: DataFrame,
       splits: Seq[(String, Double)], salt: String, outCol: String = "split",
-      keeperOut: String = "", broadcastAssignment: Boolean = false): DataFrame = {
-    val a0 = assignment.select(col("id").cast("long").as("__sc_id"),
-      col("keeper_id").cast("long").as("__sc_keeper"))
-    val a = if (broadcastAssignment) broadcast(a0) else a0
+      keeperOut: String = ""): DataFrame = {
+    val a = broadcast(assignment.select(col("id").cast("long").as("__sc_id"),
+      col("keeper_id").cast("long").as("__sc_keeper")))
     val joined = df
       .join(a, col(idCol).cast("long") === col("__sc_id"), "left")
       .withColumn("__sc_k", coalesce(col("__sc_keeper"), col(idCol).cast("long")))

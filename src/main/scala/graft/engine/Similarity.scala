@@ -391,33 +391,30 @@ object Similarity {
     rankTopK(partial, k)
   }
 
-  /** LSH-bucketed ANN: corpus bucketed by hyperplane key (one shuffle,
-    * reusable across queries); each query searches its own bucket plus all
-    * probes within `probeRadius` bit flips (multi-probe trades per-query
-    * fan-out for recall — radius 2 probes 1 + bits + bits*(bits-1)/2 keys,
-    * still a vanishing fraction of the 2^bits key space).
+  /** LSH-bucketed ANN: corpus bucketed by a 10-bit hyperplane key (one
+    * shuffle, reusable across queries); each query searches its own bucket
+    * plus every key within two bit flips (multi-probe trades per-query
+    * fan-out for recall — 1 + 10 + 45 = 56 keys, still a vanishing fraction
+    * of the 1024-key space).
     */
   def lshTopK(
       corpus: Dataset[(Long, Array[Float])],
       queries: Array[(Long, Array[Float])],
-      k: Int, bits: Int = 10, probeRadius: Int = 2): Dataset[Neighbor] = {
+      k: Int): Dataset[Neighbor] = {
+    val bits = 10
     val spark = corpus.sparkSession
     import spark.implicits._
     val keyed = corpus.map { case (id, v) => (hyperplaneKey(v, bits), id, v) }
     val probes: Map[Long, Array[(Long, Array[Float])]] = {
       val m = scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.ArrayBuffer[(Long, Array[Float])]]
-      require(probeRadius >= 0 && probeRadius <= 2,
-        s"probeRadius $probeRadius not implemented (0..2)")
       queries.foreach { case (qid, qv) =>
         val base = hyperplaneKey(qv, bits)
         // base, single-flip and b1<b2 double-flip keys are pairwise
         // distinct by construction — plain concatenation, no dedup needed
         val keys = Seq(base) ++
-          (if (probeRadius >= 1) (0 until bits).map(b => base ^ (1L << b)) else Seq.empty) ++
-          (if (probeRadius >= 2)
-            for (b1 <- 0 until bits; b2 <- (b1 + 1) until bits)
-              yield base ^ (1L << b1) ^ (1L << b2)
-          else Seq.empty)
+          (0 until bits).map(b => base ^ (1L << b)) ++
+          (for (b1 <- 0 until bits; b2 <- (b1 + 1) until bits)
+            yield base ^ (1L << b1) ^ (1L << b2))
         keys.foreach { key =>
           m.getOrElseUpdate(key, scala.collection.mutable.ArrayBuffer.empty) += ((qid, qv))
         }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.core.Fingerprint
+import graft.core.{Fingerprint, Rx}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -14,8 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object StringKernels {
   /** Whitespace-token count over the raw UTF-8 bytes — no String allocation.
-    * Counts maximal runs of non-{space, \n, \t, \f} bytes; ASCII separators
-    * never appear inside UTF-8 continuation bytes, so byte scanning is exact.
+    * Counts maximal runs of bytes that are not [[graft.core.Rx.isTokenSeparator]];
+    * the separators are ASCII and ASCII bytes never appear inside a
+    * multibyte UTF-8 sequence, so scanning only the ASCII bytes is exact.
     */
   def tokenCount(s: UTF8String): Int = {
     val n = s.numBytes()
@@ -26,7 +27,7 @@ object StringKernels {
     var inTok = false
     while (i < n) {
       val b = org.apache.spark.unsafe.Platform.getByte(base, off + i)
-      val ws = b == ' '.toByte || b == '\n'.toByte || b == '\t'.toByte || b == '\f'.toByte
+      val ws = b >= 0 && Rx.isTokenSeparator(b.toChar)
       if (!ws && !inTok) { count += 1; inTok = true }
       else if (ws) inTok = false
       i += 1

@@ -33,11 +33,9 @@ import org.apache.spark.util.sketch.BloomFilter
   * Scale contract: the query path broadcasts ALL bloom filters (~1.2
   * bytes/key at fpp=1e-2 ⇒ ~1.2 GB per 10^9 distinct docs). That fits a
   * large-executor profile up to a few 10^9 docs; beyond that, raise `fpp`
-  * (the result stays exact — only the candidate volume grows) or skip the
-  * bloom stage (`useBloom = false`), leaving the bucket-pruned exact
-  * anti-join, which is one shuffle of the BATCH side plus a pruned read of
-  * `hashes/`. The build is two linear passes over the snapshot (one
-  * distinct-shuffle on sha, one partial-aggregated bloom build).
+  * (the result stays exact — only the candidate volume grows). The build
+  * is two linear passes over the snapshot (one distinct-shuffle on sha,
+  * one partial-aggregated bloom build).
   */
 object DedupIndexJob {
 
@@ -47,7 +45,7 @@ object DedupIndexJob {
     * to [8, 65536]: 8 so pruning is observable even on toy corpora, 65536
     * capping file-count fan-out (at the cap a 10^12-doc snapshot gets
     * ~15M keys/bucket — bloom ~18 MB/bucket, still broadcastable
-    * per-bucket, total ~1.2 TB ⇒ the `useBloom=false` regime).
+    * per-bucket, but ~1.2 TB in total, far past one broadcast).
     */
   def autoBuckets(snapshotSize: Long): Int =
     math.max(8L, math.min(65536L, math.max(0L, snapshotSize) / 4000000L)).toInt
@@ -216,7 +214,6 @@ object DedupIndexJob {
       batch: DataFrame,
       textCol: String,
       indexDir: String,
-      useBloom: Boolean = true,
       materialize: Boolean = false): DataFrame = {
     val meta = readMeta(spark, indexDir)
     val hashedRaw = batch
@@ -224,22 +221,19 @@ object DedupIndexJob {
       .withColumn("__bucket", bucketOf(col("__sha"), meta.nBuckets))
     val hashed = if (materialize) hashedRaw.localCheckpoint(true) else hashedRaw
 
-    val (negatives, candidates) =
-      if (useBloom) {
-        val blooms: Map[Int, BloomFilter] = spark.read.parquet(s"$indexDir/bloom")
-          .select(col("bucket").cast("int"), col("bits"))
-          .collect()
-          .map(r => r.getInt(0) -> BloomFilter.readFrom(r.getAs[Array[Byte]](1)))
-          .toMap
-        val bc = spark.sparkContext.broadcast(blooms)
-        // an ABSENT bucket means the snapshot had no keys there — every
-        // probe of it is negative, i.e. the row is novel
-        val mightContain = udf { (bucket: Int, sha: String) =>
-          bc.value.get(bucket).exists(_.mightContainString(sha))
-        }
-        (hashed.filter(!mightContain(col("__bucket"), col("__sha"))),
-          hashed.filter(mightContain(col("__bucket"), col("__sha"))))
-      } else (hashed.limit(0), hashed)
+    val blooms: Map[Int, BloomFilter] = spark.read.parquet(s"$indexDir/bloom")
+      .select(col("bucket").cast("int"), col("bits"))
+      .collect()
+      .map(r => r.getInt(0) -> BloomFilter.readFrom(r.getAs[Array[Byte]](1)))
+      .toMap
+    val bc = spark.sparkContext.broadcast(blooms)
+    // an ABSENT bucket means the snapshot had no keys there — every
+    // probe of it is negative, i.e. the row is novel
+    val mightContain = udf { (bucket: Int, sha: String) =>
+      bc.value.get(bucket).exists(_.mightContainString(sha))
+    }
+    val negatives = hashed.filter(!mightContain(col("__bucket"), col("__sha")))
+    val candidates = hashed.filter(mightContain(col("__bucket"), col("__sha")))
 
     // ≤ nBuckets ints — bounded by construction, same justification as the
     // IVF probe list

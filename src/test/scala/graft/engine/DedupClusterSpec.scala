@@ -140,24 +140,6 @@ class DedupClusterSpec extends AnyFunSuite {
     }
   }
 
-  test("sparsifyCandidates keeps chains intact and caps dense-family degree") {
-    import spark.implicits._
-    // a 3-chain (low degree — must survive untouched) plus a 20-clique
-    // (190 pairs of redundancy that must shrink to O(m·k))
-    val chain = Seq((100L, 101L), (101L, 102L))
-    val clique = for (i <- 0L until 20L; j <- i + 1 until 20L) yield (i, j)
-    val sparse = Dedup.sparsifyCandidates(pairsOf((chain ++ clique): _*), k = 3)
-    val edges = sparse.collect().map(p => Set(p.a, p.b)).toSet
-    assert(edges.contains(Set(100L, 101L)) && edges.contains(Set(101L, 102L)))
-    val cliqueEdges = edges.filter(_.forall(_ < 20L))
-    assert(cliqueEdges.size <= 60, s"clique not sparsified: ${cliqueEdges.size} edges")
-    // connectivity preserved: the sparsified clique still resolves to ONE
-    // component with keeper 0
-    val m = Dedup.resolveClusters(sparse).as[(Long, Long)].collect().toMap
-    assert((0L until 20L).forall(i => m(i) == 0L))
-    assert(m(101L) == 100L && m(102L) == 100L)
-  }
-
   test("dedupNearText one-call near-dedup: chains collapse, distinct docs survive") {
     import spark.implicits._
     val body = (0 until 60).map(i => s"tok$i").mkString(" ")
@@ -173,13 +155,6 @@ class DedupClusterSpec extends AnyFunSuite {
     val kept = Dedup.dedupNearText(docs, "doc_id", "text", threshold = 0.8)
       .select("doc_id").as[Long].collect().sorted
     assert(kept.toSeq == Seq(1L, 4L, 6L))
-    // multi-pass is semantics-neutral when no bucket is capped: pass 2
-    // finds nothing among the survivors and exits early
-    val kept2 = Dedup.dedupNearText(docs, "doc_id", "text", threshold = 0.8, passes = 3)
-      .select("doc_id").as[Long].collect().sorted
-    assert(kept2.toSeq == Seq(1L, 4L, 6L))
-    intercept[IllegalArgumentException](
-      Dedup.dedupNearText(docs, "doc_id", "text", passes = 0))
   }
 
   test("dedupNear keeps component minima and passes isolated rows through") {

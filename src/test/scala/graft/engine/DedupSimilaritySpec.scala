@@ -53,6 +53,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val flagged = Dedup.contaminatedDocs(docs, "id", "text", bench, n = 3)
       .as[Long].collect().sorted
     assert(flagged.toSeq == Seq(1L, 4L))
+    // the benchmark grams broadcast; the corpus never shuffles for the join
+    val plan = SparkTestBase.withoutAutoBroadcast(Dedup.contaminatedDocs(
+      docs, "id", "text", bench, n = 3).queryExecution.executedPlan.toString)
+    assert(plan.contains("BroadcastHashJoin"), plan)
   }
 
   test("decontamination catches line-wrapped and whitespace-mangled duplicates") {
@@ -132,22 +136,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
       df.queryExecution.toRdd.count()
       df.queryExecution.executedPlan.toString
     }
-    // disable Catalyst/AQE auto-broadcast so the observed join strategy is
-    // the OPERATOR's choice, not the planner's size-statistics choice
-    val prev = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    // the observed join strategy is the OPERATOR's choice, not the
+    // planner's size-statistics choice
+    SparkTestBase.withoutAutoBroadcast {
       assert(planOf(64L << 20).contains("BroadcastHashJoin"),
         "small repeated vocabulary must select the broadcast join")
       assert(!planOf(0L).contains("BroadcastHashJoin"),
         "a zero-byte cap must fall back to the shuffle join")
-    } finally {
-      prev.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-      prevAqe.fold(spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold"))(
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", _))
     }
   }
 
@@ -171,11 +166,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(pairs.contains((1L, 4L))) // exact dup
     assert(pairs.contains((1L, 2L)) || pairs.contains((2L, 4L))) // near dup
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
-    // lazy mode returns the identical pair set through a fully-recomputable
-    // plan (no cache, no checkpoint — the preemption-safe variant)
-    val lazyPairs = Dedup.minhashNearDups(ds, 0.7, eager = false)
-      .collect().map(p => (p.a, p.b)).toSet
-    assert(lazyPairs == pairs)
   }
 
   test("simhash near-dups via hamming blocking") {
@@ -345,6 +335,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(out(2L) == "x y q", "only the shared span is cut, context survives")
     assert(out(3L) == "p q r s t u v w")
     assert(out(4L) == "", "a fully duplicated document loses its whole body")
+    // the repeated-window vocabulary broadcasts into the corpus-side join
+    val plan = SparkTestBase.withoutAutoBroadcast(Dedup.dedupSubstrings(
+      docs, "id", "text", minLen = 5).queryExecution.executedPlan.toString)
+    assert(plan.contains("BroadcastHashJoin"), plan)
   }
 
   test("substring dedup: periodic self-overlap keeps one window; id contract is loud") {

@@ -68,8 +68,8 @@ class LangModelSpec extends AnyFunSuite {
 
   test("model join broadcasts (corpus side never shuffles for the join)") {
     val lm = LangModel.fitUnigram(docs, "text")
-    val out = LangModel.scoreDocs(docs, lm, "doc_id", "text", 1.0, 1.0)
-    val plan = out.queryExecution.executedPlan.toString
+    val plan = SparkTestBase.withoutAutoBroadcast(
+      LangModel.scoreDocs(docs, lm, "doc_id", "text", 1.0, 1.0).queryExecution.executedPlan.toString)
     assert(plan.contains("BroadcastHashJoin"))
     assert(!plan.contains("SortMergeJoin"))
   }

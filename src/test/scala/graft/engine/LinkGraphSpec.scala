@@ -52,10 +52,6 @@ class LinkGraphSpec extends AnyFunSuite {
       ("src.example", "proto.example", 1L),  // protocol-relative takes its own host
       ("src.example", "upper.example", 1L),  // case + port normalization
       ("other.example", "a.example", 1L)))
-    // resolveRelative=false drops the self edge, keeps the rest
-    val noRel = LinkGraph.hostEdges(pages, "url", "html", resolveRelative = false)
-      .filter(col("dst_host") === "src.example").count()
-    assert(noRel == 0)
   }
 
   test("pageRank: hand-computed 3-node graph, 2 iterations") {

@@ -5,7 +5,7 @@ import graft.jobs.TrainRegexJob
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class OperatorsSpec extends AnyFunSuite {
+class OperatorsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
 
   test("section assignment routes rows to the latest preceding start") {
@@ -60,7 +60,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("model store round-trip") {
-    val path = java.nio.file.Files.createTempFile("graft_model", ".json").toString
+    val path = tempDir("graft_model").resolve("model.json").toString
     ModelStore.save(ModelStore.default, path)
     val loaded = ModelStore.load(path)
     assert(loaded == ModelStore.default)

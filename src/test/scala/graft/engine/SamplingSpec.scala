@@ -312,7 +312,7 @@ class SamplingSpec extends AnyFunSuite {
     val assignment = Dedup.resolveClusters(pairs)
     val splits = Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1)
     val out = Sampling.splitByCluster(df, "id", assignment, splits, "cs",
-        keeperOut = "keeper", broadcastAssignment = true)
+        keeperOut = "keeper")
       .select("id", "keeper", "split").as[(Long, Long, String)].collect()
     assert(out.length == 300)
     val sp = out.map(r => (r._1, r._3)).toMap
@@ -330,9 +330,9 @@ class SamplingSpec extends AnyFunSuite {
     // mostly-singleton corpus: train fraction tracks the weight
     val frac = out.count(_._3 == "train").toDouble / out.length
     assert(math.abs(frac - 0.8) < 0.1, s"train fraction $frac")
-    // broadcast form: the corpus-assignment join is a BHJ, never an SMJ
-    val plan = Sampling.splitByCluster(df, "id", assignment, splits, "cs",
-        broadcastAssignment = true).queryExecution.executedPlan.toString
+    // the corpus-assignment join is a BHJ, never an SMJ
+    val plan = SparkTestBase.withoutAutoBroadcast(Sampling.splitByCluster(
+      df, "id", assignment, splits, "cs").queryExecution.executedPlan.toString)
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
   }

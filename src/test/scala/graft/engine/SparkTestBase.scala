@@ -15,4 +15,18 @@ object SparkTestBase {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Runs `body` with size-based broadcast off, static and adaptive, so a
+    * BroadcastHashJoin planned inside it comes from an operator's own
+    * broadcast hint, not from the planner's size statistics.
+    */
+  def withoutAutoBroadcast[T](body: => T): T = {
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      keys.foreach(spark.conf.set(_, "-1"))
+      body
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }

@@ -1,6 +1,10 @@
 package graft.functions
 
+import graft.core.Rx
+import graft.engine.PropCheck
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
 class ExpressionsSpec extends AnyFunSuite {
@@ -36,10 +40,23 @@ class ExpressionsSpec extends AnyFunSuite {
   test("token_count Column API agrees with the pure counter") {
     val spark = graft.engine.SparkTestBase.spark
     import spark.implicits._
-    val texts = Seq("a b c", "", "  x ", "line\nbreak\ttab")
-    val got = texts.toDF("t")
-      .select(GraftFunctions.token_count($"t").as("n"))
-      .as[Int].collect().toSeq
-    assert(got == texts.map(graft.core.Quality.tokenCount))
+    // tokenizer separators, the whitespace it keeps inside tokens (\r, no-break
+    // space, line separator) and 2-, 3- and 4-byte UTF-8 characters
+    val piece = Gen.oneOf(" ", "\n", "\t", "\f", "\r", "\u00a0", "\u2028",
+      "a", "Z", "7", "%", "\u00e9", "\u20ac", "\u4e2d", "\ud83d\ude00")
+    val text = Gen.choose(0, 40).flatMap(Gen.listOfN(_, piece)).map(_.mkString)
+    def counts(t: String) = Seq(Rx.whitespaceTokenCount(t), Rx.whitespaceTokensPacked(t).length)
+    // the kernel graft_token_count runs, on one string at a time
+    PropCheck(Prop.forAll(text) { t =>
+      val n = StringKernels.tokenCount(UTF8String.fromString(t))
+      counts(t).forall(_ == n)
+    })
+    // and through the Column API, a batch of strings per query
+    PropCheck(Prop.forAll(Gen.listOfN(50, text)) { texts =>
+      val got = texts.toDF("t")
+        .select(GraftFunctions.token_count($"t").as("n"))
+        .as[Int].collect().toSeq
+      texts.zip(got).forall { case (t, n) => counts(t).forall(_ == n) }
+    }, minSuccessful = 10)
   }
 }

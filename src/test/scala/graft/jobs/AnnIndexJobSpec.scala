@@ -1,13 +1,13 @@
 package graft.jobs
 
-import graft.engine.{Similarity, SparkTestBase}
+import graft.engine.{Similarity, SparkTestBase, TempDirs}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** IVF index job: persistent build, centroid round-trip, and the contract
   * that a prebuilt-index query equals the inline-fit query (the fit is out
   * of the query path but must not change results).
   */
-class AnnIndexJobSpec extends AnyFunSuite {
+class AnnIndexJobSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
 
   private def corpus = {
@@ -28,7 +28,7 @@ class AnnIndexJobSpec extends AnyFunSuite {
   }
 
   test("build persists centroids and cell-partitioned corpus; load round-trips") {
-    val out = java.nio.file.Files.createTempDirectory("graft_ann_index").toString
+    val out = tempDir("graft_ann_index").toString
     val built = AnnIndexJob.build(spark, corpus, out, nCells = 5)
     val loaded = AnnIndexJob.loadCentroids(spark, out)
     assert(built.centroids.map(_.toSeq).toSeq == loaded.centroids.map(_.toSeq).toSeq)
@@ -40,7 +40,7 @@ class AnnIndexJobSpec extends AnyFunSuite {
 
   test("queryIndex prunes to the probed cell partitions and matches the full scan") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_ann_pruned").toString
+    val out = tempDir("graft_ann_pruned").toString
     val index = AnnIndexJob.build(spark, corpus, out, nCells = 5)
     // two queries probing 2 cells each touch at most 4 of the 5 cells —
     // pruning must have at least one partition to skip
@@ -93,7 +93,7 @@ class AnnIndexJobSpec extends AnyFunSuite {
 
     // the persisted-index query path still works at 64 cells and its
     // recall@5-vs-exact witness (the q47 self-witness contract) holds up
-    val out = java.nio.file.Files.createTempDirectory("graft_ann_64").toString
+    val out = tempDir("graft_ann_64").toString
     AnnIndexJob.build(spark, corpus, out, nCells = 64, sampleCap = AnnIndexJob.autoSampleCap(64))
     val queries = corpus.filter(_._1 < 5).collect().sortBy(_._1)
     val exact = Similarity.bruteForceTopK(corpus, queries, 5).collect()
@@ -109,7 +109,7 @@ class AnnIndexJobSpec extends AnyFunSuite {
 
   test("buildAuto derives cells/sample from the corpus count and builds a usable index") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_ann_auto").toString
+    val out = tempDir("graft_ann_auto").toString
     AnnIndexJob.buildAuto(spark, corpus, out)
     val loaded = AnnIndexJob.loadCentroids(spark, out)
     assert(loaded.centroids.length == AnnIndexJob.autoCells(300)) // = 17

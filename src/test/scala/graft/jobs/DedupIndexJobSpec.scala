@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.engine.SparkTestBase
+import graft.engine.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * against a reference anti-join, and the planning-time bucket pruning of
   * the exact-confirm read.
   */
-class DedupIndexJobSpec extends AnyFunSuite {
+class DedupIndexJobSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
 
   private def snapshot: DataFrame = {
@@ -34,7 +34,7 @@ class DedupIndexJobSpec extends AnyFunSuite {
   }
 
   private def buildOnce(): String = {
-    val out = java.nio.file.Files.createTempDirectory("graft_dedup_idx").toString
+    val out = tempDir("graft_dedup_idx").toString
     DedupIndexJob.build(spark, snapshot, "text", out, nBuckets = 16)
     out
   }
@@ -68,7 +68,7 @@ class DedupIndexJobSpec extends AnyFunSuite {
       "a false negative would silently pass a duplicate through as novel")
   }
 
-  test("novelAgainst equals the exact anti-join (bloom on, off, and materialized)") {
+  test("novelAgainst equals the exact anti-join (bloom route, materialized)") {
     val out = buildOnce()
     val expected = referenceNovel(batch)
     // null text folds to "" which the snapshot lacks — it must survive as
@@ -76,12 +76,9 @@ class DedupIndexJobSpec extends AnyFunSuite {
     assert(expected.contains(30000L))
     val withBloom = DedupIndexJob.novelAgainst(spark, batch, "text", out)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val noBloom = DedupIndexJob.novelAgainst(spark, batch, "text", out, useBloom = false)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
     val mat = DedupIndexJob.novelAgainst(spark, batch, "text", out, materialize = true)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(withBloom == expected)
-    assert(noBloom == expected)
     assert(mat == expected)
     // batch columns pass through; the internal sha/bucket columns do not
     val cols = DedupIndexJob.novelAgainst(spark, batch, "text", out).columns.toSeq
@@ -169,7 +166,7 @@ class DedupIndexJobSpec extends AnyFunSuite {
   }
 
   private def tmpOut(): String =
-    java.nio.file.Files.createTempDirectory("graft_dedup_idx_scratch").toString
+    tempDir("graft_dedup_idx_scratch").toString
 
   test("autoBuckets scales ~N/4M within [8, 65536]") {
     assert(DedupIndexJob.autoBuckets(0L) == 8)

@@ -1,13 +1,13 @@
 package graft.jobs
 
-import graft.engine.{Extraction, SparkTestBase}
+import graft.engine.{Extraction, SparkTestBase, TempDirs}
 import org.scalatest.funsuite.AnyFunSuite
 
-class ExtractJobSpec extends AnyFunSuite {
+class ExtractJobSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
 
   private def freshDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_job").toString
+    val d = tempDir("graft_job").toString
     d
   }
 

@@ -1,11 +1,11 @@
 package graft.jobs
 
 import graft.core.Fingerprint
-import graft.engine.{Dedup, SparkTestBase}
+import graft.engine.{Dedup, SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class NearDupIndexJobSpec extends AnyFunSuite {
+class NearDupIndexJobSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -25,7 +25,7 @@ class NearDupIndexJobSpec extends AnyFunSuite {
   ).toDS()
 
   private def freshDir() =
-    java.nio.file.Files.createTempDirectory("graft_ndi_spec").toString
+    tempDir("graft_ndi_spec").toString
 
   private def bruteForce(threshold: Double): Set[(Long, Long)] = {
     val h = hist.collect().map { case (id, t) => (id, Fingerprint.shingles(t, 3)) }

@@ -1,10 +1,10 @@
 package graft.jobs
 
-import graft.engine.{Retrieval, SparkTestBase}
+import graft.engine.{Retrieval, SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class RetrievalIndexJobSpec extends AnyFunSuite {
+class RetrievalIndexJobSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -19,7 +19,7 @@ class RetrievalIndexJobSpec extends AnyFunSuite {
   private def queries = Seq((0L, "the quick brown fox jumps")).toDF("query_id", "qtext")
 
   test("pruned search: planning-time PartitionFilters on bucket, empty row-level filters") {
-    val out = java.nio.file.Files.createTempDirectory("graft_bm25_spec").toString
+    val out = tempDir("graft_bm25_spec").toString
     RetrievalIndexJob.build(spark, corpus, "doc_id", "text", out, nBuckets = 16)
 
     // rebuild the bucket set the search computes, assert it actually prunes
@@ -42,7 +42,7 @@ class RetrievalIndexJobSpec extends AnyFunSuite {
   }
 
   test("search pushes the query-term list into the postings scan (PushedFilters In(term))") {
-    val out = java.nio.file.Files.createTempDirectory("graft_bm25_spec_tp").toString
+    val out = tempDir("graft_bm25_spec_tp").toString
     RetrievalIndexJob.build(spark, corpus, "doc_id", "text", out, nBuckets = 16)
     val plan = RetrievalIndexJob.search(spark, out, queries, 1, 5)
       .queryExecution.executedPlan.toString
@@ -51,7 +51,7 @@ class RetrievalIndexJobSpec extends AnyFunSuite {
   }
 
   test("persisted pruned path equals the in-memory index bit-for-bit at 4dp") {
-    val out = java.nio.file.Files.createTempDirectory("graft_bm25_spec2").toString
+    val out = tempDir("graft_bm25_spec2").toString
     RetrievalIndexJob.build(spark, corpus, "doc_id", "text", out, nBuckets = 16)
     def canon(df: org.apache.spark.sql.DataFrame) = df
       .select(col("query_id"), col("id"), col("qn"), col("n_matched"),
@@ -64,7 +64,7 @@ class RetrievalIndexJobSpec extends AnyFunSuite {
   }
 
   test("denormalized df in the postings matches the term-stats table") {
-    val out = java.nio.file.Files.createTempDirectory("graft_bm25_spec3").toString
+    val out = tempDir("graft_bm25_spec3").toString
     RetrievalIndexJob.build(spark, corpus, "doc_id", "text", out, nBuckets = 4)
     val fromIndex = spark.read.parquet(s"$out/postings")
       .select("term", "df").distinct()
@@ -73,7 +73,7 @@ class RetrievalIndexJobSpec extends AnyFunSuite {
   }
 
   test("meta round-trips the corpus scalars") {
-    val out = java.nio.file.Files.createTempDirectory("graft_bm25_spec4").toString
+    val out = tempDir("graft_bm25_spec4").toString
     RetrievalIndexJob.build(spark, corpus, "doc_id", "text", out, nBuckets = 8)
     val m = spark.read.parquet(s"$out/meta").head
     val idx = Retrieval.buildIndex(corpus, "doc_id", "text")
@@ -85,7 +85,7 @@ class RetrievalIndexJobSpec extends AnyFunSuite {
   // ---------------------------------------------------------- segments
 
   test("segmented search equals the monolithic index at 4dp") {
-    val out = java.nio.file.Files.createTempDirectory("graft_bm25_seg1").toString
+    val out = tempDir("graft_bm25_seg1").toString
     RetrievalIndexJob.addSegment(spark, out,
       corpus.filter(col("doc_id") % 2 === 0), "doc_id", "text", "even", nBuckets = 16)
     RetrievalIndexJob.addSegment(spark, out,
@@ -101,7 +101,7 @@ class RetrievalIndexJobSpec extends AnyFunSuite {
   }
 
   test("adding a segment leaves existing segment files byte-untouched") {
-    val out = java.nio.file.Files.createTempDirectory("graft_bm25_seg2").toString
+    val out = tempDir("graft_bm25_seg2").toString
     RetrievalIndexJob.addSegment(spark, out,
       corpus.filter(col("doc_id") < 3), "doc_id", "text", "s0", nBuckets = 8)
     def snapshot(): Map[String, Long] = {
@@ -119,7 +119,7 @@ class RetrievalIndexJobSpec extends AnyFunSuite {
   }
 
   test("global df is the sum of per-segment dfs (disjoint batches)") {
-    val out = java.nio.file.Files.createTempDirectory("graft_bm25_seg3").toString
+    val out = tempDir("graft_bm25_seg3").toString
     RetrievalIndexJob.addSegment(spark, out,
       corpus.filter(col("doc_id") < 3), "doc_id", "text", "a", nBuckets = 4)
     RetrievalIndexJob.addSegment(spark, out,
@@ -133,10 +133,10 @@ class RetrievalIndexJobSpec extends AnyFunSuite {
   }
 
   test("segments disagreeing on n_buckets refuse; empty dir refuses; bad name refuses") {
-    val out = java.nio.file.Files.createTempDirectory("graft_bm25_seg4").toString
+    val out = tempDir("graft_bm25_seg4").toString
     intercept[IllegalArgumentException] {
       RetrievalIndexJob.searchSegments(
-        spark, java.nio.file.Files.createTempDirectory("graft_bm25_seg5").toString + "/none",
+        spark, tempDir("graft_bm25_seg5").toString + "/none",
         queries)
     }
     intercept[IllegalArgumentException] {

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.engine.{Pack, SparkTestBase}
+import graft.engine.{Pack, SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * data/pushed filters), and the (shard, pos) read order replays the
   * seeded epoch order.
   */
-class ShardStoreJobSpec extends AnyFunSuite {
+class ShardStoreJobSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
 
   test("pruned shard reads: PartitionFilters, content equal to the layout slice") {
     import spark.implicits._
     val ids = (0L until 400L).toDF("doc_id")
     val layout = Pack.shardAssign(ids, "doc_id", seed = 9L, shardSize = 64L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_shard_spec").toString
+    val dir = tempDir("graft_shard_spec").toString
     ShardStoreJob.build(layout, dir)
 
     // 1) the shard isin resolves as a planning-time partition filter

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.corpus.WebCorpus
-import graft.engine.SparkTestBase
+import graft.engine.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * vs the sequential parse, single records are randomly addressable, and a
   * stale index fails loud.
   */
-class WarcIndexSpec extends AnyFunSuite {
+class WarcIndexSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
 
   private def pages(n: Int): DataFrame = {
@@ -21,7 +21,7 @@ class WarcIndexSpec extends AnyFunSuite {
   }
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_warcidx").toString
+    tempDir("graft_warcidx").toString
 
   private def build(gz: Boolean, n: Int = 90): (String, DataFrame) = {
     val dir = tmp()

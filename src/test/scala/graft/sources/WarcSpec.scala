@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.corpus.WebCorpus
-import graft.engine.SparkTestBase
+import graft.engine.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (plain and per-record-gzip), warcinfo skipping, lineage columns, loud
   * failure on corrupt archives.
   */
-class WarcSpec extends AnyFunSuite {
+class WarcSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
 
   private def pages(n: Int): DataFrame = {
@@ -20,7 +20,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_warc").toString
+    tempDir("graft_warc").toString
 
   private def roundTrip(gz: Boolean): Unit = {
     val n = 120

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.corpus.WebCorpus
-import graft.engine.SparkTestBase
+import graft.engine.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tracking, parity with the batch reader, and the stateless stream-static
   * snapshot-dedup filter.
   */
-class WarcStreamSpec extends AnyFunSuite {
+class WarcStreamSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
 
   private def pages(from: Long, until: Long): DataFrame = {
@@ -24,7 +24,7 @@ class WarcStreamSpec extends AnyFunSuite {
     * a second write into the same watched dir would collide).
     */
   private def deliver(df: DataFrame, watch: java.nio.file.Path, tag: String): Unit = {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_warc_deliver")
+    val scratch = tempDir("graft_warc_deliver")
     Warc.write(df.repartition(2), scratch.toString)
     val listing = java.nio.file.Files.list(scratch)
     try {
@@ -38,7 +38,7 @@ class WarcStreamSpec extends AnyFunSuite {
   }
 
   test("arriving archives stream exactly once; rows match the batch reader") {
-    val watch = java.nio.file.Files.createTempDirectory("graft_warc_watch")
+    val watch = tempDir("graft_warc_watch")
     deliver(pages(0, 60), watch, "b1")
     val qname = "warc_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = Warc.readStream(spark, watch.toString)
@@ -67,7 +67,7 @@ class WarcStreamSpec extends AnyFunSuite {
     // index over 200 snapshot texts
     val snapshot = (0L until 200L).map(i => (i, s"indexed page $i"))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft_idx_stream").toString
+    val idx = tempDir("graft_idx_stream").toString
     graft.jobs.DedupIndexJob.build(spark, snapshot, "text", idx, nBuckets = 8)
     // batch: 50 duplicates of the snapshot + 50 novel + a null text
     val batchRows = ((0L until 50L).map(i => (1000L + i, s"indexed page ${i * 4}")) ++
@@ -78,7 +78,7 @@ class WarcStreamSpec extends AnyFunSuite {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(expected.size == 51) // 50 novel + the null-folded row
     // the same rows through a parquet-backed stream
-    val stage = java.nio.file.Files.createTempDirectory("graft_stream_batch")
+    val stage = tempDir("graft_stream_batch")
     batchDf.coalesce(1).write.mode("overwrite").parquet(stage.toString)
     val schema = spark.read.parquet(stage.toString).schema
     val stream = spark.readStream.schema(schema).parquet(stage.toString)

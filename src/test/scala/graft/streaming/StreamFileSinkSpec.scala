@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.engine.{Extraction, PageRow, SparkTestBase}
+import graft.engine.{Extraction, PageRow, SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,12 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * brand-new query restarted on the same checkpoint picks up the remaining
   * input without dropping or duplicating a single document.
   */
-class StreamFileSinkSpec extends AnyFunSuite {
+class StreamFileSinkSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
 
   test("checkpointed parquet sink resumes exactly-once after a restart") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_sink")
+    val base = tempDir("graft_stream_sink")
     val inDir = base.resolve("in").toString
     val outDir = base.resolve("out").toString
     val ckpt = base.resolve("ckpt").toString

@@ -47,8 +47,7 @@ class StreamShapingSpec extends AnyFunSuite {
       Seq(Dedup.Pair(0L, 1L), Dedup.Pair(1L, 2L)).toDS())
     val splits = Seq("train" -> 0.8, "test" -> 0.2)
     def split(df: org.apache.spark.sql.DataFrame) =
-      Sampling.splitByCluster(df, "id", assignment, splits, "cs2",
-        broadcastAssignment = true)
+      Sampling.splitByCluster(df, "id", assignment, splits, "cs2")
     val input = MemoryStream[Long]
     val qn = "clsplit_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = split(input.toDS().toDF("id"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.engine.SparkTestBase
+import graft.engine.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,11 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * (replica 0 byte-identical, planted exact dups, near-dups, distinct
   * variants).
   */
-class ScaleDataSpec extends AnyFunSuite {
+class ScaleDataSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
 
   private lazy val out: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_scaledata").toString
+    val dir = tempDir("graft_scaledata").toString
     ScaleData.generate(spark, "/root/testdata/sf0.001", dir, mult = 2)
     dir
   }
