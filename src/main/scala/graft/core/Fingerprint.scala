@@ -112,22 +112,26 @@ object Fingerprint {
     if (union == 0) 1.0 else inter.toDouble / union
   }
 
-  /** 64-bit SimHash over word unigrams — single streaming scan, no word
-    * strings allocated. Word hash = finalized FNV-1a over lowercased
-    * letter/digit runs (our own fingerprint spec; fixed forever for
-    * cross-run determinism).
-    */
   private val SimhashChunk = 4096
 
-  def simhash64(text: String): Long = {
-    // buffer word hashes in a FIXED-size chunk; when full, sort and vote
-    // once per distinct hash weighted by its run count. Bit-identical to
-    // voting per occurrence (the per-bit accumulator is a plain sum), cuts
-    // the 64-bit vote loop by the repetition factor on real text, and keeps
-    // memory O(1) for arbitrarily large documents.
+  /** Per-thread simhash scratch: word hashes are buffered in a FIXED-size
+    * chunk; when full, it is sorted and each distinct hash votes once,
+    * weighted by its run count. Bit-identical to voting per occurrence (the
+    * per-bit accumulator is a plain sum), cuts the 64-bit vote loop by the
+    * repetition factor on real text, and keeps memory O(1) for arbitrarily
+    * large documents. Reused across calls, so a call allocates nothing.
+    */
+  private final class SimhashScratch {
     val hashes = new Array[Long](SimhashChunk)
-    var nh = 0
     val acc = new Array[Int](64)
+    var nh = 0
+
+    def add(z: Long): Unit = {
+      if (nh == SimhashChunk) drain()
+      hashes(nh) = z
+      nh += 1
+    }
+
     def drain(): Unit = {
       java.util.Arrays.sort(hashes, 0, nh)
       var j = 0
@@ -144,39 +148,49 @@ object Fingerprint {
       }
       nh = 0
     }
+  }
+
+  private val simhashScratch = ThreadLocal.withInitial[SimhashScratch](() => new SimhashScratch)
+
+  /** 64-bit SimHash over word unigrams — single streaming scan, no word
+    * strings allocated. Word hash = finalized FNV-1a over lowercased
+    * letter/digit runs (our own fingerprint spec; fixed forever for
+    * cross-run determinism).
+    */
+  def simhash64(text: String): Long = {
+    val s = simhashScratch.get()
+    java.util.Arrays.fill(s.acc, 0)
+    s.nh = 0
     var h = 0xcbf29ce484222325L // FNV offset basis
     var inWord = false
     var i = 0
     val n = text.length
-    def flush(): Unit = {
-      if (nh == SimhashChunk) drain()
-      hashes(nh) = SplitMix64.mix(h) // finalization for bit diffusion
-      nh += 1
-      h = 0xcbf29ce484222325L
-    }
     while (i < n) {
       val c = text.charAt(i)
-      // ASCII fast path (bit-identical: isLetterOrDigit below 0x80 is
-      // [A-Za-z0-9], toLowerCase is +32 on [A-Z])
-      if (c < 0x80) {
-        if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')) {
-          h = (h ^ c.toLong) * 0x100000001b3L // FNV prime
-          inWord = true
-        } else if (c >= 'A' && c <= 'Z') {
-          h = (h ^ (c + 32).toLong) * 0x100000001b3L
-          inWord = true
-        } else if (inWord) { flush(); inWord = false }
-      } else if (Character.isLetterOrDigit(c)) {
-        h = (h ^ Character.toLowerCase(c).toLong) * 0x100000001b3L
+      // lowercased word char, or -1. ASCII fast path (bit-identical:
+      // isLetterOrDigit below 0x80 is [A-Za-z0-9], toLowerCase is +32 on [A-Z])
+      val lc =
+        if (c < 0x80) {
+          if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')) c.toInt
+          else if (c >= 'A' && c <= 'Z') c + 32
+          else -1
+        } else if (Character.isLetterOrDigit(c)) Character.toLowerCase(c).toInt
+        else -1
+      if (lc >= 0) {
+        h = (h ^ lc.toLong) * 0x100000001b3L // FNV prime
         inWord = true
-      } else if (inWord) { flush(); inWord = false }
+      } else if (inWord) {
+        s.add(SplitMix64.mix(h)) // finalization for bit diffusion
+        h = 0xcbf29ce484222325L
+        inWord = false
+      }
       i += 1
     }
-    if (inWord) flush()
-    drain()
+    if (inWord) s.add(SplitMix64.mix(h))
+    s.drain()
     var out = 0L
     var b = 0
-    while (b < 64) { if (acc(b) > 0) out |= (1L << b); b += 1 }
+    while (b < 64) { if (s.acc(b) > 0) out |= (1L << b); b += 1 }
     out
   }
 

@@ -1,7 +1,9 @@
 package graft.jobs
 
+import graft.core.Fingerprint
 import graft.engine.{Extraction, PageRow}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import java.util.concurrent.{ExecutionException, Future, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Resumable bucketed extraction job (SURVEY §7.1 step 9; north rule:
@@ -19,6 +21,24 @@ import org.apache.spark.sql.functions._
   * The per-bucket checksum is order-insensitive (XOR of row hashes) so it is
   * identical under any executor scheduling — the determinism witness that
   * makes resume safe.
+  *
+  * Per bucket, in order:
+  *  1. read the staged bucket with the `PageRow` schema given (no footer
+  *     inference job);
+  *  2. extract and write `data/bucket=N/` in ONE Spark job, with the lineage
+  *     stats (row count, token sum, XOR checksum) observed by that write
+  *     (`Dataset.observe`): the bucket plan has no shuffle, so the write's
+  *     result stage applies each partition's metrics exactly once;
+  *  3. hand the lineage row to the run's committer thread, and start the
+  *     next bucket while it commits.
+  *
+  * Commit invariants: lineage(N) is written only after data(N) committed;
+  * at most one lineage commit is in flight, and it is awaited before the
+  * next commit, before any exception leaves `run` and before the stage is
+  * deleted and the rows returned. A commit failure that follows another
+  * failure is attached to it as suppressed, never in its place. A fresh
+  * run therefore costs 2 + 2 × nBuckets Spark jobs (meta, stage, then one
+  * data and one lineage job per bucket).
   */
 object ExtractJob {
 
@@ -33,6 +53,12 @@ object ExtractJob {
 
   def bucketOf(url: String, nBuckets: Int): Int =
     math.floorMod(scala.util.hashing.MurmurHash3.stringHash(url, 0x6cf), nBuckets)
+
+  /** The lineage checksum's per-row hash, shared by `run` and `audit`. */
+  private val rowHash: Column = {
+    val hash = udf((url: String, sha: String) => Fingerprint.hash64(url + sha))
+    hash(col("url"), col("text_sha256"))
+  }
 
   /** Path existence via the Hadoop FileSystem API — works on HDFS/object
     * stores, not just the local FS (resume on a cluster must not silently
@@ -80,6 +106,7 @@ object ExtractJob {
     if (pending.isEmpty) return Seq.empty
 
     val stageDir = s"$outDir/_stage"
+    val pageSchema = Encoders.product[PageRow].schema
     // the stage is hashed with THIS nBuckets; resuming with a different
     // bucket count would read nonexistent stage dirs and silently commit
     // empty buckets while never extracting the rows hashed past the old
@@ -120,39 +147,61 @@ object ExtractJob {
       // recorded bucket count, letting a mismatched-nBuckets resume bypass
       // the guard and silently commit empty buckets
       Seq(nBuckets.toString).toDS().write.mode(SaveMode.Overwrite).text(metaPath)
-      pages.map(p => (bucketOf(p.url, nBuckets), p))
-        .toDF("bucket", "page")
-        .select(col("bucket"), col("page.*"))
+      val bucket = udf((url: String) => bucketOf(url, nBuckets))
+      pages.select(bucket(col("url")).as("bucket") +: pageSchema.fieldNames.toSeq.map(col): _*)
         .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(stageDir)
     }
 
-    val written = Seq.newBuilder[LineageRow]
-    pending.foreach { b =>
-      failAtBucket.foreach(fb => if (fb == b) throw new RuntimeException(s"simulated failure at bucket $b"))
-      val t0 = System.nanoTime()
-      val bucketDir = s"$stageDir/bucket=$b"
-      val bucketPages: Dataset[PageRow] =
-        if (pathExists(spark, bucketDir))
-          spark.read.parquet(bucketDir).as[PageRow]
-        else spark.emptyDataset[PageRow]
-      val extracted = Extraction.extract(bucketPages).persist()
-      extracted.write.mode(SaveMode.Overwrite).parquet(s"$outDir/data/bucket=$b")
-      // per-partition partials collected (one triple per partition) — safe on
-      // empty buckets, order-insensitive combine
-      val partials = extracted.mapPartitions { it =>
-        var n = 0L; var toks = 0L; var x = 0L
-        it.foreach { d => n += 1; toks += d.n_tokens; x ^= graft.core.Fingerprint.hash64(d.url + d.text_sha256) }
-        Iterator.single((n, toks, x))
-      }.collect()
-      extracted.unpersist()
-      val stats = partials.foldLeft((0L, 0L, 0L)) { (a, c) => (a._1 + c._1, a._2 + c._2, a._3 ^ c._3) }
-      val row = LineageRow(b, stats._1, stats._2, stats._3,
-        (System.nanoTime() - t0) / 1000000, new java.sql.Timestamp(System.currentTimeMillis()))
-      // commit the lineage row AFTER the data write — crash between the two
-      // re-extracts the bucket idempotently (Overwrite), never skips data
-      Seq(row).toDS().write.mode(SaveMode.Append).parquet(s"$outDir/_lineage")
-      written += row
+    // one committer thread per run, created here so that it inherits the
+    // caller's Spark local properties (job group, scheduler pool)
+    val committer = new ThreadPoolExecutor(1, 1, 0L, TimeUnit.MILLISECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, "extract-job-lineage-commit")
+        t.setDaemon(true)
+        t
+      })
+    committer.prestartCoreThread()
+    var inFlight: Option[Future[_]] = None
+    def awaitCommit(): Unit = inFlight.foreach { f =>
+      inFlight = None
+      try f.get() catch { case e: ExecutionException => throw e.getCause }
     }
+
+    val written = Seq.newBuilder[LineageRow]
+    try {
+      pending.foreach { b =>
+        failAtBucket.foreach(fb => if (fb == b) throw new RuntimeException(s"simulated failure at bucket $b"))
+        val t0 = System.nanoTime()
+        val bucketDir = s"$stageDir/bucket=$b"
+        val bucketPages: Dataset[PageRow] =
+          if (pathExists(spark, bucketDir))
+            spark.read.schema(pageSchema).parquet(bucketDir).as[PageRow]
+          else spark.emptyDataset[PageRow]
+        val stats = Observation(s"lineage_bucket_$b")
+        Extraction.extract(bucketPages)
+          .observe(stats,
+            count(lit(1)).as("n_rows"),
+            coalesce(sum("n_tokens"), lit(0L)).as("n_tokens"),
+            coalesce(bit_xor(rowHash), lit(0L)).as("checksum"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/data/bucket=$b")
+        val m = stats.get
+        val row = LineageRow(b, m("n_rows").asInstanceOf[Long], m("n_tokens").asInstanceOf[Long],
+          m("checksum").asInstanceOf[Long],
+          (System.nanoTime() - t0) / 1000000, new java.sql.Timestamp(System.currentTimeMillis()))
+        // commit the lineage row AFTER the data write — crash between the two
+        // re-extracts the bucket idempotently (Overwrite), never skips data
+        awaitCommit()
+        inFlight = Some(committer.submit(new Runnable {
+          def run(): Unit = Seq(row).toDS().write.mode(SaveMode.Append).parquet(s"$outDir/_lineage")
+        }))
+        written += row
+      }
+      awaitCommit()
+    } catch {
+      case t: Throwable =>
+        try awaitCommit() catch { case t2: Throwable => t.addSuppressed(t2) }
+        throw t
+    } finally committer.shutdown()
     // all buckets committed: the stage (a full re-encoded copy of the
     // input) is dead weight — at the 100-TB target it would permanently
     // double the output's storage footprint
@@ -166,16 +215,10 @@ object ExtractJob {
     * written data and compare with the lineage row.
     */
   def audit(spark: SparkSession, outDir: String): DataFrame = {
-    import spark.implicits._
     val lineage = spark.read.parquet(s"$outDir/_lineage")
     val recomputed = spark.read.parquet(s"$outDir/data")
-      .select(col("bucket"), col("url"), col("text_sha256"))
-      .as[(Int, String, String)]
-      .map { case (b, url, sha) => (b, 1L, graft.core.Fingerprint.hash64(url + sha)) }
-      .groupByKey(_._1)
-      .reduceGroups((a, c) => (a._1, a._2 + c._2, a._3 ^ c._3))
-      .map { case (b, (_, n, x)) => (b, n, x) }
-      .toDF("bucket", "n_rows_data", "checksum_data")
+      .groupBy("bucket")
+      .agg(count(lit(1)).as("n_rows_data"), bit_xor(rowHash).as("checksum_data"))
     // LEFT join from lineage: a committed bucket whose data directory was
     // lost or written empty must surface as a mismatch row — an inner join
     // would silently drop exactly the data-loss case the audit exists for
