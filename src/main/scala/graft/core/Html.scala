@@ -1,7 +1,5 @@
 package graft.core
 
-import scala.collection.mutable
-
 /** Jsoup-free streaming HTML boilerplate stripper.
   *
   * A single-pass tag tokenizer segments the page into text blocks at
@@ -10,6 +8,14 @@ import scala.collection.mutable
   * text-density / link-density heuristics in the spirit of Boilerpipe
   * (Kohlschütter et al., WSDM'10) and trafilatura — built from scratch for
   * this engine; the reference SDK ingests OCR output and has no HTML stage.
+  *
+  * One tag rule, one attribute rule. What a tag is — comment, CDATA and
+  * declaration skips, the quote-aware tag end, name folding, raw-text
+  * element bodies — lives only in the private `Tokens` cursor; attribute
+  * values are read only by `attrOf`. Every scan here is a loop over that
+  * cursor: `blocks` (and `extract` on top of it), `tables`, `anchors` (and
+  * `links` on top of it), `metaOf` and `titleOf`, so markup inside a
+  * comment or a script is invisible to all of them alike.
   *
   * Output contract: `extract(html).text` is a pure function of the input
   * bytes — byte-identical across runs, partitionings and parallelism levels
@@ -89,41 +95,140 @@ object Html {
     sb.toString
   }
 
-  private val HrefAttr =
-    "(?i)\\bhref\\s*=\\s*(?:\"([^\"]*)\"|'([^']*)'|([^\\s>\"']+))".r
-
-  /** `href` targets of `<a>` tags in document order, entity-decoded (the
-    * markup spells `&amp;` in query strings; the link value is the decoded
-    * form). Pure scan, no DOM: the crawl-frontier extractor only needs the
-    * attribute values, and a regex per anchor TAG (never per document) keeps
-    * it linear. A truncated trailing anchor with an unterminated quoted
-    * value yields no link (a half-written URL is not a crawl target).
+  /** The one tag rule: a cursor over the tag and text events of a page.
+    * `next()` moves to the next event and returns false at the end of the
+    * page; the event is then read from the fields. A cursor rather than
+    * callbacks, so each scan's loop stays one monomorphic method.
+    *
+    * Comments, CDATA sections and `<!…>`/`<?…>` declarations are skipped.
+    * A tag ends at the first `>` outside a quoted attribute value ("width >
+    * height" or embedded JSON must not cut it short); a tag with no such
+    * `>` ends the page. Names fold ASCII case. A raw-text element (script,
+    * style, noscript, svg, template) is consumed with its body up to the
+    * case-insensitive close tag (legacy pages write `</SCRIPT>`) and yields
+    * no event; its self-closing form (`<svg …/>`) opens nothing — a
+    * deliberate divergence from HTML5 for script, since eating the rest of
+    * the document is worse for an extractor.
     */
-  def links(html: String): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    val n = html.length
-    var i = 0
-    while (i < n) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) i = n
-      else {
-        val c = if (lt + 1 < n) html.charAt(lt + 1) else ' '
-        val after = if (lt + 2 < n) html.charAt(lt + 2) else ' '
-        if ((c == 'a' || c == 'A') && (after.isWhitespace || after == '>' || after == '/')) {
-          val gt = html.indexOf('>', lt)
-          val end = if (gt < 0) n else gt
-          HrefAttr.findFirstMatchIn(html.substring(lt, end)).foreach { m =>
-            val raw =
-              if (m.group(1) != null) m.group(1)
-              else if (m.group(2) != null) m.group(2)
-              else m.group(3)
-            out += decodeEntities(raw)
+  private final class Tokens(html: String) {
+    private val n = html.length
+    private var pos = 0
+    private var attrsFrom = 0
+    /** True for a tag (`name`, `isEnd`), false for a text run. */
+    var isTag = false
+    /** Source range `[start, end)` of the event; a tag's `>` is `end - 1`. */
+    var start = 0
+    var end = 0
+    var name = ""
+    var isEnd = false
+
+    def next(): Boolean = {
+      while (pos < n) {
+        val i = pos
+        if (html.charAt(i) != '<') {
+          val lt = html.indexOf('<', i)
+          start = i; end = if (lt < 0) n else lt; isTag = false; pos = end
+          return true
+        }
+        if (html.startsWith("<!--", i)) pos = past(html.indexOf("-->", i + 4), 3)
+        else if (html.startsWith("<![CDATA[", i)) pos = past(html.indexOf("]]>", i + 9), 3)
+        else if (html.startsWith("<!", i) || html.startsWith("<?", i)) pos = past(html.indexOf('>', i), 1)
+        else {
+          var close = -1
+          var quote = 0.toChar
+          var scan = i + 1
+          while (scan < n && close < 0) {
+            val ch = html.charAt(scan)
+            if (quote != 0) { if (ch == quote) quote = 0 }
+            else if (ch == '"' || ch == '\'') quote = ch
+            else if (ch == '>') close = scan
+            scan += 1
           }
-          i = end + 1
-        } else i = lt + 1
+          if (close < 0) pos = n
+          else {
+            var p = i + 1
+            isEnd = p < close && html.charAt(p) == '/'
+            if (isEnd) p += 1
+            val nameStart = p
+            while (p < close && !Character.isWhitespace(html.charAt(p)) && html.charAt(p) != '/') p += 1
+            // the name alone is materialized, never the attribute body
+            val nb = new java.lang.StringBuilder(p - nameStart)
+            var q = nameStart
+            while (q < p) {
+              val ch = html.charAt(q)
+              nb.append(if (ch >= 'A' && ch <= 'Z') (ch + 32).toChar else ch)
+              q += 1
+            }
+            name = nb.toString
+            attrsFrom = p
+            val selfClosing = close > i + 1 && html.charAt(close - 1) == '/'
+            if (rawTextTags.contains(name) && !isEnd && !selfClosing) {
+              val e = indexOfIgnoreCase(html, "</" + name, close + 1)
+              pos = if (e < 0) n else past(html.indexOf('>', e), 1)
+            } else {
+              start = i; end = close + 1; isTag = true; pos = end
+              return true
+            }
+          }
+        }
+      }
+      false
+    }
+
+    private def past(at: Int, len: Int): Int = if (at < 0) n else at + len
+
+    /** Attribute `key` of the current tag, see [[attrOf]]. */
+    def attr(key: String): String = attrOf(html, attrsFrom, end - 1, key)
+  }
+
+  /** The one attribute rule: the value of attribute `key` (matched
+    * case-insensitively) among the attributes in `html[from, to)`,
+    * entity-decoded; ""
+    * for a bare attribute, null when absent. Attributes are walked name by
+    * name, so a key spelled inside a value (`content="name=x"`) or inside
+    * another name (`data-href`) never matches; the first occurrence wins.
+    * Values are double-, single- or unquoted.
+    */
+  private def attrOf(html: String, from: Int, to: Int, key: String): String = {
+    def skipWs(at: Int): Int = { var p = at; while (p < to && Character.isWhitespace(html.charAt(p))) p += 1; p }
+    var p = from
+    while (p < to) {
+      val c = html.charAt(p)
+      if (Character.isWhitespace(c) || c == '/') p += 1
+      else {
+        val nameStart = p
+        p += 1
+        while (p < to && !Character.isWhitespace(html.charAt(p)) && html.charAt(p) != '=' && html.charAt(p) != '/') p += 1
+        val hit = p - nameStart == key.length && html.regionMatches(true, nameStart, key, 0, key.length)
+        val eq = skipWs(p)
+        if (eq < to && html.charAt(eq) == '=') {
+          var vs = skipWs(eq + 1)
+          var ve = vs
+          if (vs < to && (html.charAt(vs) == '"' || html.charAt(vs) == '\'')) {
+            val e = html.indexOf(html.charAt(vs), vs + 1)
+            vs += 1
+            ve = if (e < 0 || e > to) to else e
+            p = ve + 1
+          } else {
+            while (ve < to && !Character.isWhitespace(html.charAt(ve))) ve += 1
+            p = ve
+          }
+          if (hit) return decodeEntities(html.substring(vs, ve))
+        } else if (hit) return ""
       }
     }
-    out.result()
+    null
+  }
+
+  /** Case-insensitive indexOf without lowercasing the whole page. */
+  private def indexOfIgnoreCase(s: String, target: String, from: Int): Int = {
+    val n = s.length - target.length
+    var i = math.max(from, 0)
+    while (i <= n) {
+      if (s.regionMatches(true, i, target, 0, target.length)) return i
+      i += 1
+    }
+    -1
   }
 
   private final class BlockBuilder {
@@ -134,9 +239,6 @@ object Html {
     var srcStart: Int = -1
     var srcEnd: Int = -1
     var pendingSpace = false
-
-    def appendText(t: String, inLink: Boolean, src: Int, srcTo: Int): Unit =
-      appendRange(t, 0, t.length, inLink, src, srcTo)
 
     /** Append a [from,to) slice of `t` — no substring allocation. */
     def appendRange(t: String, from: Int, to: Int, inLink: Boolean, src: Int, srcTo: Int): Unit = {
@@ -175,142 +277,70 @@ object Html {
     var listDepth = 0
     var skipDepth = 0 // inside <head>
     var inTitle = false // <title> outside <head> must not leak into content
-    var i = 0
-    val n = html.length
+    val t = new Tokens(html)
 
     def flush(): Unit = { cur.build().foreach(out += _); cur = new BlockBuilder }
 
-    while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<') {
-        if (html.startsWith("<!--", i)) {
-          val e = html.indexOf("-->", i + 4)
-          i = if (e < 0) n else e + 3
-        } else if (html.startsWith("<![CDATA[", i)) {
-          val e = html.indexOf("]]>", i + 9)
-          i = if (e < 0) n else e + 3
-        } else if (html.startsWith("<!", i) || html.startsWith("<?", i)) {
-          val e = html.indexOf('>', i)
-          i = if (e < 0) n else e + 1
-        } else {
-          // quote-aware tag-end scan: a '>' inside a quoted attribute value
-          // ("width > height", embedded JSON) must not truncate the tag and
-          // leak the attribute tail into extracted text
-          var close = -1
-          var quote = 0.toChar
-          var scan = i + 1
-          while (scan < n && close < 0) {
-            val ch = html.charAt(scan)
-            if (quote != 0) { if (ch == quote) quote = 0 }
-            else if (ch == '"' || ch == '\'') quote = ch
-            else if (ch == '>') close = scan
-            scan += 1
-          }
-          if (close < 0) { i = n }
-          else {
-            // tag name without materializing the attribute body: only isEnd
-            // and the (ASCII-folded) name are ever used — one allocation per
-            // tag instead of three
-            var p = i + 1
-            val isEnd = p < close && html.charAt(p) == '/'
-            if (isEnd) p += 1
-            val nameStart = p
-            while (p < close && {
-              val ch = html.charAt(p)
-              !Character.isWhitespace(ch) && ch != '/'
-            }) p += 1
-            val nb = new java.lang.StringBuilder(p - nameStart)
-            var q = nameStart
-            while (q < p) {
-              val ch = html.charAt(q)
-              nb.append(if (ch >= 'A' && ch <= 'Z') (ch + 32).toChar else ch)
-              q += 1
-            }
-            val name = nb.toString
-            // self-closing raw-text syntax (<svg .../>) must not open a
-            // raw-text consumption that swallows content to the close tag
-            // or EOF (honored for foreign content like svg; for script the
-            // HTML5 parser would treat it as open, but eating the document
-            // is strictly worse for an extractor — deliberate divergence)
-            val selfClosing = close > i + 1 && html.charAt(close - 1) == '/'
-            if (rawTextTags.contains(name) && !isEnd && !selfClosing) {
-              // consume raw text until matching close tag — case-insensitive:
-              // legacy pages close with </SCRIPT>/</STYLE>, and a
-              // case-sensitive search would silently drop the whole rest of
-              // the document
-              val endTag = "</" + name
-              val e = indexOfIgnoreCase(html, endTag, close + 1)
-              val after = if (e < 0) n else html.indexOf('>', e)
-              if (e < 0 || after < 0) { i = n } else { i = after + 1 }
-            } else {
-              if (skipSubtreeTags.contains(name)) {
-                if (!isEnd) skipDepth += 1 else if (skipDepth > 0) skipDepth -= 1
-              }
-              // HTML5 makes </head> optional: <body> implicitly closes the
-              // head — without this, a page omitting </head> extracts EMPTY
-              if (name == "body" && !isEnd) skipDepth = 0
-              if (name == "title") inTitle = !isEnd
-              if (name == "a") { if (!isEnd) linkDepth += 1 else if (linkDepth > 0) linkDepth -= 1 }
-              if (name == "ul" || name == "ol") { if (!isEnd) listDepth += 1 else if (listDepth > 0) listDepth -= 1 }
-              if (blockTags.contains(name)) {
-                flush()
-                // block boundary terminates inline anchors (browser-style
-                // recovery for unclosed <a> in the wild) — except the
-                // inline voids <br>/<hr>, which do not close anchors in any
-                // browser ('<a>Home<br>Products</a>' stays one link)
-                if (name != "br" && name != "hr") linkDepth = 0
-                if (!isEnd && name.length == 2 && name.charAt(0) == 'h' && name.charAt(1) >= '1' && name.charAt(1) <= '6')
-                  cur.headingLevel = name.charAt(1) - '0'
-                cur.inList = listDepth > 0
-              }
-              i = close + 1
-            }
-          }
+    while (t.next()) {
+      if (t.isTag) {
+        val name = t.name
+        val isEnd = t.isEnd
+        if (skipSubtreeTags.contains(name)) {
+          if (!isEnd) skipDepth += 1 else if (skipDepth > 0) skipDepth -= 1
         }
-      } else {
-        val next = html.indexOf('<', i)
-        val end = if (next < 0) n else next
-        if (skipDepth == 0 && !inTitle) {
-          // zero-copy fast path: segments without entities append in place.
-          // The scan is BOUNDED to this segment — an unbounded indexOf ran
-          // to the document tail per segment, O(n²) on pages without '&'
-          var amp = i
-          while (amp < end && html.charAt(amp) != '&') amp += 1
-          if (amp >= end)
-            cur.appendRange(html, i, end, linkDepth > 0, i, end)
-          else {
-            val decoded = decodeEntities(html.substring(i, end))
-            cur.appendText(decoded, linkDepth > 0, i, end)
-          }
-          cur.inList = cur.inList || listDepth > 0
+        // HTML5 makes </head> optional: <body> implicitly closes the
+        // head — without this, a page omitting </head> extracts EMPTY
+        if (name == "body" && !isEnd) skipDepth = 0
+        if (name == "title") inTitle = !isEnd
+        if (name == "a") { if (!isEnd) linkDepth += 1 else if (linkDepth > 0) linkDepth -= 1 }
+        if (name == "ul" || name == "ol") { if (!isEnd) listDepth += 1 else if (listDepth > 0) listDepth -= 1 }
+        if (blockTags.contains(name)) {
+          flush()
+          // block boundary terminates inline anchors (browser-style
+          // recovery for unclosed <a> in the wild) — except the
+          // inline voids <br>/<hr>, which do not close anchors in any
+          // browser ('<a>Home<br>Products</a>' stays one link)
+          if (name != "br" && name != "hr") linkDepth = 0
+          if (!isEnd && name.length == 2 && name.charAt(0) == 'h' && name.charAt(1) >= '1' && name.charAt(1) <= '6')
+            cur.headingLevel = name.charAt(1) - '0'
+          cur.inList = listDepth > 0
         }
-        i = end
+      } else if (skipDepth == 0 && !inTitle) {
+        val i = t.start
+        val end = t.end
+        // zero-copy fast path: segments without entities append in place.
+        // The scan is BOUNDED to this segment — an unbounded indexOf ran
+        // to the document tail per segment, O(n²) on pages without '&'
+        var amp = i
+        while (amp < end && html.charAt(amp) != '&') amp += 1
+        if (amp >= end)
+          cur.appendRange(html, i, end, linkDepth > 0, i, end)
+        else {
+          val decoded = decodeEntities(html.substring(i, end))
+          cur.appendRange(decoded, 0, decoded.length, linkDepth > 0, i, end)
+        }
+        cur.inList = cur.inList || listDepth > 0
       }
     }
     flush()
     out.result()
   }
 
-  /** Case-insensitive indexOf without lowercasing the whole page. */
-  private def indexOfIgnoreCase(s: String, target: String, from: Int): Int = {
-    val n = s.length - target.length
-    var i = math.max(from, 0)
-    while (i <= n) {
-      if (s.regionMatches(true, i, target, 0, target.length)) return i
-      i += 1
-    }
-    -1
-  }
-
-  /** Extract the document title (first `<title>` element text). */
+  /** The document title: the text of the first `<title>` element,
+    * entity-decoded and whitespace-collapsed; "" when there is none or it
+    * never closes.
+    */
   def titleOf(html: String): String = {
-    val s = indexOfIgnoreCase(html, "<title", 0)
-    if (s < 0) return ""
-    val open = html.indexOf('>', s)
-    if (open < 0) return ""
-    val e = indexOfIgnoreCase(html, "</title", open)
-    if (e < 0) return ""
-    decodeEntities(html.substring(open + 1, e)).trim.replaceAll("\\s+", " ")
+    val t = new Tokens(html)
+    while (t.next()) if (t.isTag && !t.isEnd && t.name == "title") {
+      val sb = new java.lang.StringBuilder
+      while (t.next()) {
+        if (!t.isTag) sb.append(html, t.start, t.end)
+        else if (t.isEnd && t.name == "title") return decodeEntities(sb.toString).trim.replaceAll("\\s+", " ")
+      }
+      return ""
+    }
+    ""
   }
 
   private val MinContentWords = 8
@@ -371,6 +401,29 @@ object Html {
     Extraction(sb.toString, spans.result(), prov.result(), titleOf(html))
   }
 
+  /** Whitespace-collapsing text buffer of the cell and anchor scans. */
+  private final class TextBuf {
+    private val sb = new java.lang.StringBuilder
+    private var pendingSpace = false
+    /** Append `t[from, to)`; a whitespace run between words becomes one space. */
+    def append(t: String, from: Int, to: Int): Unit = {
+      var i = from
+      while (i < to) {
+        val c = t.charAt(i)
+        if (Character.isWhitespace(c)) space()
+        else {
+          if (pendingSpace) { sb.append(' '); pendingSpace = false }
+          sb.append(c)
+        }
+        i += 1
+      }
+    }
+    /** A word break: the next word gets a space before it, if a word precedes. */
+    def space(): Unit = if (sb.length > 0) pendingSpace = true
+    /** The text so far; the buffer starts over empty. */
+    def take(): String = { val r = sb.toString; sb.setLength(0); pendingSpace = false; r }
+  }
+
   /** One cell of a top-level `<table>` in document order. Nested tables
     * flatten into the enclosing cell's text (the containment reading a text
     * extractor wants — their structure is not re-emitted as separate
@@ -382,11 +435,10 @@ object Html {
 
   /** Structured table extraction: every `<td>`/`<th>` cell of every
     * top-level `<table>`, with (table, row, column) coordinates assigned in
-    * document order. The scan shares the block tokenizer's protections
-    * (comment/CDATA skip, quote-aware tag ends, raw-text consumption,
-    * case-insensitive names) but tracks only table structure — one pass, no
-    * DOM. Browser-style recovery: an unclosed cell is flushed by the next
-    * `<td>`/`<tr>`/`</table>`; a `<td>` before any `<tr>` opens row 0.
+    * document order. One pass over the [[Tokens]] events, tracking only
+    * table structure — no DOM. Browser-style recovery: an unclosed cell is
+    * flushed by the next `<td>`/`<tr>`/`</table>`; a `<td>` before any
+    * `<tr>` opens row 0.
     */
   def tables(html: String): Vector[TableCell] = {
     val out = Vector.newBuilder[TableCell]
@@ -396,216 +448,96 @@ object Html {
     var col = -1
     var inCell = false
     var cellHeader = false
-    val sb = new StringBuilder
-    var pendingSpace = false
+    val cell = new TextBuf
 
     def flushCell(): Unit = if (inCell) {
-      out += TableCell(tableIdx, row, col, cellHeader, sb.toString)
-      sb.setLength(0); pendingSpace = false; inCell = false
-    }
-    def appendSeg(t: String, from: Int, to: Int): Unit = {
-      var i = from
-      while (i < to) {
-        val c = t.charAt(i)
-        if (Character.isWhitespace(c)) { if (sb.nonEmpty) pendingSpace = true }
-        else {
-          if (pendingSpace) { sb.append(' '); pendingSpace = false }
-          sb.append(c)
-        }
-        i += 1
-      }
+      out += TableCell(tableIdx, row, col, cellHeader, cell.take())
+      inCell = false
     }
 
-    var i = 0
-    val n = html.length
-    while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<') {
-        if (html.startsWith("<!--", i)) {
-          val e = html.indexOf("-->", i + 4); i = if (e < 0) n else e + 3
-        } else if (html.startsWith("<![CDATA[", i)) {
-          val e = html.indexOf("]]>", i + 9); i = if (e < 0) n else e + 3
-        } else if (html.startsWith("<!", i) || html.startsWith("<?", i)) {
-          val e = html.indexOf('>', i); i = if (e < 0) n else e + 1
-        } else {
-          var close = -1
-          var quote = 0.toChar
-          var scan = i + 1
-          while (scan < n && close < 0) {
-            val ch = html.charAt(scan)
-            if (quote != 0) { if (ch == quote) quote = 0 }
-            else if (ch == '"' || ch == '\'') quote = ch
-            else if (ch == '>') close = scan
-            scan += 1
-          }
-          if (close < 0) { i = n }
-          else {
-            var p = i + 1
-            val isEnd = p < close && html.charAt(p) == '/'
-            if (isEnd) p += 1
-            val nameStart = p
-            while (p < close && {
-              val ch = html.charAt(p)
-              !Character.isWhitespace(ch) && ch != '/'
-            }) p += 1
-            val nb = new java.lang.StringBuilder(p - nameStart)
-            var q = nameStart
-            while (q < p) {
-              val ch = html.charAt(q)
-              nb.append(if (ch >= 'A' && ch <= 'Z') (ch + 32).toChar else ch)
-              q += 1
+    val t = new Tokens(html)
+    while (t.next()) {
+      if (t.isTag) {
+        val isEnd = t.isEnd
+        t.name match {
+          case "table" =>
+            if (!isEnd) {
+              depth += 1
+              if (depth == 1) { tableIdx += 1; row = -1; col = -1 }
+            } else if (depth > 0) {
+              if (depth == 1) flushCell()
+              depth -= 1
             }
-            val name = nb.toString
-            val selfClosing = close > i + 1 && html.charAt(close - 1) == '/'
-            if (rawTextTags.contains(name) && !isEnd && !selfClosing) {
-              val endTag = "</" + name
-              val e = indexOfIgnoreCase(html, endTag, close + 1)
-              val after = if (e < 0) n else html.indexOf('>', e)
-              if (e < 0 || after < 0) i = n else i = after + 1
-            } else {
-              name match {
-                case "table" =>
-                  if (!isEnd) {
-                    depth += 1
-                    if (depth == 1) { tableIdx += 1; row = -1; col = -1 }
-                  } else if (depth > 0) {
-                    if (depth == 1) flushCell()
-                    depth -= 1
-                  }
-                case "tr" if depth == 1 => flushCell(); if (!isEnd) { row += 1; col = -1 }
-                case "td" | "th" if depth == 1 =>
-                  flushCell()
-                  if (!isEnd) {
-                    if (row < 0) row = 0
-                    col += 1; inCell = true; cellHeader = name == "th"
-                  }
-                case "br" | "hr" | "p" | "div" | "li" =>
-                  // block boundary inside a cell reads as a space, not a glue
-                  if (inCell && sb.nonEmpty) pendingSpace = true
-                case _ =>
-              }
-              i = close + 1
+          case "tr" if depth == 1 => flushCell(); if (!isEnd) { row += 1; col = -1 }
+          case "td" | "th" if depth == 1 =>
+            flushCell()
+            if (!isEnd) {
+              if (row < 0) row = 0
+              col += 1; inCell = true; cellHeader = t.name == "th"
             }
-          }
+          case "br" | "hr" | "p" | "div" | "li" =>
+            // block boundary inside a cell reads as a space, not a glue
+            if (inCell) cell.space()
+          case _ =>
         }
-      } else {
-        val next = html.indexOf('<', i)
-        val end = if (next < 0) n else next
-        if (inCell) {
-          var amp = i
-          while (amp < end && html.charAt(amp) != '&') amp += 1
-          if (amp >= end) appendSeg(html, i, end)
-          else { val d = decodeEntities(html.substring(i, end)); appendSeg(d, 0, d.length) }
-        }
-        i = end
+      } else if (inCell) {
+        var amp = t.start
+        while (amp < t.end && html.charAt(amp) != '&') amp += 1
+        if (amp >= t.end) cell.append(html, t.start, t.end)
+        else { val d = decodeEntities(html.substring(t.start, t.end)); cell.append(d, 0, d.length) }
       }
     }
     flushCell()
     out.result()
   }
 
-  /** `(href, anchorText)` per `<a href=…>` element in document order —
-    * the link-graph scan plus the inner text (tags stripped,
-    * entity-decoded, whitespace-collapsed) up to the nearest `</a>`
-    * (anchors cannot nest in HTML; an unterminated anchor is capped at
-    * `maxAnchorLen` source chars so one broken tag cannot quadratically
-    * re-scan the page tail). Anchors without an href drop — the consumer
-    * is link analytics, and a target-less anchor has no edge.
+  /** Source chars of anchor text kept per anchor: an anchor never closed
+    * would otherwise carry the whole page tail.
     */
-  def anchors(html: String, maxAnchorLen: Int = 2048): Vector[(String, String)] = {
+  private val MaxAnchorLen = 2048
+
+  /** `(href, anchorText)` per `<a href=…>` element in document order. The
+    * text is the element's inner text (tags read as spaces, whitespace
+    * collapsed, entity-decoded) from at most [[MaxAnchorLen]] source chars.
+    * Anchors cannot nest: an anchor closes at `</a>`, at the next `<a>`
+    * start tag, or at the end of the page. Anchors without an href drop —
+    * the consumer is link analytics, and a target-less anchor has no edge.
+    * Hrefs are entity-decoded (the markup spells `&amp;` in query
+    * strings); a trailing anchor tag cut off before its `>` yields nothing.
+    */
+  def anchors(html: String): Vector[(String, String)] = {
     val out = Vector.newBuilder[(String, String)]
-    val n = html.length
-    var i = 0
-    while (i < n) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) i = n
-      else {
-        val c = if (lt + 1 < n) html.charAt(lt + 1) else ' '
-        val after = if (lt + 2 < n) html.charAt(lt + 2) else ' '
-        if ((c == 'a' || c == 'A') && (after.isWhitespace || after == '>' || after == '/')) {
-          val gt = html.indexOf('>', lt)
-          val end = if (gt < 0) n else gt
-          val hrefOpt = HrefAttr.findFirstMatchIn(html.substring(lt, end)).map { m =>
-            val raw =
-              if (m.group(1) != null) m.group(1)
-              else if (m.group(2) != null) m.group(2)
-              else m.group(3)
-            decodeEntities(raw)
-          }
-          if (hrefOpt.isEmpty) i = end + 1
-          else {
-            val bodyStart = end + 1
-            val closeAt = indexOfIgnoreCase(html, "</a", bodyStart)
-            val bodyEnd =
-              if (closeAt < 0) math.min(bodyStart + maxAnchorLen, n)
-              else math.min(closeAt, bodyStart + maxAnchorLen)
-            // strip tags inside the anchor body, collapse whitespace
-            val sb = new StringBuilder
-            var pendingSpace = false
-            var j = bodyStart
-            while (j < bodyEnd) {
-              val ch = html.charAt(j)
-              if (ch == '<') {
-                val g = html.indexOf('>', j)
-                if (g < 0 || g >= bodyEnd) j = bodyEnd
-                else { if (sb.nonEmpty) pendingSpace = true; j = g + 1 }
-              } else if (Character.isWhitespace(ch)) {
-                if (sb.nonEmpty) pendingSpace = true; j += 1
-              } else {
-                if (pendingSpace) { sb.append(' '); pendingSpace = false }
-                sb.append(ch); j += 1
-              }
-            }
-            out += ((hrefOpt.get, decodeEntities(sb.toString)))
-            i = if (closeAt < 0) bodyEnd else closeAt + 1
-          }
-        } else i = lt + 1
-      }
+    var href: String = null // the open anchor's target
+    var textEnd = 0 // source cap of the open anchor's text
+    val text = new TextBuf
+    def close(): Unit = if (href != null) { out += ((href, decodeEntities(text.take()))); href = null }
+    val t = new Tokens(html)
+    while (t.next()) {
+      if (t.isTag) {
+        if (t.name == "a") {
+          close()
+          if (!t.isEnd) { href = t.attr("href"); textEnd = t.end + MaxAnchorLen }
+        } else text.space()
+      } else if (href != null) text.append(html, t.start, math.min(t.end, textEnd))
     }
+    close()
     out.result()
   }
 
+  /** `href` targets of the [[anchors]] in document order: the crawl
+    * frontier of the page.
+    */
+  def links(html: String): Vector[String] = anchors(html).map(_._1)
+
   /** Page-level metadata: title, `<meta name=…>` description/keywords,
     * OpenGraph title, `<link rel=canonical>` href, published time
-    * (article:published_time), and the robots-noindex bit. One tag-level
-    * scan; attribute values are entity-decoded; first occurrence wins
-    * (the browser/crawler convention).
+    * (article:published_time), and the robots-noindex bit. One pass over
+    * the [[Tokens]] events, reading only `meta` and `link` tags; first
+    * occurrence wins (the browser/crawler convention).
     */
   final case class PageMeta(
       title: String, description: String, keywords: String, canonical: String,
       ogTitle: String, published: String, noindex: Boolean)
-
-  /** Case-insensitive attribute lookup inside one tag body. */
-  private def attrOf(tag: String, name: String): String = {
-    var i = 0
-    val n = tag.length
-    while (i < n) {
-      val at = indexOfIgnoreCase(tag, name, i)
-      if (at < 0) return ""
-      // must be a standalone attribute name: preceded by ws/quote/start
-      val before = if (at == 0) ' ' else tag.charAt(at - 1)
-      var p = at + name.length
-      while (p < n && Character.isWhitespace(tag.charAt(p))) p += 1
-      // attribute names are whitespace-separated in valid HTML; accepting a
-      // quote-before match would false-positive on "name=" INSIDE a quoted
-      // attribute value
-      if (Character.isWhitespace(before) && p < n && tag.charAt(p) == '=') {
-        p += 1
-        while (p < n && Character.isWhitespace(tag.charAt(p))) p += 1
-        if (p >= n) return ""
-        val q = tag.charAt(p)
-        if (q == '"' || q == '\'') {
-          val e = tag.indexOf(q, p + 1)
-          return decodeEntities(tag.substring(p + 1, if (e < 0) n else e))
-        }
-        var e = p
-        while (e < n && !Character.isWhitespace(tag.charAt(e)) && tag.charAt(e) != '>') e += 1
-        return decodeEntities(tag.substring(p, e))
-      }
-      i = at + name.length
-    }
-    ""
-  }
 
   def metaOf(html: String): PageMeta = {
     var description = ""
@@ -614,35 +546,22 @@ object Html {
     var ogTitle = ""
     var published = ""
     var noindex = false
-    val n = html.length
-    var i = 0
-    while (i < n) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) i = n
-      else if (html.startsWith("<!--", lt)) {
-        // commented-out markup must not contribute metadata
-        val e = html.indexOf("-->", lt + 4); i = if (e < 0) n else e + 3
-      } else if (html.regionMatches(true, lt, "<meta", 0, 5) ||
-        html.regionMatches(true, lt, "<link", 0, 5)) {
-        val gt = html.indexOf('>', lt)
-        val end = if (gt < 0) n else gt
-        val tag = html.substring(lt, end)
-        if (html.regionMatches(true, lt, "<meta", 0, 5)) {
-          val nm = attrOf(tag, "name").toLowerCase(java.util.Locale.ROOT)
-          val prop = attrOf(tag, "property").toLowerCase(java.util.Locale.ROOT)
-          val content = attrOf(tag, "content")
-          if (nm == "description" && description.isEmpty) description = content
-          else if (nm == "keywords" && keywords.isEmpty) keywords = content
-          else if (prop == "og:title" && ogTitle.isEmpty) ogTitle = content
-          else if (prop == "article:published_time" && published.isEmpty) published = content
-          else if (nm == "robots" &&
-            content.toLowerCase(java.util.Locale.ROOT).contains("noindex")) noindex = true
-        } else {
-          val rel = attrOf(tag, "rel").toLowerCase(java.util.Locale.ROOT)
-          if (rel == "canonical" && canonical.isEmpty) canonical = attrOf(tag, "href")
-        }
-        i = end + 1
-      } else i = lt + 1
+    val t = new Tokens(html)
+    def attr(key: String): String = { val v = t.attr(key); if (v == null) "" else v }
+    def lower(key: String): String = attr(key).toLowerCase(java.util.Locale.ROOT)
+    while (t.next()) if (t.isTag && !t.isEnd) {
+      if (t.name == "meta") {
+        val nm = lower("name")
+        val prop = lower("property")
+        val content = attr("content")
+        if (nm == "description" && description.isEmpty) description = content
+        else if (nm == "keywords" && keywords.isEmpty) keywords = content
+        else if (prop == "og:title" && ogTitle.isEmpty) ogTitle = content
+        else if (prop == "article:published_time" && published.isEmpty) published = content
+        else if (nm == "robots" &&
+          content.toLowerCase(java.util.Locale.ROOT).contains("noindex")) noindex = true
+      } else if (t.name == "link" && lower("rel") == "canonical" && canonical.isEmpty)
+        canonical = attr("href")
     }
     PageMeta(titleOf(html), description, keywords, canonical, ogTitle, published, noindex)
   }

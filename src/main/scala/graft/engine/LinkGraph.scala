@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Crawl-frontier analytics over the page hyperlink graph: host-level edge
@@ -31,19 +31,7 @@ object LinkGraph {
         else graft.core.Html.links(graft.core.Html.decodeBytes(h)).iterator.map(l => (u, l))
       })
       .toDF("src_url", "link")
-    val httpAbs = col("link").rlike("(?i)^https?://")
-    val protoRel = col("link").startsWith("//")
-    val schemed = col("link").rlike("(?i)^[a-z][a-z0-9+.-]*:")
-    val srcHost = Blocklist.hostOf(col("src_url"))
-    pairs
-      .filter(httpAbs || (!schemed && !col("link").startsWith("#")))
-      .select(
-        srcHost.as("src_host"),
-        when(httpAbs, Blocklist.hostOf(col("link")))
-          .when(protoRel, Blocklist.hostOf(concat(lit("https:"), col("link"))))
-          .otherwise(srcHost)
-          .as("dst_host"))
-      .filter(col("src_host") =!= "" && col("dst_host") =!= "")
+    resolveHosts(pairs)
   }
 
   /** [[hostEdges]] plus the link's anchor text:
@@ -65,19 +53,25 @@ object LinkGraph {
           .map { case (l, a) => (u, l, a) }
       })
       .toDF("src_url", "link", "anchor")
-    val httpAbs = col("link").rlike("(?i)^https?://")
-    val protoRel = col("link").startsWith("//")
-    val schemed = col("link").rlike("(?i)^[a-z][a-z0-9+.-]*:")
+    resolveHosts(pairs, col("anchor"))
+  }
+
+  /** The link resolution both edge operators share: `(src_url, link)` rows
+    * become `(src_host, dst_host, rest…)` with the scheme filter, relative
+    * and protocol-relative resolution and the empty-host drop documented
+    * on [[hostEdges]].
+    */
+  private def resolveHosts(pairs: DataFrame, rest: Column*): DataFrame = {
+    val link = col("link")
+    val httpAbs = link.rlike("(?i)^https?://")
+    val schemed = link.rlike("(?i)^[a-z][a-z0-9+.-]*:")
     val srcHost = Blocklist.hostOf(col("src_url"))
+    val dstHost = when(httpAbs, Blocklist.hostOf(link))
+      .when(link.startsWith("//"), Blocklist.hostOf(concat(lit("https:"), link)))
+      .otherwise(srcHost)
     pairs
-      .filter(httpAbs || (!schemed && !col("link").startsWith("#")))
-      .select(
-        srcHost.as("src_host"),
-        when(httpAbs, Blocklist.hostOf(col("link")))
-          .when(protoRel, Blocklist.hostOf(concat(lit("https:"), col("link"))))
-          .otherwise(srcHost)
-          .as("dst_host"),
-        col("anchor"))
+      .filter(httpAbs || (!schemed && !link.startsWith("#")))
+      .select(srcHost.as("src_host") +: dstHost.as("dst_host") +: rest: _*)
       .filter(col("src_host") =!= "" && col("dst_host") =!= "")
   }
 

@@ -9,7 +9,7 @@ import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** WARC (ISO 28500) source/sink — the container format Common Crawl ships
@@ -58,37 +58,18 @@ object Warc {
     * one archive per input partition (empty partitions write nothing), each
     * archive led by a `warcinfo` record. With `gzipPerRecord` every record
     * is its own gzip member (the crawl convention). Returns
-    * (file, n_records) per written archive — an action.
+    * (file, n_records) per written archive, counting response records — an
+    * action.
     */
   def write(df: DataFrame, outDir: String, gzipPerRecord: Boolean = true): Seq[(String, Long)] = {
     val spark = df.sparkSession
-    val conf = new org.apache.spark.SerializableWritable(
-      spark.sparkContext.hadoopConfiguration)
-    val rows = df.select(
-        col("url").cast("string"),
-        col("warc_ts").cast("timestamp"),
-        col("html").cast("binary"))
-      .as[(String, Timestamp, Array[Byte])](
-        Encoders.tuple(Encoders.STRING, Encoders.TIMESTAMP, Encoders.BINARY))
-    rows.mapPartitions { it =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        val pid = TaskContext.getPartitionId()
-        val name = f"part-$pid%05d.warc" + (if (gzipPerRecord) ".gz" else "")
-        val path = new Path(outDir, name)
-        val fs = path.getFileSystem(conf.t)
-        val out = fs.create(path, true)
-        var n = 0L
-        try {
-          writeMember(out, gzipPerRecord, warcinfoRecord(name))
-          it.foreach { case (url, ts, html) =>
-            writeMember(out, gzipPerRecord, responseRecord(url, ts, html))
-            n += 1
-          }
-        } finally out.close()
-        Iterator.single((path.toString, n))
-      }
-    }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong)).collect().toSeq.sorted
+    import spark.implicits._
+    archives(df, outDir, gzipPerRecord).mapPartitions { idx =>
+      var file: String = null
+      var n = 0L
+      idx.foreach { m => file = m.warc_file; if (m.warc_type == "response") n += 1 }
+      if (file == null) Iterator.empty else Iterator.single((file, n))
+    }.collect().toSeq.sorted
   }
 
   /** One member-index row — the engine's .cdx: where each record's bytes
@@ -113,7 +94,13 @@ object Warc {
     * immediately (re-executing the plan rewrites the same deterministic
     * bytes, but the index is the artifact the crawl keeps).
     */
-  def writeIndexed(df: DataFrame, outDir: String, gzipPerRecord: Boolean = true): DataFrame = {
+  def writeIndexed(df: DataFrame, outDir: String, gzipPerRecord: Boolean = true): DataFrame =
+    archives(df, outDir, gzipPerRecord).toDF()
+
+  /** The archive writer behind [[write]] and [[writeIndexed]] (lazy): each
+    * non-empty partition writes one archive and yields its member index.
+    */
+  private def archives(df: DataFrame, outDir: String, gzipPerRecord: Boolean): Dataset[MemberIndex] = {
     val spark = df.sparkSession
     import spark.implicits._
     val conf = new org.apache.spark.SerializableWritable(
@@ -136,7 +123,7 @@ object Warc {
         var pos = 0L
         var rec = 0
         def emit(record: Array[Byte], wtype: String, url: String, ts: Timestamp): Unit = {
-          val n = writeMemberCounted(out, gzipPerRecord, record)
+          val n = writeMember(out, gzipPerRecord, record)
           idx += MemberIndex(path.toString, rec, pos, n, wtype, url, ts)
           pos += n
           rec += 1
@@ -149,7 +136,7 @@ object Warc {
         } finally out.close()
         idx.result().iterator
       }
-    }.toDF()
+    }
   }
 
   /** Per-member gzip at BEST_SPEED: archive staging profiled
@@ -165,7 +152,7 @@ object Warc {
   }
 
   /** Serialize one member and return its exact byte length. */
-  private def writeMemberCounted(out: OutputStream, gzip: Boolean, record: Array[Byte]): Long =
+  private def writeMember(out: OutputStream, gzip: Boolean, record: Array[Byte]): Long =
     if (gzip) {
       // gzip the member to a buffer first: the member's length must be
       // known exactly, and Hadoop output streams do not expose a position
@@ -180,13 +167,6 @@ object Warc {
       out.write(record)
       record.length.toLong
     }
-
-  private def writeMember(out: OutputStream, gzip: Boolean, record: Array[Byte]): Unit =
-    if (gzip) {
-      val gz = new FastGzipOutputStream(out)
-      gz.write(record)
-      gz.finish() // closes THIS member only; the archive stream stays open
-    } else out.write(record)
 
   private def warcinfoRecord(filename: String): Array[Byte] = {
     val body = s"software: graft\r\nisPartOf: synthetic\r\nfilename: $filename\r\n".getBytes(UTF_8)

@@ -63,6 +63,24 @@ class HtmlSpec extends AnyFunSuite {
     }
   }
 
+  test("extraction of WebCorpus pages 0-999 matches its pinned digest") {
+    // SHA-256 over text, blockSpans, provenance and title of every page,
+    // each field length-prefixed: any change to the extracted bytes of any
+    // page changes the digest
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def put(s: String): Unit = {
+      val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      md.update(java.nio.ByteBuffer.allocate(4).putInt(b.length).array())
+      md.update(b)
+    }
+    (0L until 1000L).foreach { i =>
+      val ex = Html.extract(Html.decodeBytes(WebCorpus.page(i).html))
+      put(ex.text); put(ex.blockSpans.mkString(";")); put(ex.provenance.mkString(";")); put(ex.title)
+    }
+    assert(md.digest().map("%02x".format(_)).mkString ==
+      "47608c46cc84182c0fc9f5d44fc13c0123ba18e839f040582b0233f2c14aa873")
+  }
+
   test("title outside <head> does not leak into content") {
     val html = "<html><title>Site Navigation Junk</title><body>" +
       "<p>This ordinary paragraph carries more than eight regular words for the classifier.</p></body></html>"

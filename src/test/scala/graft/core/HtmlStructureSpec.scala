@@ -1,5 +1,7 @@
 package graft.core
 
+import graft.engine.PropCheck
+import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structured extraction from markup: table cells, anchor texts, page
@@ -74,8 +76,9 @@ class HtmlStructureSpec extends AnyFunSuite {
   }
 
   test("anchors: href-less anchors drop; unterminated anchor is capped") {
-    val a = Html.anchors("<a name=\"n\">skip</a><a href=\"/z\">tail text", maxAnchorLen = 4)
-    assert(a == Vector(("/z", "tail")))
+    val body = "tail text " * 300 // 3,000 source chars, never closed
+    val a = Html.anchors("<a name=\"n\">skip</a><a href=\"/z\">" + body)
+    assert(a == Vector(("/z", body.take(2048))))
   }
 
   test("anchors: case-insensitive tag and closing") {
@@ -123,5 +126,47 @@ class HtmlStructureSpec extends AnyFunSuite {
   test("metaOf: unquoted attribute values parse") {
     val m = Html.metaOf("<meta name=description content=short>")
     assert(m.description == "short")
+  }
+
+  // --- all scans ---
+
+  test("no scan reads markup inside comments or raw-text elements") {
+    // random pages from whole fragments; the sentinel is planted only in
+    // comment and raw-text bodies, so any scan that reports it misread one.
+    // Each fragment's own hrefs and meta fields are known, so the scans
+    // are also checked against what the page says outside those bodies.
+    val S = "zqxsentinel"
+    val hrefOf = Map("<a href=\"/u1\">" -> "/u1", "<A HREF='/u2'>" -> "/u2",
+      "<a class=x href=/u3>" -> "/u3", "<a data-href=\"/trap\" href=\"/real\">" -> "/real",
+      "<a title=\"x>y\" href=\"/q\">" -> "/q")
+    val desc = "<meta name=\"description\" content=\"d\">"
+    val keywords = "<META NAME=keywords CONTENT='k'>"
+    val canonical = "<link rel=canonical href=\"/c\">"
+    val fragment = Gen.oneOf(
+      Gen.oneOf("alpha beta", " gamma\n", "x &amp; y", "delta"),
+      Gen.oneOf("<p>", "</p>", "<DIV class=\"c\">", "</div>", "<br/>", "<h2>", "</H2>", "<li>"),
+      Gen.oneOf(hrefOf.keys.toSeq ++ Seq("<a name=n>", "</a>", "</A>")),
+      Gen.oneOf("<table>", "<tr>", "<td>", "<TH>", "</td>", "</table>"),
+      Gen.oneOf(desc, keywords, canonical, "<metadata name=\"description\" content=\"no\">",
+        "<linkage rel=canonical href=\"/no\">", "<title>", "</title>"),
+      Gen.oneOf(s"<!-- $S <a href=\"/$S\">$S</a> -->", s"<!--<meta name=keywords content=$S>-->",
+        s"<!--<title>$S</title><td>$S-->"),
+      Gen.oneOf(s"<script>var s = '<a href=\"/$S\">$S</a>';</script>", s"<STYLE>.$S{}</STYLE>",
+        s"<noscript><a href=/$S>$S</a><title>$S</title></noscript>", s"<svg><title>$S</title></svg>",
+        s"<template><td>$S</td><link rel=canonical href=/$S></template>"),
+      Gen.oneOf("<div data-cfg='{\"op\":\">\"}'>", "<img alt=\"w > h\">"))
+    val tail = Gen.oneOf("", "<a href=\"/tail", "<p class='x", s"<!-- $S", s"<script>$S", "<td")
+    val page = for { fs <- Gen.listOf(fragment); t <- tail } yield (fs, fs.mkString + t)
+    PropCheck(Prop.forAllNoShrink(page) { case (fs, h) =>
+      val m = Html.metaOf(h)
+      val read = Html.blocks(h).map(_.text) ++ Html.tables(h).map(_.text) ++ Html.links(h) ++
+        Html.anchors(h).flatMap { case (l, t) => Seq(l, t) } ++
+        Seq(Html.titleOf(h), m.title, m.description, m.keywords, m.canonical, m.ogTitle, m.published)
+      def field(frag: String, value: String) = if (fs.contains(frag)) value else ""
+      !read.exists(_.contains(S)) &&
+        Html.links(h) == Html.anchors(h).map(_._1) && Html.links(h) == fs.flatMap(hrefOf.get) &&
+        m.description == field(desc, "d") && m.keywords == field(keywords, "k") &&
+        m.canonical == field(canonical, "/c")
+    })
   }
 }

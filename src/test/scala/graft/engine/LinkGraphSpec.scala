@@ -20,6 +20,10 @@ class LinkGraphSpec extends AnyFunSuite {
       |<abbr title="a tag starting with a but not an anchor">x</abbr>
       |<a href="#frag">five</a>
       |<a href="mailto:u@h.tld">six</a>
+      |<!-- <a href="https://commented.example/">gone</a> -->
+      |<script>var s = '<a href="https://script.example/">gone</a>';</script>
+      |<a data-href="/trap" href="/real">seven</a>
+      |<a title="a>b" href="/k">eight</a>
       |<a href="https://tail.example/unterminated""".stripMargin
     val got = graft.core.Html.links(html)
     // the final anchor's quoted value is unterminated — no crawl target
@@ -28,7 +32,9 @@ class LinkGraphSpec extends AnyFunSuite {
       "https://b.example/y",
       "/rel/path",
       "#frag",
-      "mailto:u@h.tld"))
+      "mailto:u@h.tld",
+      "/real",
+      "/k"))
   }
 
   private def page(url: String, hrefs: String*): (String, Array[Byte]) =

@@ -59,4 +59,22 @@ class ExpressionsSpec extends AnyFunSuite {
       texts.zip(got).forall { case (t, n) => counts(t).forall(_ == n) }
     }, minSuccessful = 10)
   }
+
+  test("token_count runs StringKernels.tokenCount inside whole-stage codegen") {
+    val spark = graft.engine.SparkTestBase.spark
+    import org.apache.spark.sql.execution.debug._
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val aqe = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(aqe)
+    try {
+      // AQE off: the executed plan is the codegen'd plan itself, not an
+      // adaptive wrapper whose stages are planned only at run time
+      spark.conf.set(aqe, "false")
+      val df = spark.range(4)
+        .select(GraftFunctions.token_count(concat(lit("w "), col("id").cast("string"))).as("n"))
+      val code = df.queryExecution.debug.codegenToSeq().map(_._2).mkString("\n")
+      assert(code.contains("graft.functions.StringKernels.tokenCount("))
+      assert(df.collect().map(_.getInt(0)).toSeq == Seq(2, 2, 2, 2))
+    } finally prev.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+  }
 }
