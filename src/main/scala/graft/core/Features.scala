@@ -87,14 +87,6 @@ object Features {
     n
   }
 
-  // Locale.ROOT: a tr-TR default locale would fold "I" to dotless ı and
-  // silently miss every i-bearing substring feature (Python str.lower is
-  // locale-independent)
-  def startsWithSubstring(s: String, sub: String): Int =
-    if (s.toLowerCase(java.util.Locale.ROOT).startsWith(sub)) 1 else 0
-  def endsWithSubstring(s: String, sub: String): Int =
-    if (s.toLowerCase(java.util.Locale.ROOT).endsWith(sub)) 1 else 0
-
   /** Days since 2010-01-01 for `DD.MM.YYYY`-shaped strings, month-first
     * disambiguation like the reference's pandas parse
     * (information_extraction.py:994-1022); 1 when the date IS the epoch.

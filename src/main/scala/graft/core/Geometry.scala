@@ -289,15 +289,6 @@ object Geometry {
     else Some(Box(x0, x1, y0, y1, page, if (sawMulti) -1 else line))
   }
 
-  /** Chars fully inside a selection box on a page (information_extraction.py:157-193). */
-  def selectChars(chars: Seq[CharBox], sel: Box): Seq[CharBox] =
-    chars.filter(cb =>
-      cb.page == sel.page && sel.x0 <= cb.x0 && cb.x1 <= sel.x1 && sel.y0 <= cb.y0 && cb.y1 <= sel.y1)
-
-  /** Reading order: (page, line, x0) ascending — the offset-order contract. */
-  def readingOrder(boxes: Seq[Box]): Vector[Box] =
-    boxes.toVector.sortBy(b => (b.page, b.line, b.x0))
-
   /** X2 spatial features of a span box relative to its page
     * (data.py:1070-1088; information_extraction.py:1622-1625): absolutes,
     * area, quadrant-two area, page-relative ratios, and the span's relative

@@ -29,12 +29,6 @@ object RegexGen {
     multiSpace.matcher(first).replaceAll(Matcher.quoteReplacement("[ ]{2,}"))
   }
 
-  /** OR-join tokens sorted by length desc into one non-capturing group
-    * (regex.py:12-15). Stable for equal lengths (input order preserved).
-    */
-  def mergeRegex(tokens: Seq[String]): String =
-    tokens.sortBy(t => -t.length).mkString("(?:", "|", ")")
-
   private val capLetter = Pattern.compile("[A-ZÄÖÜ]")
   private val capRun = Pattern.compile("(\\[A-ZÄÖÜ\\]){2,}")
   private val lowLetter = Pattern.compile("[a-zäöüß]")

@@ -74,10 +74,6 @@ object TextOffsets {
     n
   }
 
-  /** First-start/last-end offsets per page (information_extraction.py:56-68). */
-  def offsetsPerPage(text: String): Vector[(Int, Int)] =
-    pageSpans(text).map(s => (s.start, s.end))
-
   /** Complement of annotated ranges inside [start, end] — the NO_LABEL gap
     * walk. Semantics match konfuzio_sdk/utils.py:693-749 including its
     * boundary quirks (verified against the reference doctest):

@@ -22,12 +22,6 @@ object Annotations {
       revised: Boolean,
       confidence: Option[Double])
 
-  /** data.py:957-966: same label + identical span set == duplicate (the
-    * correctness flags do NOT enter the equality).
-    */
-  def isDuplicate(a: Ann, b: Ann): Boolean =
-    a.label == b.label && a.spans.sorted == b.spans.sorted
-
   /** add_annotation semantics (data.py:1957-1971): adding a duplicate is an
     * error. Returns Left(existing) on the first rejected candidate.
     */

@@ -274,7 +274,7 @@ object Dedup {
     * packed-min; the repeated-window vocabulary BROADCASTS, so the
     * corpus-side join never shuffles — it must fit executor memory (the
     * boilerplate-dominated web-corpus case, the same bet as dedupLines'
-    * FirstsMode.Broadcast); the final starts-per-doc table only holds
+    * broadcast side); the final starts-per-doc table only holds
     * AFFECTED documents, so AQE broadcasts it into the reassembly join in
     * the normal case. Cleanup is O(T × W) per doc
     * (W = duplicate windows in that doc) via built-in `filter`/`exists` —
@@ -372,25 +372,21 @@ object Dedup {
     * join's probe-side hash on `line` — UNLESS the firsts table
     * broadcasts, in which case the corpus lines never shuffle for the
     * join at all (two keyed exchanges total, and reduce-side boilerplate
-    * skew structurally cannot occur). `firstsMode` picks the path:
+    * skew structurally cannot occur). The path is chosen by MEASUREMENT:
+    * the firsts aggregate is materialized once, one small count+size
+    * action estimates the repeated-line vocabulary's in-memory size, and
+    * the vocabulary broadcasts when that estimate fits
+    * `broadcastMaxBytes` (the normal web-corpus case: boilerplate
+    * vocabulary ≪ corpus, so the skew-prone corpus-side shuffle never
+    * exists); above it the join stays a shuffled join, for adversarial
+    * corpora where even the repeated vocabulary is huge. The operator is
+    * therefore eager (one action at build time).
     *
-    *  - [[FirstsMode.Auto]] (default): MEASURE the repeated-line
-    *    vocabulary — persist the firsts aggregate, run one small count+
-    *    size action over it, and broadcast when the estimated in-memory
-    *    size fits `broadcastMaxBytes`. This makes the operator eager
-    *    (one action at build time) and leaves the firsts table cached
-    *    for the downstream join; the normal web-corpus case (boilerplate
-    *    vocabulary ≪ corpus) selects broadcast and the skew-prone
-    *    corpus-side shuffle never exists.
-    *  - [[FirstsMode.Broadcast]]: force the broadcast, stay lazy.
-    *  - [[FirstsMode.Shuffle]]: force the SMJ/hash path, stay lazy — for
-    *    adversarial corpora where even the repeated vocabulary is huge.
-    *
-    * Auto exists because AQE cannot rescue this shape at runtime: the
-    * build side is a post-shuffle aggregation on the join key, which
-    * OptimizeSkewedJoin never matches (proven by experiment in
-    * tools/ScaleStress), and AQE's skew stats measure COMPRESSED bytes
-    * which boilerplate defeats by 50-100×.
+    * The choice is measured because AQE cannot rescue this shape at
+    * runtime: the build side is a post-shuffle aggregation on the join
+    * key, which OptimizeSkewedJoin never matches, and AQE's skew stats
+    * measure COMPRESSED bytes which boilerplate defeats by 50-100× (the
+    * round-4 q56 audit in PLANS.md).
     *
     * A document whose every line is deduplicated away (an exact duplicate
     * of earlier documents) disappears from the output entirely — the
@@ -408,17 +404,8 @@ object Dedup {
     * `maxLines` to widen the id range. Violations fail the job loudly
     * rather than silently mis-ordering first occurrences.
     */
-  sealed trait FirstsMode
-  object FirstsMode {
-    /** Measure the repeated-line vocabulary and broadcast when it fits. */
-    case object Auto extends FirstsMode
-    case object Broadcast extends FirstsMode
-    case object Shuffle extends FirstsMode
-  }
-
   def dedupLines(df: DataFrame, idCol: String, textCol: String,
-      maxLines: Long = 1000000L, firstsMode: FirstsMode = FirstsMode.Auto,
-      broadcastMaxBytes: Long = 64L << 20): DataFrame = {
+      maxLines: Long = 1000000L, broadcastMaxBytes: Long = 64L << 20): DataFrame = {
     val id = col(idCol).cast("long")
     val maxId = Long.MaxValue / maxLines
     val lines = df
@@ -444,36 +431,30 @@ object Dedup {
       // by definition repeated boilerplate, which compresses 50-100× in
       // shuffle files — AQE's skew detection measures COMPRESSED partition
       // bytes, so byte-based skew-split can stay blind to a 5× row-count
-      // skew here (observed; tools/ScaleStress proves it by flipping
-      // spark.shuffle.compress). The scale mitigation is therefore NOT
-      // AQE but broadcasting the firsts: when the repeated-line
-      // vocabulary fits (the normal web-corpus case), the corpus lines
-      // never shuffle on `line` at all and reduce-side skew cannot exist.
+      // skew here (observed in the round-4 q56 audit, PLANS.md). The
+      // scale mitigation is therefore NOT AQE but broadcasting the
+      // firsts: when the repeated-line vocabulary fits (the normal
+      // web-corpus case), the corpus lines never shuffle on `line` at all
+      // and reduce-side skew cannot exist.
       .filter(col("__n") > 1)
       .drop("__n")
-    val buildSide = firstsMode match {
-      case FirstsMode.Broadcast => broadcast(firsts)
-      case FirstsMode.Shuffle => firsts
-      case FirstsMode.Auto =>
-        // one eager materialization of the aggregate (localCheckpoint, NOT
-        // persist: a persist inside an operator has no unpersist point and
-        // would pin one CacheManager entry per call for the session's
-        // lifetime; checkpoint blocks are released by the ContextCleaner
-        // when the plan is GC'd) — the measured rows then feed the
-        // downstream join from the materialized blocks instead of
-        // recomputing the explode+groupBy. Same preemption tradeoff as the
-        // q17/q59 checkpoint sites: a block lost to executor
-        // decommissioning fails the job LOUDLY (lineage is truncated) —
-        // on preemptible executors prefer the lazy Broadcast/Shuffle
-        // modes. Estimated in-memory size = UTF-16 line chars + per-row
-        // object overhead.
-        val f = firsts.localCheckpoint(true)
-        val m = f.agg(
-          coalesce(sum(length(col("line")).cast("long")), lit(0L)),
-          count(lit(1))).head
-        val estBytes = m.getLong(0) * 2 + m.getLong(1) * 48
-        if (estBytes <= broadcastMaxBytes) broadcast(f) else f
-    }
+    // one eager materialization of the aggregate (localCheckpoint, NOT
+    // persist: a persist inside an operator has no unpersist point and
+    // would pin one CacheManager entry per call for the session's
+    // lifetime; checkpoint blocks are released by the ContextCleaner
+    // when the plan is GC'd) — the measured rows then feed the
+    // downstream join from the materialized blocks instead of
+    // recomputing the explode+groupBy. Same preemption tradeoff as the
+    // q17/q59 checkpoint sites: a block lost to executor
+    // decommissioning fails the job LOUDLY (lineage is truncated).
+    // Estimated in-memory size = UTF-16 line chars + per-row object
+    // overhead.
+    val f = firsts.localCheckpoint(true)
+    val m = f.agg(
+      coalesce(sum(length(col("line")).cast("long")), lit(0L)),
+      count(lit(1))).head
+    val estBytes = m.getLong(0) * 2 + m.getLong(1) * 48
+    val buildSide = if (estBytes <= broadcastMaxBytes) broadcast(f) else f
     lines.join(buildSide, Seq("line"), "left")
       .filter(col("first_pos").isNull || col("first_pos") === col("pos"))
       .groupBy(col("id").as(idCol))

@@ -66,7 +66,7 @@ object HeavyHitters {
       .limit(k)
     // NOTE: this count re-executes the upstream lineage of `df`; callers
     // whose input is an expensive chain should localCheckpoint it first
-    // (the FirstsMode.Auto tradeoff).
+    // (the dedupLines firsts-checkpoint tradeoff).
     val n = keys.count()
     // witness: a full k rows AND kth_cnt * counters > N ==> no
     // non-candidate can reach the k-th count (MG: non-candidates have

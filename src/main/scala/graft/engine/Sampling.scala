@@ -297,7 +297,7 @@ object Sampling {
     * assignment (which covers only pair-graph members, typically a small
     * fraction of the corpus) + the narrow split expression — the corpus
     * never shuffles, and the dup-graph node set must fit executor memory
-    * (the bet [[Dedup.dedupLines]]' FirstsMode.Broadcast makes for its
+    * (the bet [[Dedup.dedupLines]]' broadcast side makes for its
     * repeated-line vocabulary).
     *
     * Contract: `assignment.id` unique (resolveClusters' groupBy output);

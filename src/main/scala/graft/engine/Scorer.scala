@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.core.{Features, Normalize, Span}
+import graft.core.{Normalize, Span}
 
 /** Deterministic per-span classifier: regex/normalization predicates + a
   * fixed-weight logistic over the span feature vector. Replaces the
@@ -144,10 +144,4 @@ object Scorer {
     }
     out.result()
   }
-
-  /** Full feature vector for a span — exposed for the feature-stage query
-    * surface (X1), same vector the logistic would consume when trained.
-    */
-  def featuresOf(text: String, span: Span): Array[Double] =
-    Features.convertToFeat(text.substring(span.start, span.end))
 }

@@ -109,13 +109,6 @@ object AnnIndexJob {
     Similarity.ivfTopKIndexed(cells, probes, k)
   }
 
-  // query-surface cache: one quantizer per corpus key per JVM, so repeated
-  // queries (bench trials, interactive sessions) never refit
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Similarity.IvfIndex]()
-
-  def cachedIndex(key: String, corpus: Dataset[(Long, Array[Float])], nCells: Int = 16): Similarity.IvfIndex =
-    cache.computeIfAbsent(key, _ => Similarity.buildIvfIndexLocal(corpus, nCells))
-
   /** [[build]] once per corpus key per JVM ([[Staging.cachedDir]]). */
   def cachedIndexDir(key: String, spark: SparkSession,
       corpus: Dataset[(Long, Array[Float])], nCells: Int = 16): String =

@@ -206,8 +206,8 @@ object DedupIndexJob {
     * The batch lineage is evaluated once per branch (bloom-negative and
     * candidate); pass `materialize = true` to localCheckpoint the hashed
     * batch first when the upstream batch plan is expensive (e.g. already a
-    * long curation chain) — same tradeoff as FirstsMode.Auto in
-    * [[graft.engine.Dedup.dedupLines]].
+    * long curation chain) — same tradeoff as the measured firsts
+    * checkpoint in [[graft.engine.Dedup.dedupLines]].
     */
   def novelAgainst(
       spark: SparkSession,

@@ -82,28 +82,29 @@ object FixtureGoldenJob {
       2, 2, firstWord = true, acrossLines = false, Nil, Nil))
   }
 
-  /** Training hyperparameters of the composed golden — frozen once the
-    * tuple set is pinned. `weightPower` tempers the balanced class weights
-    * (1.0 = the reference's fully-balanced; 0.5 = sqrt-tempered, trading a
-    * little recall on rare labels for far fewer background false
-    * positives — the regularization-free linear analog of the RF's
-    * training-set memorization on this 5-doc corpus).
-    */
-  final case class Hyper(iters: Int = 80, lr: Double = 1.0, l2: Double = 1e-6,
-      weightPower: Double = 0.4, momentum: Double = 0.9)
+  // Training hyperparameters of the composed golden — frozen once the
+  // tuple set is pinned. `WeightPower` tempers the balanced class weights
+  // (1.0 = the reference's fully-balanced; 0.5 = sqrt-tempered, trading a
+  // little recall on rare labels for far fewer background false
+  // positives — the regularization-free linear analog of the RF's
+  // training-set memorization on this 5-doc corpus).
+  private val Iters = 80
+  private val Lr = 1.0
+  private val L2 = 1e-6
+  private val WeightPower = 0.4
+  private val Momentum = 0.9
 
   /** Train the multiclass scorer on the fixture training split. */
-  def train(spark: SparkSession, root: String = DefaultRoot,
-      trainIds: Seq[String] = TrainIds, hyper: Hyper = Hyper()): TrainScorerJob.FittedK = {
+  def train(spark: SparkSession, root: String = DefaultRoot): TrainScorerJob.FittedK = {
     val dim = FeatureFrame.width()
     // one doc per partition (partial-gradient combine order is fixed), the
     // per-partition arrays collected ONCE: 5 payslips of ~270-wide frame
-    // rows are a few MB — a bounded collect — and the `iters`-step fit then
+    // rows are a few MB — a bounded collect — and the `Iters`-step fit then
     // runs on the driver via fitSoftmaxLocal: one Spark job instead of one
     // per step (measured: 80 per-step jobs of milliseconds of arithmetic
     // each were ~the whole train wall).
     val parts: IndexedSeq[Array[ExampleS]] = spark.sparkContext
-      .parallelize(trainIds, trainIds.length)
+      .parallelize(TrainIds, TrainIds.length)
       .mapPartitionsWithIndex { (pid, it) =>
         val rows = it.flatMap { id =>
           val doc = FixtureProject.loadDoc(root, id)
@@ -129,12 +130,12 @@ object FixtureGoldenJob {
       }
     val classes = counts.keys.toArray.sorted
     val countArr = classes.map(counts)
-    val weights = TrainScorerJob.balancedWeights(countArr).map(w => math.pow(w, hyper.weightPower))
+    val weights = TrainScorerJob.balancedWeights(countArr).map(w => math.pow(w, WeightPower))
     val classIdx = classes.zipWithIndex.toMap
     val ks = parts.map(_.map(ex =>
       TrainScorerJob.ExampleK(classIdx(ex.label), ex.features)))
     TrainScorerJob.fitSoftmaxLocal(ks, classes.length, dim, weights, classes = classes,
-      iters = hyper.iters, lr = hyper.lr, l2 = hyper.l2, momentum = hyper.momentum)
+      iters = Iters, lr = Lr, l2 = L2, momentum = Momentum)
   }
 
   /** Extract one fixture doc with a fitted model: predict_proba → drop
@@ -188,20 +189,19 @@ object FixtureGoldenJob {
     new java.util.concurrent.ConcurrentHashMap[String, Vector[ExtractedTuple]]()
 
   /** The full composed golden: train on the 5 fixture payslips, extract
-    * TEST_DOCUMENT_ID. Cached per (root, docId) for the process lifetime.
+    * TEST_DOCUMENT_ID. Cached per root for the process lifetime.
     */
-  def trainAndExtract(spark: SparkSession, root: String = DefaultRoot,
-      docId: String = ExtractId, hyper: Hyper = Hyper()): Vector[ExtractedTuple] = {
+  def trainAndExtract(spark: SparkSession, root: String = DefaultRoot): Vector[ExtractedTuple] = {
     // the multi-minute train+extract runs OUTSIDE the map's bin lock
     // (computeIfAbsent would hold it and block unrelated keys in the same
     // bin for the whole run); a racing duplicate computation is tolerable —
     // the job is deterministic, putIfAbsent keeps the first result
-    val key = s"$root#$docId#$hyper"
+    val key = s"$root#$ExtractId"
     val hit = cache.get(key)
     if (hit != null) hit
     else {
       val labelDefs = FixtureProject.labels(root).map(l => l.name -> l).toMap
-      val computed = extract(spark, train(spark, root, TrainIds, hyper), labelDefs, root, docId)
+      val computed = extract(spark, train(spark, root), labelDefs, root, ExtractId)
       val prev = cache.putIfAbsent(key, computed)
       if (prev != null) prev else computed
     }

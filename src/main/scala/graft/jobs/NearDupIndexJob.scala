@@ -101,19 +101,16 @@ object NearDupIndexJob {
     Meta(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4))
   }
 
-  /** Near-duplicate candidates of a batch against the index, verified by
+  /** Near-duplicate candidates of a batch against the index, scored by
     * estimated Jaccard from the persisted signatures. Returns
-    * `ScoredPair(a = batch id, b = indexed id, estimated_jaccard)` with
-    * estimate ≥ `estThreshold`.
-    *
-    * `estThreshold = 0.0` (default) emits EVERY banded candidate — the
-    * right setting when a downstream exact verify joins the texts back
-    * (q100's shape: estimation noise then cannot drop a true pair the
-    * bands surfaced). Production probes without an exact stage set it to
-    * `threshold − ~0.05` to bound the candidate volume.
+    * `ScoredPair(a = batch id, b = indexed id, estimated_jaccard)` for
+    * EVERY banded candidate, unfiltered: a downstream exact verify joins
+    * the texts back (q100's shape), so estimation noise cannot drop a true
+    * pair the bands surfaced. A caller without an exact stage filters on
+    * `estimated_jaccard` itself.
     */
   def probe(spark: SparkSession, batch: Dataset[(Long, String)],
-      indexDir: String, estThreshold: Double = 0.0): Dataset[Dedup.ScoredPair] = {
+      indexDir: String): Dataset[Dedup.ScoredPair] = {
     import spark.implicits._
     val meta = readMeta(spark, indexDir)
     val batchSigs =
@@ -151,7 +148,6 @@ object NearDupIndexJob {
       .map { case (a, b, sa, sb) =>
         Dedup.ScoredPair(a, b, Fingerprint.estimatedJaccard(sa, sb))
       }
-      .filter(_.estimated_jaccard >= estThreshold)
   }
 
   /** Fold a batch into the index WITHOUT rebuilding it: ids not yet

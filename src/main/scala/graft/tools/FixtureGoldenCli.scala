@@ -9,6 +9,8 @@ import org.apache.spark.sql.SparkSession
   * truth, and the overlap with the reference's 20 golden tuples
   * (entity_results_data, tests/trainer/test_information_extraction.py:78-99).
   * Usage: runMain graft.tools.FixtureGoldenCli [fixtureRoot]
+  * (`fixtureRoot` may be relative; it resolves against the working
+  * directory and is printed on the first line.)
   */
 object FixtureGoldenCli {
 
@@ -36,14 +38,10 @@ object FixtureGoldenCli {
     ("Auszahlungsbetrag", 3777, 3785))
 
   def main(args: Array[String]): Unit = {
-    val root = args.headOption.filter(_.startsWith("/")).getOrElse(FixtureGoldenJob.DefaultRoot)
-    // optional hyperparameter sweep: iters lr l2 weightPower
-    val hp = args.filterNot(_.startsWith("/"))
-    val hyper =
-      if (hp.length >= 4)
-        FixtureGoldenJob.Hyper(hp(0).toInt, hp(1).toDouble, hp(2).toDouble, hp(3).toDouble,
-          if (hp.length >= 5) hp(4).toDouble else 0.0)
-      else FixtureGoldenJob.Hyper()
+    val root = java.nio.file.Paths
+      .get(args.headOption.getOrElse(FixtureGoldenJob.DefaultRoot))
+      .toAbsolutePath.normalize.toString
+    println(s"fixture root: $root")
     val spark = SparkSession.builder()
       .appName("graft-fixture-golden")
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
@@ -53,7 +51,7 @@ object FixtureGoldenCli {
     spark.sparkContext.setLogLevel("WARN")
     try {
       val t0 = System.nanoTime()
-      val got = FixtureGoldenJob.trainAndExtract(spark, root, FixtureGoldenJob.ExtractId, hyper)
+      val got = FixtureGoldenJob.trainAndExtract(spark, root)
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"extracted ${got.length} tuples in $secs%.1f s")
       got.foreach(t => println(f"  (${t.label}%s, ${t.start}%d, ${t.end}%d)  conf=${t.confidence}%.4f  '${t.offset_string}%s'"))

@@ -1,5 +1,7 @@
 package graft.engine
 
+import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
 class DedupSimilaritySpec extends AnyFunSuite {
@@ -110,19 +112,53 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(e.getMessage.contains("__graft_keep_first_rn"))
   }
 
-  test("dedupLines firsts modes (Auto/Broadcast/Shuffle) return identical results") {
+  /** dedupLines' contract computed on the driver: a non-whitespace line is
+    * kept only at its smallest (id, idx); whitespace-only lines (space, tab,
+    * CR, FF) are always kept; a doc left with no lines is dropped.
+    */
+  private def naiveDedupLines(docs: Seq[(Long, String)]): Set[(Long, String, Long)] = {
+    def isBlank(l: String) = l.forall(c => c == ' ' || c == '\t' || c == '\r' || c == '\f')
+    val lines = for {
+      (id, text) <- docs if text != null
+      (line, idx) <- text.split("\n", -1).toSeq.zipWithIndex
+    } yield (id, idx, line)
+    val first = lines.filterNot(l => isBlank(l._3)).groupBy(_._3)
+      .map { case (line, occ) => line -> occ.map(o => (o._1, o._2)).min }
+    lines.filter(l => isBlank(l._3) || first(l._3) == ((l._1, l._2)))
+      .groupBy(_._1).map { case (id, kept) =>
+        val ls = kept.sortBy(_._2).map(_._3)
+        (id, ls.mkString("\n"), ls.length.toLong)
+      }.toSet
+  }
+
+  test("dedupLines: broadcast and shuffle sides match a naive reference") {
     import spark.implicits._
-    val docs = Seq(
-      1L -> "SHARED HEADER\nunique one\n\nfooter A",
-      2L -> "SHARED HEADER\nunique two\n\nfooter A",
-      3L -> "unique three\nfooter A\nSHARED HEADER",
-    ).toDF("id", "text")
-    def res(m: Dedup.FirstsMode) = Dedup.dedupLines(docs, "id", "text", firstsMode = m)
-      .select("id", "text", "n_lines_kept").as[(Long, String, Long)].collect().toSet
-    val auto = res(Dedup.FirstsMode.Auto)
-    assert(auto == res(Dedup.FirstsMode.Broadcast))
-    assert(auto == res(Dedup.FirstsMode.Shuffle))
-    assert(auto.map(_._1) == Set(1L, 2L, 3L))
+    val line = Gen.frequency(
+      4 -> Gen.oneOf("SHARED HEADER", "footer A", "nav | home", "x", "SHARED HEADER\r"),
+      2 -> Gen.oneOf("", " ", "\t", "\r", "\f", " \t\r\f"),
+      2 -> Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, Gen.alphaLowerChar).map(_.mkString)))
+    val doc: Gen[String] = Gen.frequency(
+      1 -> Gen.const(null),
+      1 -> Gen.const(""),
+      8 -> Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, line).map(_.mkString("\n"))))
+    val corpus = for {
+      n <- Gen.choose(1, 8)
+      ids <- Gen.pick(n, 0L until 1000L)
+      texts <- Gen.listOfN(n, doc)
+    } yield ids.toSeq.zip(texts)
+    def run(docs: Seq[(Long, String)], maxBytes: Long) =
+      Dedup.dedupLines(docs.toDF("id", "text"), "id", "text", broadcastMaxBytes = maxBytes)
+        .select("id", "text", "n_lines_kept").as[(Long, String, Long)].collect().toSet
+    // planner auto-broadcast off: a zero-byte cap really takes the shuffle join
+    SparkTestBase.withoutAutoBroadcast {
+      PropCheck(Prop.forAllNoShrink(corpus) { docs =>
+        val broadcastSide = run(docs, 64L << 20)
+        val shuffleSide = run(docs, 0L)
+        val want = naiveDedupLines(docs)
+        (broadcastSide == want && shuffleSide == want) :|
+          s"docs=$docs broadcast=$broadcastSide shuffle=$shuffleSide want=$want"
+      }, minSuccessful = 25)
+    }
   }
 
   test("dedupLines Auto broadcasts a small vocabulary and shuffles past the cap") {
