@@ -1428,9 +1428,10 @@ object SparkEntry {
           (i, buf.mkString("\n"), lang, dom)
         }
         .toDF("doc_id", "text", "lang", "reg_domain")
-      // one eager checkpoint: the LM fit, the scalar collect, and the
-      // scoring pass each execute the frame — without it the narrow
-      // gate+wrap+dedup chain re-runs three times (q59's `clean` lesson)
+      // one eager checkpoint: the LM fit and the scoring pass each
+      // execute the frame (the model totals reuse the fit's exchange) —
+      // without it the narrow gate+wrap+dedup chain runs twice (q59's
+      // `clean` lesson)
       val deduped = Dedup.dedupLinesWithinDoc(wrapped, "text")
         .withColumn("flat", regexp_replace(col("text"), "\n", " "))
         .localCheckpoint(true)
@@ -1681,12 +1682,12 @@ object SparkEntry {
           (p.url.substring(p.url.lastIndexOf('/') + 1).toLong, et, nTok.toLong)
         })
         .toDF("doc_id", "text", "n_tokens")
-      // materialize: the batch lineage here is parse+extract — novelAgainst
-      // otherwise re-executes it for the touched-bucket collect AND both
-      // output branches (measured 1.5x the checkpointed wall at 100x:
-      // 13.9 s -> 9.4 s, same-JVM staged archives)
-      graft.jobs.DedupIndexJob.novelAgainst(s, extracted, "text", idx,
-          materialize = true)
+        // one eager checkpoint: the batch lineage here is parse+extract —
+        // novelAgainst otherwise re-executes it for the touched-bucket
+        // collect AND both output branches (measured 1.5x the checkpointed
+        // wall at 100x: 13.9 s -> 9.4 s, same-JVM staged archives)
+        .localCheckpoint(true)
+      graft.jobs.DedupIndexJob.novelAgainst(s, extracted, "text", idx)
         .select(col("doc_id"), col("n_tokens"),
           sha2(coalesce(col("text"), lit("")), 256).as("sha"))
         .orderBy("doc_id")

@@ -562,20 +562,6 @@ object Dedup {
       .filter(_.estimated_jaccard >= threshold)
   }
 
-  /** Full MinHash-LSH near-dup pipeline over (id, text). EAGER: the
-    * signature table is cached for the two passes (bands, verify), the
-    * small pair result is materialized (localCheckpoint), and the
-    * signature cache is released before returning — repeated job-level
-    * calls don't accumulate executor memory. Tradeoff: materialization
-    * truncates lineage, so on a preemptible cluster an executor loss after
-    * return makes the result blocks unrecomputable.
-    */
-  def minhashNearDups(ds: Dataset[(Long, String)], threshold: Double = 0.8): Dataset[ScoredPair] = {
-    val sigs = signatures(ds).persist()
-    try verifyPairs(sigs, candidatePairs(sigs), threshold).localCheckpoint(true)
-    finally sigs.unpersist()
-  }
-
   /** Near-dup pairs by SimHash hamming distance ≤ maxDist, using
     * 4-block pigeonhole keys (one shuffle on the block key). Buckets larger
     * than `maxBucket` (boilerplate-identical shells all share a 16-bit
@@ -733,7 +719,7 @@ object Dedup {
   }
 
   /** Connected-component resolution over a near-duplicate pair graph — the
-    * stage that turns pair emission ([[minhashNearDups]] /
+    * stage that turns pair emission ([[candidatePairs]] + [[verifyPairs]] /
     * [[simhashNearDups]] / [[embeddingNearDups]]) into an actual
     * deduplication: transitive chains A~B, B~C collapse onto ONE keeper
     * (the component's minimum id) even when A and C never formed a pair
@@ -865,12 +851,13 @@ object Dedup {
     * `Dedup.dedupNearText(corpus, "doc_id", "text")`; q59's flagship
     * stage routes through it.
     *
-    * EAGER (like its parts): signatures persist for the two passes,
-    * exactJaccard checkpoints the shingle table, and cluster resolution
-    * materializes the graph — the returned frame is `df` minus a small
-    * non-keeper table, lazily composable downstream. The text input is
-    * evaluated by two passes (signatures, shingles); feed it from a scan
-    * or checkpoint it first. `maxBucket` trades exact pair coverage for
+    * Its parts run jobs while it builds: signatures persist for the two
+    * passes, exactJaccard checkpoints the shingle table, and cluster
+    * resolution materializes the graph. The returned frame is `df`
+    * anti-joined with the non-keeper table, lazily composable downstream;
+    * when that table is empty, AQE drops the join at run time. The text
+    * input is evaluated by two passes (signatures, shingles); feed it from
+    * a scan or checkpoint it first. `maxBucket` trades exact pair coverage for
     * bounded work on dense near-dup families (mirror sites; see
     * [[candidatePairs]] — the capped star is a disclosed approximation
     * that preserves connectivity w.h.p.).
@@ -888,10 +875,7 @@ object Dedup {
       val nonKeepers = resolveClusters(pairs)
         .filter(col("id") =!= col("keeper_id"))
         .select(col("id").cast("long").as(idCol))
-      // cheap count: the assignment derives from the checkpointed edge
-      // set, and at web scale non-keepers can be half the corpus — never
-      // collect them to the driver
-      if (nonKeepers.count() == 0L) df else df.join(nonKeepers, Seq(idCol), "left_anti")
+      df.join(nonKeepers, Seq(idCol), "left_anti")
     } finally sigs.unpersist()
   }
 }

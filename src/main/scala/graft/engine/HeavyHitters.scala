@@ -49,7 +49,6 @@ object HeavyHitters {
   def topK(df: DataFrame, keyCol: Column, k: Int, counters: Int = 4096): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(counters >= k, s"counters ($counters) must be >= k ($k) for the witness to be meaningful")
-    val spark = df.sparkSession
     val keys = df.select(coalesce(keyCol.cast("string"), lit("")).as("key"))
     // pass 1: per-partition Misra-Gries candidate summaries (narrow)
     val candidates = keys.select("key")
@@ -64,10 +63,9 @@ object HeavyHitters {
       .groupBy("key").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("key").asc)
       .limit(k)
-    // NOTE: this count re-executes the upstream lineage of `df`; callers
-    // whose input is an expensive chain should localCheckpoint it first
-    // (the dedupLines firsts-checkpoint tradeoff).
-    val n = keys.count()
+    // N, the witness's row count, is a third read of `keys` inside the
+    // same plan: a one-row aggregate cross-joined onto the top-k rows
+    val n = keys.agg(count(lit(1)).as("n_rows"))
     // witness: a full k rows AND kth_cnt * counters > N ==> no
     // non-candidate can reach the k-th count (MG: non-candidates have
     // count <= N/counters). Fewer than k surviving candidates means keys
@@ -78,10 +76,10 @@ object HeavyHitters {
     counted
       .withColumn("rank", row_number().over(
         Window.orderBy(col("cnt").desc, col("key").asc)).cast("long"))
-      .withColumn("n_rows", lit(n))
+      .crossJoin(broadcast(n))
       .withColumn("proven_exact",
         (count(lit(1)).over(whole) === k.toLong) &&
-          (min(col("cnt")).over(whole) * lit(counters.toLong) > lit(n)))
+          (min(col("cnt")).over(whole) * lit(counters.toLong) > col("n_rows")))
   }
 
   /** Misra–Gries with `m` slots: admit new keys while space remains;

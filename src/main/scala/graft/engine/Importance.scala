@@ -34,11 +34,14 @@ import org.apache.spark.sql.functions._
   *     V = raw vocabulary) — a float sum, emitted rounded to 4dp as a
   *     score, not used for selection.
   *
-  * Plan shape: two vocabulary-sized count aggregations (map-side combine;
-  * materialized via localCheckpoint so the scoring pass never re-reads
-  * them), then one narrow corpus explode joined against the BROADCAST
-  * models and re-aggregated per document — the corpus shuffles only
-  * (doc_id, partials). A vocabulary too large to broadcast needs the
+  * Plan shape: ONE plan, no Spark job at construction. Two
+  * vocabulary-sized count aggregations (map-side combine), then one narrow
+  * corpus explode joined against the BROADCAST models and re-aggregated
+  * per document — the corpus shuffles only (doc_id, partials). The model
+  * totals Tr, V and Tt are a one-row aggregate over the merged model (the
+  * planner reuses both count exchanges, so each count still runs once),
+  * broadcast and cross-joined into the scoring rows; an empty model fails
+  * the run with its message. A vocabulary too large to broadcast needs the
   * hashed-feature variant.
   *
   * Documents with fewer than 2 alnum tokens have no features and drop
@@ -63,17 +66,8 @@ object Importance {
     */
   def importanceWeights(raw: DataFrame, target: DataFrame, idCol: String,
       textCol: String, tau: Double = 1.0, minCount: Long = 1L): DataFrame = {
-    val rawCnt = bigramCounts(raw, textCol, minCount).localCheckpoint(true)
-    val tgtCnt = bigramCounts(target, textCol, minCount).localCheckpoint(true)
-    val rRow = rawCnt.agg(coalesce(sum("cnt"), lit(0L)).cast("long"), count(lit(1))).head
-    val tr = rRow.getLong(0)
-    val v = rRow.getLong(1)
-    val tt = {
-      val t = tgtCnt.agg(coalesce(sum("cnt"), lit(0L)).cast("long")).head.getLong(0)
-      require(t > 0L, "Importance.importanceWeights: empty target model")
-      t
-    }
-    require(tr > 0L, "Importance.importanceWeights: empty raw model")
+    val rawCnt = bigramCounts(raw, textCol, minCount)
+    val tgtCnt = bigramCounts(target, textCol, minCount)
     val toks = raw.select(col(idCol).cast("long").as("__imp_id"),
       explode(Retrieval.bigramTerms(Retrieval.alnumTokens(col(textCol)))).as("term"))
     // ONE merged (term, cr, ct) model instead of two separate broadcast
@@ -83,22 +77,35 @@ object Importance {
     // coalesce to 0 either way)
     val merged = rawCnt.withColumnRenamed("cnt", "cr")
       .join(tgtCnt.withColumnRenamed("cnt", "ct"), Seq("term"), "full_outer")
+    // Tr, V, Tt as one row: each term has one merged row, so the sums and
+    // the non-null count of cr are exact. Every scoring row reads __tr, so
+    // its check guards both models, the target first
+    val totals = merged
+      .agg(coalesce(sum("cr"), lit(0L)).cast("long").as("tr"), count("cr").as("__v"),
+        coalesce(sum("ct"), lit(0L)).cast("long").as("__tt"))
+      .select(col("__tt"), col("__v"),
+        when(col("__tt") <= 0L, raise_error(lit("Importance.importanceWeights: empty target model")))
+          .when(col("tr") <= 0L, raise_error(lit("Importance.importanceWeights: empty raw model")))
+          .otherwise(col("tr")).as("__tr"))
     toks
       .join(F.broadcast(merged), Seq("term"), "left")
+      .crossJoin(F.broadcast(totals))
       .withColumn("cr", coalesce(col("cr"), lit(0L)))
       .withColumn("ct", coalesce(col("ct"), lit(0L)))
-      .groupBy(col("__imp_id").as(idCol))
+      // every row carries the same totals: grouping by them keeps one
+      // group per document and hands them to the ratios below
+      .groupBy(col("__imp_id").as(idCol), col("__tt"), col("__tr"))
       .agg(
         count(lit(1)).as("n_bigrams"),
         sum(col("ct")).as("target_mass"),
         sum(col("cr")).as("raw_mass"),
-        sum(log((col("ct") + lit(1.0)) / lit((tt + v).toDouble)) -
-          log((col("cr") + lit(1.0)) / lit((tr + v).toDouble))).as("__lr"))
+        sum(log((col("ct") + lit(1.0)) / (col("__tt") + col("__v")).cast("double")) -
+          log((col("cr") + lit(1.0)) / (col("__tr") + col("__v")).cast("double"))).as("__lr"))
       .withColumn("rel_mass",
-        (col("target_mass").cast("double") / lit(tt.toDouble)) /
-          (col("raw_mass").cast("double") / lit(tr.toDouble)))
+        (col("target_mass").cast("double") / col("__tt").cast("double")) /
+          (col("raw_mass").cast("double") / col("__tr").cast("double")))
       .withColumn("logratio_4dp", round(col("__lr"), 4))
       .withColumn("selected", col("rel_mass") >= lit(tau))
-      .drop("__lr")
+      .drop("__tt", "__tr", "__lr")
   }
 }

@@ -66,43 +66,53 @@ object LangModel {
     * rel_freq < tauTail; 'middle' otherwise) compares against it, never
     * against a summed float.
     *
-    * The model dataframe is materialized once (eager localCheckpoint) so
-    * the corpus isn't re-read for the total/vocab scalars; the scalar
-    * collect is one row (justified driver-side, same class as the ANN
-    * centroid loads).
+    * ONE plan, no Spark job at construction: the model's total and vocab
+    * are a one-row aggregate over the model (the planner reuses the
+    * model's exchange for it), broadcast and cross-joined onto the per-doc
+    * rows; an empty model fails the run with its message.
     */
   def scoreDocs(docs: DataFrame, lm: DataFrame, idCol: String, textCol: String,
       tauHead: Double, tauTail: Double, carry: Seq[String] = Nil): DataFrame = {
     require(tauHead >= tauTail, "scoreDocs: tauHead must be >= tauTail")
-    val model = lm.localCheckpoint(true)
-    val totRow = model.agg(sum(col("cnt")).cast("long"), count(lit(1))).collect()(0)
-    val total = if (totRow.isNullAt(0)) 0L else totRow.getLong(0)
-    val vocab = totRow.getLong(1)
-    require(total > 0L, "scoreDocs: empty language model")
-    val corpusMean = total.toDouble / vocab.toDouble
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val totals = lm
+      .agg(coalesce(sum(col("cnt")), lit(0L)).cast("long"), count(lit(1)))
+      .as[(Long, Long)]
+      // typed, for java.lang.Math.log: Spark's `log` is StrictMath.log,
+      // which differs in the last bit for some integers (ln 3, ln 48, …)
+      .map { case (total, vocab) =>
+        require(total > 0L, "scoreDocs: empty language model")
+        (total.toDouble / vocab.toDouble, math.log(total.toDouble))
+      }
+      .toDF("__corpus_mean", "__ln_total")
     val toks = docs
       .select(col(idCol) +: carry.map(col) :+
         explode(split(col(textCol), " ", -1)).as("token"): _*)
       .where(col("token") =!= "")
-    val joined = toks.join(F.broadcast(model), Seq("token"), "left")
+    val joined = toks.join(F.broadcast(lm), Seq("token"), "left")
       // unseen / pruned-away tokens take the add-one floor count
       .withColumn("cnt", coalesce(col("cnt"), lit(1L)))
+      // on the token rows, so the totals build before the per-doc exchange
+      // and an empty model fails even when no document has a token
+      .crossJoin(F.broadcast(totals))
     joined
       // `carry` columns are per-document attributes riding along (lang,
       // domain, …): grouping by them too keeps ONE exchange instead of a
-      // score-then-rejoin
-      .groupBy(col(idCol) +: carry.map(col): _*)
+      // score-then-rejoin; every row carries the same totals, so grouping
+      // by them keeps one group per document
+      .groupBy(col(idCol) +: carry.map(col) :+ col("__corpus_mean") :+ col("__ln_total"): _*)
       .agg(
         count(lit(1)).as("n_tokens"),
         sum(col("cnt")).as("freq_mass"),
         sum(log(col("cnt").cast("double"))).as("sum_ln"))
       .withColumn("mean_freq", col("freq_mass").cast("double") / col("n_tokens").cast("double"))
-      .withColumn("rel_freq", col("mean_freq") / lit(corpusMean))
-      .withColumn("xent", round(lit(math.log(total.toDouble)) - col("sum_ln") / col("n_tokens").cast("double"), 4))
+      .withColumn("rel_freq", col("mean_freq") / col("__corpus_mean"))
+      .withColumn("xent", round(col("__ln_total") - col("sum_ln") / col("n_tokens").cast("double"), 4))
       .withColumn("bucket",
         when(col("rel_freq") >= tauHead, "head")
           .when(col("rel_freq") < tauTail, "tail")
           .otherwise("middle"))
-      .drop("sum_ln")
+      .drop("sum_ln", "__corpus_mean", "__ln_total")
   }
 }

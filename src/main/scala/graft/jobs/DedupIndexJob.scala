@@ -203,23 +203,19 @@ object DedupIndexJob {
     *   3. exact confirm: left-anti join of candidates against the pruned
     *      sha table removes bloom false positives.
     *
-    * The batch lineage is evaluated once per branch (bloom-negative and
-    * candidate); pass `materialize = true` to localCheckpoint the hashed
-    * batch first when the upstream batch plan is expensive (e.g. already a
-    * long curation chain) — same tradeoff as the measured firsts
-    * checkpoint in [[graft.engine.Dedup.dedupLines]].
+    * The batch lineage is evaluated by the touched-bucket collect and
+    * once per branch (bloom-negative and candidate); a caller whose batch
+    * plan is expensive checkpoints it first (q77 does).
     */
   def novelAgainst(
       spark: SparkSession,
       batch: DataFrame,
       textCol: String,
-      indexDir: String,
-      materialize: Boolean = false): DataFrame = {
+      indexDir: String): DataFrame = {
     val meta = readMeta(spark, indexDir)
-    val hashedRaw = batch
+    val hashed = batch
       .withColumn("__sha", shaOf(textCol))
       .withColumn("__bucket", bucketOf(col("__sha"), meta.nBuckets))
-    val hashed = if (materialize) hashedRaw.localCheckpoint(true) else hashedRaw
 
     val blooms: Map[Int, BloomFilter] = spark.read.parquet(s"$indexDir/bloom")
       .select(col("bucket").cast("int"), col("bits"))

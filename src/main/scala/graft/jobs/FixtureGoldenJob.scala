@@ -138,17 +138,16 @@ object FixtureGoldenJob {
       iters = Iters, lr = Lr, l2 = L2, momentum = Momentum)
   }
 
-  /** Extract one fixture doc with a fitted model: predict_proba → drop
-    * NO_LABEL → argmax over the remaining classes (first max wins, like
-    * pandas idxmax over the sorted class columns) → per-label threshold
+  /** Extract the test doc [[ExtractId]] with a fitted model: predict_proba
+    * → drop NO_LABEL → argmax over the remaining classes (first max wins,
+    * like pandas idxmax over the sorted class columns) → per-label threshold
     * filter (Accuracy >= threshold, filter_dataframe py:71-89) → horizontal
     * merge with the project's label data types. The reference's vertical
     * pass runs only for labels in `multiline_labels`, which is EMPTY for
     * DocumentEntityMulticlassModel (py:3252), so it is a no-op here.
     */
   def extract(spark: SparkSession, model: TrainScorerJob.FittedK,
-      labelDefs: Map[String, LabelDef], root: String = DefaultRoot,
-      docId: String = ExtractId): Vector[ExtractedTuple] = {
+      labelDefs: Map[String, LabelDef], root: String = DefaultRoot): Vector[ExtractedTuple] = {
     // Driver-local: inference over ONE fixture document is a pure function
     // of (model, doc) — the previous 1-partition Spark job + three
     // broadcasts was pure scheduling overhead around the same arithmetic.
@@ -156,7 +155,7 @@ object FixtureGoldenJob {
     // engine/Scorer's path; this is the single-golden-doc surface.)
     val thresholds = labelDefs.view.mapValues(_.threshold).toMap
     val types = labelDefs.view.mapValues(_.dataType).toMap
-    val doc = FixtureProject.loadDoc(root, docId)
+    val doc = FixtureProject.loadDoc(root, ExtractId)
     val (_, frame) = frameOf(doc)
     val noLabelIdx = model.classes.indexOf(NoLabel)
     val scored = frame.flatMap { r =>
@@ -201,7 +200,7 @@ object FixtureGoldenJob {
     if (hit != null) hit
     else {
       val labelDefs = FixtureProject.labels(root).map(l => l.name -> l).toMap
-      val computed = extract(spark, train(spark, root), labelDefs, root, ExtractId)
+      val computed = extract(spark, train(spark, root), labelDefs, root)
       val prev = cache.putIfAbsent(key, computed)
       if (prev != null) prev else computed
     }

@@ -12,7 +12,7 @@ import graft.engine.Dedup
   * batch then finds its near-duplicates against the INDEX — the corpus
   * text is never re-shingled, re-hashed, or even read per batch. This is
   * the missing cross-snapshot face of the in-corpus near-dedup chain
-  * ([[graft.engine.Dedup.minhashNearDups]] → `resolveClusters` →
+  * (`Dedup.candidatePairs` → `verifyPairs` → `resolveClusters` →
   * `dedupNear`): at 100 TB the historical side must amortize to a compact
   * artifact, exactly as the sha index does for exact dedup.
   *

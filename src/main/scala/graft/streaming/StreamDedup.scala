@@ -154,8 +154,9 @@ object StreamDedup {
     }
   }
 
-  /** Streaming NEAR-dup suppression — the streaming face of
-    * [[graft.engine.Dedup.minhashNearDups]]: each arriving document fans out
+  /** Streaming NEAR-dup suppression — the streaming face of the batch
+    * MinHash-LSH pair stage ([[graft.engine.Dedup.candidatePairs]] +
+    * [[graft.engine.Dedup.verifyPairs]]): each arriving document fans out
     * to its LSH band keys (one row per band, shuffle on the band key); per
     * band key the state holds the (id, signature) pairs seen so far, and a
     * new arrival is a near-dup when its signature-estimated Jaccard against

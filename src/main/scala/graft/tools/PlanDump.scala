@@ -9,8 +9,27 @@ import org.apache.spark.sql.SparkSession
   *   sbt "runMain graft.tools.PlanDump <outDir> <suffix> [q24,q59,...]"
   * with SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench. A query is
   * named in full or by its `qNN` prefix.
+  *
+  * Each plan is written in [[canonical]] form, so two dumps of the same
+  * plan — from two commits, or two runs — are byte-identical files.
   */
 object PlanDump {
+  /** `plan` with the parts that vary from run to run masked: expression
+    * ids (`doc_id#12L` → `doc_id#NL`), `plan_id`s, RDD ids, lambda and
+    * object addresses (`Evaluate$WeightedMode@2e0d6270`), the random
+    * suffix of temp paths, and the line number of a call site
+    * (`localCheckpoint at Dedup.scala:470`).
+    */
+  def canonical(plan: String): String = plan
+    .replaceAll("#\\d+", "#N")
+    .replaceAll("plan_id=\\d+", "plan_id=N")
+    .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
+    .replaceAll("\\$\\$Lambda[$\\d]*/0x\\p{XDigit}+@\\p{XDigit}+", "\\$\\$Lambda")
+    .replaceAll("(\\.[A-Z$][\\w$]*)@\\p{XDigit}+\\b", "$1@N")
+    .replaceAll(java.util.regex.Pattern.quote(sys.props("java.io.tmpdir").stripSuffix("/")) +
+      "/([^/\\s,\\]]*?)\\d+(?=[/\\s,\\]]|$)", "<tmp>/$1N")
+    .replaceAll("( at \\w+\\.scala):\\d+", "$1:N")
+
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
@@ -34,7 +53,7 @@ object PlanDump {
           val plan = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
+            java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), canonical(plan))
           System.err.println(s"[plandump] $name ok")
         } catch { case e: Throwable =>
           System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")

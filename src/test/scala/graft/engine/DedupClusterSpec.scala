@@ -157,6 +157,15 @@ class DedupClusterSpec extends AnyFunSuite {
     assert(kept.toSeq == Seq(1L, 4L, 6L))
   }
 
+  test("dedupNearText with no near-dup pair returns every input row") {
+    import spark.implicits._
+    val docs = (1L to 6L).map(i =>
+      i -> (0 until 40).map(j => s"doc${i}w$j").mkString(" ")).toDF("doc_id", "text")
+    val kept = Dedup.dedupNearText(docs, "doc_id", "text", threshold = 0.8)
+    assert(kept.columns.toSeq == docs.columns.toSeq)
+    assert(kept.as[(Long, String)].collect().toSet == docs.as[(Long, String)].collect().toSet)
+  }
+
   test("dedupNear keeps component minima and passes isolated rows through") {
     import spark.implicits._
     val df = (1L to 10L).map(i => (i, s"doc $i")).toDF("doc_id", "text")

@@ -190,15 +190,15 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(Dedup.dedupLines(ok, "id", "text").count() == 1L)
     val bad = Seq(maxId -> "first illegal id").toDF("id", "text")
     val e = intercept[Exception](Dedup.dedupLines(bad, "id", "text").count())
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(e).exists(_.contains("packing bounds")), s"unexpected failure: $e")
+    assert(SparkTestBase.messages(e).contains("packing bounds"), s"unexpected failure: $e")
   }
 
   test("minhash LSH finds exact and near duplicates") {
     import spark.implicits._
     val ds = corpusWithDups.as[(Long, String)]
-    val pairs = Dedup.minhashNearDups(ds, 0.7).collect().map(p => (p.a, p.b)).toSet
+    val sigs = Dedup.signatures(ds)
+    val pairs = Dedup.verifyPairs(sigs, Dedup.candidatePairs(sigs), 0.7)
+      .collect().map(p => (p.a, p.b)).toSet
     assert(pairs.contains((1L, 4L))) // exact dup
     assert(pairs.contains((1L, 2L)) || pairs.contains((2L, 4L))) // near dup
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))

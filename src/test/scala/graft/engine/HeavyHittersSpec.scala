@@ -1,7 +1,10 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Heavy hitters: exact-equality vs the full groupBy answer when witnessed,
@@ -89,5 +92,54 @@ class HeavyHittersSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
       s"candidates must broadcast into a semi-join, got:\n$plan")
+  }
+
+  /** The operator with its witness N pulled to the driver (`keys.count()`)
+    * before the top-k plan is built: the reference oracle for the one-plan
+    * body.
+    */
+  private def referenceTopK(df: DataFrame, keyCol: Column, k: Int, counters: Int): DataFrame = {
+    val keys = df.select(coalesce(keyCol.cast("string"), lit("")).as("key"))
+    val candidates = keys.select("key")
+      .as[String](Encoders.STRING)
+      .mapPartitions(it => HeavyHitters.misraGries(it, counters))(Encoders.STRING)
+      .toDF("key")
+      .distinct()
+    val counted = keys
+      .join(broadcast(candidates), Seq("key"), "left_semi")
+      .groupBy("key").agg(count(lit(1)).as("cnt"))
+      .orderBy(col("cnt").desc, col("key").asc)
+      .limit(k)
+    val n = keys.count()
+    val whole = Window.partitionBy(lit(1))
+    counted
+      .withColumn("rank", row_number().over(
+        Window.orderBy(col("cnt").desc, col("key").asc)).cast("long"))
+      .withColumn("n_rows", lit(n))
+      .withColumn("proven_exact",
+        (count(lit(1)).over(whole) === k.toLong) &&
+          (min(col("cnt")).over(whole) * lit(counters.toLong) > lit(n)))
+  }
+
+  test("random streams: rows equal the driver-count reference") {
+    import spark.implicits._
+    // a few hot keys at skewed weights, a long cold tail, and nulls
+    val key: Gen[String] = Gen.frequency(
+      8 -> Gen.choose(0, 3).map(i => s"hot-$i"),
+      4 -> Gen.choose(0, 200).map(i => s"cold-$i"),
+      1 -> Gen.const(null: String))
+    val stream = for {
+      n <- Gen.choose(0, 300)
+      keys <- Gen.listOfN(n, key)
+      k <- Gen.choose(1, 5)
+      counters <- Gen.choose(k, k + 8)
+      parts <- Gen.oneOf(1, 2, 3, 7)
+    } yield (keys, k, counters, parts)
+    PropCheck(Prop.forAllNoShrink(stream) { case (keys, k, counters, parts) =>
+      val df = keys.toDF("key").repartition(parts)
+      val want = SparkTestBase.exactRows(referenceTopK(df, col("key"), k, counters))
+      val got = SparkTestBase.exactRows(HeavyHitters.topK(df, col("key"), k, counters))
+      (got == want) :| s"n=${keys.size} k=$k counters=$counters parts=$parts\nwant=$want\ngot=$got"
+    }, minSuccessful = 20)
   }
 }

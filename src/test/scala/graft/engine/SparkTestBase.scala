@@ -16,6 +16,39 @@ object SparkTestBase {
     s
   }
 
+  /** `df`'s rows in a canonical order, each double as its raw IEEE bits,
+    * so two results compare equal only when every double is bit-equal.
+    */
+  def exactRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq
+      .map(_.toSeq.map {
+        case d: Double => ("bits", java.lang.Double.doubleToRawLongBits(d))
+        case v => v
+      })
+      .sortBy(_.toString)
+
+  /** `df`'s column names and types plus [[exactRows]], or the first of
+    * `knownFailures` found in the messages of the exception it fails with
+    * (any other failure is rethrown). Two bodies agree on an input when
+    * their outcomes are equal.
+    */
+  def outcome(df: => org.apache.spark.sql.DataFrame, knownFailures: Seq[String])
+      : Either[String, (Seq[(String, String)], Seq[Seq[Any]])] =
+    try {
+      val d = df
+      Right((d.schema.map(f => (f.name, f.dataType.simpleString)), exactRows(d)))
+    } catch {
+      case e: Exception =>
+        val m = messages(e)
+        Left(knownFailures.find(m.contains).getOrElse(throw e))
+    }
+
+  /** Every message along `e`'s cause chain, for asserting on a failure that
+    * Spark may wrap.
+    */
+  def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
   /** Runs `body` with size-based broadcast off, static and adaptive, so a
     * BroadcastHashJoin planned inside it comes from an operator's own
     * broadcast hint, not from the planner's size statistics.

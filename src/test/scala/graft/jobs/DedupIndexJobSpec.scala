@@ -76,7 +76,7 @@ class DedupIndexJobSpec extends AnyFunSuite with TempDirs {
     assert(expected.contains(30000L))
     val withBloom = DedupIndexJob.novelAgainst(spark, batch, "text", out)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val mat = DedupIndexJob.novelAgainst(spark, batch, "text", out, materialize = true)
+    val mat = DedupIndexJob.novelAgainst(spark, batch.localCheckpoint(true), "text", out)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(withBloom == expected)
     assert(mat == expected)
