@@ -45,10 +45,11 @@ import org.apache.spark.sql.functions._
   * hashed-feature variant.
   *
   * Documents with fewer than 2 alnum tokens have no features and drop
-  * from the output (no bigrams ⇒ the ratio is undefined); scoring a
-  * document whose bigrams are absent from the raw model (only possible
-  * when scoring out-of-corpus text or after aggressive `minCount`
-  * pruning) takes the add-one floor on both sides.
+  * from the output (no bigrams ⇒ the ratio is undefined). A document
+  * whose bigrams are all absent from the raw model (only possible after
+  * `minCount` pruning) has `raw_mass` 0: its `rel_mass` is NULL (DuckDB's
+  * `x / 0` is NULL too), it is never `selected`, and its `logratio_4dp`
+  * takes the add-one floor on both sides.
   */
 object Importance {
 
@@ -101,11 +102,11 @@ object Importance {
         sum(col("cr")).as("raw_mass"),
         sum(log((col("ct") + lit(1.0)) / (col("__tt") + col("__v")).cast("double")) -
           log((col("cr") + lit(1.0)) / (col("__tr") + col("__v")).cast("double"))).as("__lr"))
-      .withColumn("rel_mass",
+      .withColumn("rel_mass", when(col("raw_mass") =!= 0L,
         (col("target_mass").cast("double") / col("__tt").cast("double")) /
-          (col("raw_mass").cast("double") / col("__tr").cast("double")))
+          (col("raw_mass").cast("double") / col("__tr").cast("double"))))
       .withColumn("logratio_4dp", round(col("__lr"), 4))
-      .withColumn("selected", col("rel_mass") >= lit(tau))
+      .withColumn("selected", coalesce(col("rel_mass") >= lit(tau), lit(false)))
       .drop("__tt", "__tr", "__lr")
   }
 }

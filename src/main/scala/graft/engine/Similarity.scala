@@ -265,11 +265,6 @@ object Similarity {
       k: Int, nCells: Int, nProbe: Int): Dataset[Neighbor] =
     ivfTopK(corpus, queries, k, buildIvfIndexLocal(corpus, nCells), nProbe)
 
-  /** IVF ANN against a prebuilt index (see [[graft.jobs.AnnIndexJob]]):
-    * each query probes its `nProbe` nearest centroids; the corpus is
-    * scanned once with no ML stage in the plan (at scale the scan prunes
-    * to the probed cells of the partitioned index).
-    */
   /** Which queries probe which cells: each query's `nProbe` nearest
     * centroids, inverted to cell → queries. Shared by the inline full-scan
     * path and the partition-pruned indexed path so both probe identically.
@@ -292,13 +287,31 @@ object Similarity {
     m.view.mapValues(_.toArray).toMap
   }
 
-  /** Precompute query norms per probe key — shared by every probe-map
-    * scorer so the scoring inner loop never recomputes them.
+  /** The one probe scorer behind the IVF and LSH surfaces: each
+    * (probe key, id, vector) row is scored by cosine against every query
+    * that probes its key, then ranked by [[rankTopK]]. Query norms are
+    * computed once per partition, never in the inner loop.
     */
-  private def withQueryNorms[K](pm: Map[K, Array[(Long, Array[Float])]]): Map[K, Array[(Long, Array[Float], Double)]] =
-    pm.map { case (kk, qsArr) =>
-      kk -> qsArr.map { case (qid, qv) => (qid, qv, norm(qv)) }
+  private def scoreProbed[K](rows: Dataset[(K, Long, Array[Float])],
+      probes: Map[K, Array[(Long, Array[Float])]], k: Int): Dataset[Neighbor] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(probes)
+    val partial = rows.mapPartitions { it =>
+      val withNorms = bc.value.map { case (key, qs) =>
+        key -> qs.map { case (qid, qv) => (qid, qv, norm(qv)) }
+      }
+      it.flatMap { case (key, id, v) =>
+        withNorms.get(key) match {
+          case Some(qs) =>
+            val vn = norm(v)
+            qs.iterator.map { case (qid, qv, qn) => (qid, id, cosineWithNorms(qv, qn, v, vn)) }
+          case None => Iterator.empty
+        }
+      }
     }
+    rankTopK(partial, k)
+  }
 
   /** Shared ranking tail: (query_id, neighbor_id, cosine) partials →
     * per-query top-k with the deterministic (cosine desc, neighbor asc)
@@ -321,30 +334,20 @@ object Similarity {
       .as[Neighbor]
   }
 
+  /** IVF ANN against a prebuilt index (see [[graft.jobs.AnnIndexJob]]):
+    * each query probes its `nProbe` nearest centroids; the corpus is
+    * scanned once with no ML stage in the plan (at scale the scan prunes
+    * to the probed cells of the partitioned index).
+    */
   def ivfTopK(
       corpus: Dataset[(Long, Array[Float])],
       queries: Array[(Long, Array[Float])],
       k: Int, index: IvfIndex, nProbe: Int): Dataset[Neighbor] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val centers = index.centroids
-    val bcCenters = spark.sparkContext.broadcast(centers)
-    val probes = probeAssignments(queries, centers, nProbe)
-    val bcProbes = spark.sparkContext.broadcast(probes)
-    val partial = corpus.mapPartitions { it =>
-      val cs = bcCenters.value
-      def cell(v: Array[Float]): Int = nearestCell(v, cs)
-      val pmN = withQueryNorms(bcProbes.value)
-      it.flatMap { case (id, v) =>
-        pmN.get(cell(v)) match {
-          case Some(qs) =>
-            val vn = norm(v)
-            qs.iterator.map { case (qid, qv, qn) => (qid, id, cosineWithNorms(qv, qn, v, vn)) }
-          case None => Iterator.empty
-        }
-      }
-    }
-    rankTopK(partial, k)
+    val bcCenters = spark.sparkContext.broadcast(index.centroids)
+    scoreProbed(corpus.map { case (id, v) => (nearestCell(v, bcCenters.value), id, v) },
+      probeAssignments(queries, index.centroids, nProbe), k)
   }
 
   /** Score a PRE-PRUNED cell-partitioned index scan: `cells` carries
@@ -354,18 +357,9 @@ object Similarity {
     * other cell's files). The stored cell id replaces the in-flight
     * `nearestCell` recompute of the inline path — at scale this is the
     * whole point of the index: an nProbe-cell query reads nProbe
-    * partitions, not the corpus.
-    */
-  def ivfTopKIndexed(
-      cells: org.apache.spark.sql.DataFrame,
-      queries: Array[(Long, Array[Float])],
-      k: Int, index: IvfIndex, nProbe: Int): Dataset[Neighbor] =
-    ivfTopKIndexed(cells, probeAssignments(queries, index.centroids, nProbe), k)
-
-  /** Same, against PRECOMPUTED probe assignments — the overload
-    * [[graft.jobs.AnnIndexJob.queryIndex]] uses so the cell→queries map is
-    * computed exactly once (it also derives the partition-pruning filter
-    * from it; two independent computations could silently diverge).
+    * partitions, not the corpus. `probes` is computed once by the caller,
+    * which derives the partition-pruning filter from the same map (two
+    * independent computations could silently diverge).
     */
   def ivfTopKIndexed(
       cells: org.apache.spark.sql.DataFrame,
@@ -373,22 +367,9 @@ object Similarity {
       k: Int): Dataset[Neighbor] = {
     val spark = cells.sparkSession
     import spark.implicits._
-    val bcProbes = spark.sparkContext.broadcast(probes)
-    val partial = cells
+    scoreProbed(cells
       .select(col("cell").cast("int"), col("vec_id").cast("long"), col("embedding"))
-      .as[(Int, Long, Array[Float])]
-      .mapPartitions { it =>
-        val pmN = withQueryNorms(bcProbes.value)
-        it.flatMap { case (cell, id, v) =>
-          pmN.get(cell) match {
-            case Some(qs) =>
-              val vn = norm(v)
-              qs.iterator.map { case (qid, qv, qn) => (qid, id, cosineWithNorms(qv, qn, v, vn)) }
-            case None => Iterator.empty
-          }
-        }
-      }
-    rankTopK(partial, k)
+      .as[(Int, Long, Array[Float])], probes, k)
   }
 
   /** LSH-bucketed ANN: corpus bucketed by a 10-bit hyperplane key (one
@@ -421,18 +402,6 @@ object Similarity {
       }
       m.view.mapValues(_.toArray).toMap
     }
-    val bc = spark.sparkContext.broadcast(probes)
-    val partial = keyed.mapPartitions { it =>
-      val pmN = withQueryNorms(bc.value)
-      it.flatMap { case (key, id, v) =>
-        pmN.get(key) match {
-          case Some(qs) =>
-            val vn = norm(v)
-            qs.iterator.map { case (qid, qv, qn) => (qid, id, cosineWithNorms(qv, qn, v, vn)) }
-          case None => Iterator.empty
-        }
-      }
-    }
-    rankTopK(partial, k)
+    scoreProbed(keyed, probes, k)
   }
 }

@@ -63,15 +63,11 @@ object AnnIndexJob {
     index.centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq.toDS()
       .toDF("cell", "centroid")
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/centroids")
-    corpus.map { case (id, v) =>
+    val cells = corpus.map { case (id, v) =>
         (Similarity.nearestCell(v, bc.value), id, v) // the shared cell rule
       }
       .toDF("cell", "vec_id", "embedding")
-      // cluster by the partition column before the write (guide §6): one
-      // file per cell instead of tasks × cells small files — a probed
-      // query opens nProbe files, not nProbe × tasks
-      .repartition(nCells, col("cell"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$outDir/cells")
+    Buckets.write(cells, "cell", nCells, s"$outDir/cells")
     index
   }
 
@@ -103,10 +99,8 @@ object AnnIndexJob {
     // ONE probe computation feeds both the pruning filter and the scorer —
     // two independent computations could silently diverge
     val probes = Similarity.probeAssignments(queries, index.centroids, nProbe)
-    val probed = probes.keys.toSeq.sorted
-    val cells = spark.read.parquet(s"$outDir/cells")
-      .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
-    Similarity.ivfTopKIndexed(cells, probes, k)
+    val probed = probes.keys.toArray.sorted
+    Similarity.ivfTopKIndexed(Buckets.read(spark, s"$outDir/cells", "cell", probed), probes, k)
   }
 
   /** [[build]] once per corpus key per JVM ([[Staging.cachedDir]]). */

@@ -15,7 +15,7 @@ import org.apache.spark.util.sketch.BloomFilter
   *
   * Index layout under `outDir` (all plain parquet):
   *   - `hashes/`  — distinct sha256(text) of every snapshot document,
-  *                  PARTITIONED BY `bucket` (= pmod(xxhash64(sha), nBuckets)).
+  *                  PARTITIONED BY `bucket` (= [[Buckets.of]] the sha).
   *                  ~72 bytes/distinct doc vs the full corpus: the exact
   *                  confirm path reads only the buckets a batch touches
   *                  (planning-time PartitionFilters, same discipline as
@@ -50,8 +50,6 @@ object DedupIndexJob {
   def autoBuckets(snapshotSize: Long): Int =
     math.max(8L, math.min(65536L, math.max(0L, snapshotSize) / 4000000L)).toInt
 
-  private final val MetaCols = Seq("n_buckets", "fpp", "n_keys")
-
   /** One bloom filter per group, merged map-side: zero allocates the
     * filter sized for the EXPECTED bucket population (all buckets share
     * one size, so mergeInPlace never sees incompatible operands).
@@ -77,13 +75,10 @@ object DedupIndexJob {
     */
   private def shaOf(textCol: String) = sha2(coalesce(col(textCol), lit("")), 256)
 
-  private def bucketOf(shaCol: org.apache.spark.sql.Column, nBuckets: Int) =
-    pmod(xxhash64(shaCol), lit(nBuckets.toLong)).cast("int")
-
-  /** Build the index from a snapshot. `expectedPerBucket` sizes each
-    * bloom; the default derives it from the actual distinct count with
-    * 1.5× headroom for bucket imbalance (xxhash64 spreads near-uniformly,
-    * so 1.5× covers the binomial tail at ≥64 expected keys/bucket).
+  /** Build the index from a snapshot. Each bloom is sized from the actual
+    * distinct count with 1.5× headroom for bucket imbalance (xxhash64
+    * spreads near-uniformly, so 1.5× covers the binomial tail at ≥64
+    * expected keys/bucket).
     */
   def build(
       spark: SparkSession,
@@ -94,30 +89,25 @@ object DedupIndexJob {
       fpp: Double = 0.01): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
-    snapshot
-      .select(shaOf(textCol).as("sha")).distinct()
-      .withColumn("bucket", bucketOf(col("sha"), nBuckets))
-      // cluster by the partition column before the write (guide §6): one
-      // file per bucket instead of tasks × buckets small files — the bloom
-      // pass and every pruned probe read open |buckets| files, not 512
-      .repartition(nBuckets, col("bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(s"$outDir/hashes")
+    Buckets.write(
+      snapshot.select(shaOf(textCol).as("sha")).distinct()
+        .withColumn("bucket", Buckets.of(col("sha"), nBuckets)),
+      "bucket", nBuckets, s"$outDir/hashes")
     // second pass over the COMPACT artifact, not the snapshot: count sizes
     // the blooms, then one partial-aggregated pass builds them
     val hashes = spark.read.parquet(s"$outDir/hashes")
     val nKeys = hashes.count()
-    val expected = math.max(64L, math.ceil(nKeys.toDouble * 1.5 / nBuckets).toLong)
-    val bloomUdaf = udaf(new BloomAgg(expected, fpp), Encoders.STRING)
-    hashes.groupBy("bucket").agg(bloomUdaf(col("sha")).as("bits"))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(s"$outDir/bloom")
-    writeMeta(spark, outDir, nBuckets, fpp, nKeys)
+    writeBlooms(hashes, math.max(64L, math.ceil(nKeys.toDouble * 1.5 / nBuckets).toLong),
+      fpp, nBuckets, s"$outDir/bloom")
+    Buckets.writeMeta(spark, s"$outDir/meta", Seq(IndexMeta(nBuckets, fpp, nKeys)))
   }
 
-  private def writeMeta(spark: SparkSession, outDir: String,
-      nBuckets: Int, fpp: Double, nKeys: Long): Unit = {
-    import spark.implicits._
-    Seq((nBuckets, fpp, nKeys)).toDF(MetaCols: _*)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/meta")
+  /** One bloom per bucket of `hashes`, each sized for `expected` keys. */
+  private def writeBlooms(hashes: DataFrame, expected: Long, fpp: Double, nBuckets: Int,
+      dir: String, touchedOnly: Boolean = false): Unit = {
+    val bloomUdaf = udaf(new BloomAgg(expected, fpp), Encoders.STRING)
+    Buckets.write(hashes.groupBy("bucket").agg(bloomUdaf(col("sha")).as("bits")),
+      "bucket", nBuckets, dir, touchedOnly = touchedOnly)
   }
 
   /** Fold a new batch into an existing index WITHOUT rebuilding it: the
@@ -148,45 +138,33 @@ object DedupIndexJob {
     val meta = readMeta(spark, indexDir)
     val novel = batch
       .select(shaOf(textCol).as("sha")).distinct()
-      .withColumn("bucket", bucketOf(col("sha"), meta.nBuckets))
+      .withColumn("bucket", Buckets.of(col("sha"), meta.nBuckets))
     // exact anti-join against the pruned sha table (bloom skipped: an
     // update must be exact against hashes/, the source of truth)
-    val touched = novel.select("bucket").distinct().collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return (0L, 0)
-    val existing = spark.read.parquet(s"$indexDir/hashes")
-      .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-      .select("sha")
+    val existing =
+      Buckets.readTouched(spark, s"$indexDir/hashes", "bucket", novel.select("bucket")) match {
+        case Some(hashes) => hashes.select("sha")
+        case None => return (0L, 0)
+      }
     val fresh = novel.join(existing, Seq("sha"), "left_anti").localCheckpoint(true)
     val nFresh = fresh.count()
     if (nFresh == 0) return (0L, 0)
-    fresh.write.mode(SaveMode.Append).partitionBy("bucket").parquet(s"$indexDir/hashes")
+    Buckets.write(fresh, "bucket", meta.nBuckets, s"$indexDir/hashes", SaveMode.Append)
     // rebuild ONLY the touched buckets' blooms from the updated sha table
-    val freshBuckets = fresh.select("bucket").distinct().collect().map(_.getInt(0)).sorted
-    val rebuilt = spark.read.parquet(s"$indexDir/hashes")
-      .filter(col("bucket").isin(freshBuckets.map(Integer.valueOf): _*))
+    val freshBuckets = Buckets.touched(fresh.select("bucket"))
+    val rebuilt = Buckets.read(spark, s"$indexDir/hashes", "bucket", freshBuckets)
     val maxBucket = rebuilt.groupBy("bucket").count()
       .agg(max("count")).head().getLong(0)
-    val expected = math.max(64L, math.ceil(maxBucket * 1.5).toLong)
-    val bloomUdaf = udaf(new BloomAgg(expected, meta.fpp), Encoders.STRING)
-    rebuilt.groupBy("bucket").agg(bloomUdaf(col("sha")).as("bits"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(s"$indexDir/bloom")
-    writeMeta(spark, indexDir, meta.nBuckets, meta.fpp, meta.nKeys + nFresh)
+    writeBlooms(rebuilt, math.max(64L, math.ceil(maxBucket * 1.5).toLong), meta.fpp,
+      meta.nBuckets, s"$indexDir/bloom", touchedOnly = true)
+    Buckets.writeMeta(spark, s"$indexDir/meta", Seq(meta.copy(nKeys = meta.nKeys + nFresh)))
     (nFresh, freshBuckets.length)
   }
 
-  /** [[build]] with a size-derived bucket count (one snapshot count). */
-  def buildAuto(spark: SparkSession, snapshot: DataFrame, textCol: String,
-      outDir: String, fpp: Double = 0.01): Unit =
-    build(spark, snapshot, textCol, outDir, autoBuckets(snapshot.count()), fpp)
-
   final case class IndexMeta(nBuckets: Int, fpp: Double, nKeys: Long)
 
-  def readMeta(spark: SparkSession, indexDir: String): IndexMeta = {
-    val r = spark.read.parquet(s"$indexDir/meta").select(MetaCols.map(col): _*).head()
-    IndexMeta(r.getInt(0), r.getDouble(1), r.getLong(2))
-  }
+  def readMeta(spark: SparkSession, indexDir: String): IndexMeta =
+    Buckets.readMeta[IndexMeta](spark, s"$indexDir/meta").head
 
   /** Batch rows whose text does NOT already exist in the indexed snapshot —
     * exact, regardless of bloom fpp. Three stages, none touching the
@@ -212,11 +190,24 @@ object DedupIndexJob {
       batch: DataFrame,
       textCol: String,
       indexDir: String): DataFrame = {
-    val meta = readMeta(spark, indexDir)
-    val hashed = batch
-      .withColumn("__sha", shaOf(textCol))
-      .withColumn("__bucket", bucketOf(col("__sha"), meta.nBuckets))
+    val (negatives, candidates) = bloomGate(spark, batch, textCol, indexDir)
+    // ≤ nBuckets touched ints — bounded by construction, same
+    // justification as the IVF probe list
+    val confirmed = Buckets.readTouched(spark, s"$indexDir/hashes", "bucket",
+        candidates.select("__bucket"))
+      .fold(candidates.limit(0)) { snap =>
+        candidates.join(snap.select(col("sha").as("__sha")), Seq("__sha"), "left_anti")
+      }
+    negatives.unionByName(confirmed).drop("__sha", "__bucket")
+  }
 
+  /** `rows` with their `__sha` and `__bucket` columns, split by the
+    * broadcast per-bucket blooms into (bloom-negative, so provably novel;
+    * bloom-positive candidates).
+    */
+  private def bloomGate(spark: SparkSession, rows: DataFrame, textCol: String,
+      indexDir: String): (DataFrame, DataFrame) = {
+    val meta = readMeta(spark, indexDir)
     val blooms: Map[Int, BloomFilter] = spark.read.parquet(s"$indexDir/bloom")
       .select(col("bucket").cast("int"), col("bits"))
       .collect()
@@ -228,22 +219,11 @@ object DedupIndexJob {
     val mightContain = udf { (bucket: Int, sha: String) =>
       bc.value.get(bucket).exists(_.mightContainString(sha))
     }
-    val negatives = hashed.filter(!mightContain(col("__bucket"), col("__sha")))
-    val candidates = hashed.filter(mightContain(col("__bucket"), col("__sha")))
-
-    // ≤ nBuckets ints — bounded by construction, same justification as the
-    // IVF probe list
-    val touched = candidates.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val confirmed =
-      if (touched.isEmpty) candidates.limit(0)
-      else {
-        val snapShas = spark.read.parquet(s"$indexDir/hashes")
-          .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-          .select(col("sha").as("__sha"))
-        candidates.join(snapShas, Seq("__sha"), "left_anti")
-      }
-    negatives.unionByName(confirmed).drop("__sha", "__bucket")
+    val hashed = rows
+      .withColumn("__sha", shaOf(textCol))
+      .withColumn("__bucket", Buckets.of(col("__sha"), meta.nBuckets))
+    (hashed.filter(!mightContain(col("__bucket"), col("__sha"))),
+      hashed.filter(mightContain(col("__bucket"), col("__sha"))))
   }
 
   /** Streaming face of [[novelAgainst]]: filter a stream of documents down
@@ -268,24 +248,10 @@ object DedupIndexJob {
     */
   def novelAgainstStream(spark: SparkSession, stream: DataFrame, textCol: String,
       indexDir: String): DataFrame = {
-    val meta = readMeta(spark, indexDir)
-    val blooms: Map[Int, BloomFilter] = spark.read.parquet(s"$indexDir/bloom")
-      .select(col("bucket").cast("int"), col("bits"))
-      .collect()
-      .map(r => r.getInt(0) -> BloomFilter.readFrom(r.getAs[Array[Byte]](1)))
-      .toMap
-    val bc = spark.sparkContext.broadcast(blooms)
-    val mightContain = udf { (bucket: Int, sha: String) =>
-      bc.value.get(bucket).exists(_.mightContainString(sha))
-    }
-    val hashed = stream
-      .withColumn("__sha", shaOf(textCol))
-      .withColumn("__bucket", bucketOf(col("__sha"), meta.nBuckets))
-    val negatives = hashed.filter(!mightContain(col("__bucket"), col("__sha")))
+    val (negatives, candidates) = bloomGate(spark, stream, textCol, indexDir)
     val snapShas = spark.read.parquet(s"$indexDir/hashes").select(col("sha").as("__sha"))
-    val confirmed = hashed.filter(mightContain(col("__bucket"), col("__sha")))
-      .join(snapShas, Seq("__sha"), "left_anti")
-    negatives.unionByName(confirmed).drop("__sha", "__bucket")
+    negatives.unionByName(candidates.join(snapShas, Seq("__sha"), "left_anti"))
+      .drop("__sha", "__bucket")
   }
 
   /** [[build]] once per snapshot key per JVM ([[Staging.cachedDir]]). */

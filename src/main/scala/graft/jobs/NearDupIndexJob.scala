@@ -19,13 +19,13 @@ import graft.engine.Dedup
   * Index layout under `outDir` (plain parquet, the repo's Iceberg
   * stand-in):
   *   - `bands/` — one row per (band key, doc id), PARTITIONED BY
-  *     `bucket = pmod(xxhash64(bkey), nBuckets)`. A probe computes its
+  *     `bucket` = [[Buckets.of]] the band key. A probe computes its
   *     batch's band keys, collects the ≤ nBuckets DISTINCT touched bucket
   *     ids (a bounded driver list, the [[AnnIndexJob]] probe discipline),
   *     and reads ONLY those partitions — resolved as planning-time
   *     `PartitionFilters`, spec-asserted.
   *   - `sigs/`  — (id, sig ARRAY<LONG>), PARTITIONED BY
-  *     `sbucket = pmod(xxhash64(id), nBuckets)`; the estimated-Jaccard
+  *     `sbucket` = [[Buckets.of]] the id; the estimated-Jaccard
   *     verify reads only the buckets the candidate ids land in.
   *     numPerm longs/doc (~0.5 KB at 64 permutations) vs the corpus —
   *     the 200 000× summarization that makes per-batch probing cheap.
@@ -52,12 +52,6 @@ object NearDupIndexJob {
   final case class Meta(nBuckets: Int, shingleK: Int, numPerm: Int,
       bands: Int, nDocs: Long)
 
-  private final val MetaCols =
-    Seq("n_buckets", "shingle_k", "num_perm", "bands", "n_docs")
-
-  private def bucketOf(c: org.apache.spark.sql.Column, n: Int) =
-    pmod(xxhash64(c), lit(n.toLong)).cast("int")
-
   /** Build the index from the historical corpus: one narrow signature
     * pass, then two partitioned writes (each one exchange on its
     * partition column).
@@ -67,39 +61,33 @@ object NearDupIndexJob {
       numPerm: Int = Fingerprint.DefaultNumPerm,
       bands: Int = Fingerprint.DefaultBands): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-    import spark.implicits._
     val sigs = Dedup.signatures(corpus, shingleK, numPerm, bands).persist()
     try {
-      // cluster by the partition column before each write (guide §6): one
-      // file per bucket instead of tasks × buckets small files
-      sigs.flatMap(s => s.bands.map(b => (b, s.id)))
-        .toDF("bkey", "id")
-        .withColumn("bucket", bucketOf(col("bkey"), nBuckets))
-        .repartition(nBuckets, col("bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-        .parquet(s"$outDir/bands")
-      sigs.map(s => (s.id, s.sig)).toDF("id", "sig")
-        .withColumn("sbucket", bucketOf(col("id"), nBuckets))
-        .repartition(nBuckets, col("sbucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("sbucket")
-        .parquet(s"$outDir/sigs")
+      writeTables(sigs, outDir, nBuckets, SaveMode.Overwrite)
       val nDocs = spark.read.parquet(s"$outDir/sigs").count()
-      writeMeta(spark, outDir, Meta(nBuckets, shingleK, numPerm, bands, nDocs))
+      Buckets.writeMeta(spark, s"$outDir/meta",
+        Seq(Meta(nBuckets, shingleK, numPerm, bands, nDocs)))
     } finally sigs.unpersist()
   }
 
-  private def writeMeta(spark: SparkSession, outDir: String, m: Meta): Unit = {
-    import spark.implicits._
-    Seq((m.nBuckets, m.shingleK, m.numPerm, m.bands, m.nDocs))
-      .toDF(MetaCols: _*)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/meta")
+  /** The band and signature rows of `sigs`, each into its partitioned
+    * table: a build overwrites, an update appends into the same layout.
+    */
+  private def writeTables(sigs: Dataset[Dedup.Sig], dir: String, nBuckets: Int,
+      mode: SaveMode): Unit = {
+    import sigs.sparkSession.implicits._
+    Buckets.write(
+      sigs.flatMap(s => s.bands.map(b => (b, s.id))).toDF("bkey", "id")
+        .withColumn("bucket", Buckets.of(col("bkey"), nBuckets)),
+      "bucket", nBuckets, s"$dir/bands", mode)
+    Buckets.write(
+      sigs.map(s => (s.id, s.sig)).toDF("id", "sig")
+        .withColumn("sbucket", Buckets.of(col("id"), nBuckets)),
+      "sbucket", nBuckets, s"$dir/sigs", mode)
   }
 
-  def readMeta(spark: SparkSession, indexDir: String): Meta = {
-    val r = spark.read.parquet(s"$indexDir/meta")
-      .select(MetaCols.map(col): _*).head()
-    Meta(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4))
-  }
+  def readMeta(spark: SparkSession, indexDir: String): Meta =
+    Buckets.readMeta[Meta](spark, s"$indexDir/meta").head
 
   /** Near-duplicate candidates of a batch against the index, scored by
     * estimated Jaccard from the persisted signatures. Returns
@@ -118,27 +106,26 @@ object NearDupIndexJob {
         .localCheckpoint(true)
     val batchBands = batchSigs.flatMap(s => s.bands.map(b => (b, s.id)))
       .toDF("bkey", "batch_id")
-      .withColumn("bucket", bucketOf(col("bkey"), meta.nBuckets))
+      .withColumn("bucket", Buckets.of(col("bkey"), meta.nBuckets))
 
-    // ≤ nBuckets ints — bounded by construction (the IVF probe-list rule)
-    val touched = batchBands.select("bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return spark.emptyDataset[Dedup.ScoredPair]
-    val indexBands = spark.read.parquet(s"$indexDir/bands")
-      .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
+    // each touched list is ≤ nBuckets ints — bounded by construction (the
+    // IVF probe-list rule)
+    val indexBands =
+      Buckets.readTouched(spark, s"$indexDir/bands", "bucket", batchBands.select("bucket")) match {
+        case Some(bands) => bands
+        case None => return spark.emptyDataset[Dedup.ScoredPair]
+      }
     val cands = batchBands
       .join(indexBands.select(col("bkey"), col("id").as("hist_id")), "bkey")
       .filter(col("batch_id") =!= col("hist_id"))
       .select("batch_id", "hist_id").distinct()
       .localCheckpoint(true)
 
-    val sbuckets = cands
-      .select(bucketOf(col("hist_id"), meta.nBuckets).as("sb"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    if (sbuckets.isEmpty) return spark.emptyDataset[Dedup.ScoredPair]
-    val histSigs = spark.read.parquet(s"$indexDir/sigs")
-      .filter(col("sbucket").isin(sbuckets.map(Integer.valueOf): _*))
-      .select(col("id").as("hist_id"), col("sig").as("hist_sig"))
+    val histSigs = Buckets.readTouched(spark, s"$indexDir/sigs", "sbucket",
+        cands.select(Buckets.of(col("hist_id"), meta.nBuckets))) match {
+      case Some(sigs) => sigs.select(col("id").as("hist_id"), col("sig").as("hist_sig"))
+      case None => return spark.emptyDataset[Dedup.ScoredPair]
+    }
     cands
       .join(histSigs, "hist_id")
       .join(batchSigs.select(col("id").as("batch_id"), col("sig").as("batch_sig")),
@@ -171,31 +158,19 @@ object NearDupIndexJob {
       Dedup.signatures(batch, meta.shingleK, meta.numPerm, meta.bands)
         .localCheckpoint(true)
     val ids = batchSigs.map(_.id).toDF("id")
-      .withColumn("sbucket", bucketOf(col("id"), meta.nBuckets))
-    val touched = ids.select("sbucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return 0L
-    val existing = spark.read.parquet(s"$indexDir/sigs")
-      .filter(col("sbucket").isin(touched.map(Integer.valueOf): _*))
-      .select("id")
+      .withColumn("sbucket", Buckets.of(col("id"), meta.nBuckets))
+    val existing =
+      Buckets.readTouched(spark, s"$indexDir/sigs", "sbucket", ids.select("sbucket")) match {
+        case Some(sigs) => sigs.select("id")
+        case None => return 0L
+      }
     val freshIds = ids.join(existing, Seq("id"), "left_anti")
       .select("id").localCheckpoint(true)
     val nFresh = freshIds.count()
     if (nFresh == 0) return 0L
-    val fresh = batchSigs.toDF()
-      .join(freshIds, "id")
-      .as[Dedup.Sig].localCheckpoint(true)
-    fresh.flatMap(s => s.bands.map(b => (b, s.id)))
-      .toDF("bkey", "id")
-      .withColumn("bucket", bucketOf(col("bkey"), meta.nBuckets))
-      .write.mode(SaveMode.Append).partitionBy("bucket")
-      .parquet(s"$indexDir/bands")
-    fresh.map(s => (s.id, s.sig)).toDF("id", "sig")
-      .withColumn("sbucket", bucketOf(col("id"), meta.nBuckets))
-      .write.mode(SaveMode.Append).partitionBy("sbucket")
-      .parquet(s"$indexDir/sigs")
-    writeMeta(spark, indexDir,
-      meta.copy(nDocs = meta.nDocs + nFresh))
+    writeTables(batchSigs.toDF().join(freshIds, "id").as[Dedup.Sig].localCheckpoint(true),
+      indexDir, meta.nBuckets, SaveMode.Append)
+    Buckets.writeMeta(spark, s"$indexDir/meta", Seq(meta.copy(nDocs = meta.nDocs + nFresh)))
     nFresh
   }
 

@@ -37,45 +37,36 @@ import org.apache.spark.sql.functions._
   */
 object RetrievalIndexJob {
 
-  private def bucketOf(nBuckets: Int) =
-    pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int")
+  /** `meta/`: the monolithic index's one row. */
+  private[jobs] final case class Meta(nDocs: Long, totalTerms: Long, nBuckets: Int)
+
+  /** `segmeta/`: one row per registered segment. */
+  private[jobs] final case class SegMeta(segment: String, nDocs: Long, totalTerms: Long,
+      nBuckets: Int)
 
   def build(spark: SparkSession, docs: DataFrame, idCol: String,
       textCol: String, outDir: String, nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"RetrievalIndexJob.build: nBuckets must be > 0, got $nBuckets")
-    import spark.implicits._
     val idx = Retrieval.buildIndex(docs, idCol, textCol)
-    idx.postings
-      .join(idx.termStats, Seq("term"))
-      .withColumn("bucket", bucketOf(nBuckets))
-      // cluster by the partition column before the write: without it every
-      // task writes a file into every bucket directory (tasks × buckets
-      // small files — guide §6's small-file trap); with it each bucket is
-      // one file and the pruned search opens |touched buckets| files
-      .repartition(nBuckets, col("bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(s"$outDir/postings")
-    Seq((idx.nDocs, idx.totalTerms, nBuckets))
-      .toDF("n_docs", "total_terms", "n_buckets")
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/meta")
+    Buckets.write(
+      idx.postings.join(idx.termStats, Seq("term"))
+        .withColumn("bucket", Buckets.of(col("term"), nBuckets)),
+      "bucket", nBuckets, s"$outDir/postings")
+    Buckets.writeMeta(spark, s"$outDir/meta", Seq(Meta(idx.nDocs, idx.totalTerms, nBuckets)))
   }
 
   def search(spark: SparkSession, outDir: String, queries: DataFrame,
       minMatchNum: Int = 3, minMatchDen: Int = 5,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val meta = spark.read.parquet(s"$outDir/meta").head
-    val nDocs = meta.getAs[Long]("n_docs")
-    val totalTerms = meta.getAs[Long]("total_terms")
-    val nBuckets = meta.getAs[Int]("n_buckets")
+    val meta = Buckets.readMeta[Meta](spark, s"$outDir/meta").head
     // materialized once: the tiny term set feeds the bucket collect, the
     // term-pushdown list AND the probe join
     val qt = Retrieval.queryTerms(queries).localCheckpoint(true)
-    val (buckets, terms) = collectTermBuckets(qt, nBuckets)
-    val pruned = spark.read.parquet(s"$outDir/postings")
-      .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
+    val (buckets, terms) = collectTermBuckets(qt, meta.nBuckets)
+    val pruned = Buckets.read(spark, s"$outDir/postings", "bucket", buckets)
     Retrieval.scoreMatched(
       termPushdown(pruned, terms).join(broadcast(qt), Seq("term")),
-      nDocs, totalTerms.toDouble / nDocs.toDouble, minMatchNum, minMatchDen, k1, b)
+      meta.nDocs, meta.totalTerms.toDouble / meta.nDocs.toDouble, minMatchNum, minMatchDen, k1, b)
   }
 
   /** ONE driver read of the (bounded) distinct query terms serves both
@@ -88,13 +79,12 @@ object RetrievalIndexJob {
     // lists complete in one job); the 1001st row proves the term set is
     // too large for row-level pushdown, and the collect falls back to the
     // ≤ nBuckets distinct-bucket list (the always-bounded surface)
-    val rows = qt.select(col("term"), bucketOf(nBuckets).as("b")).distinct()
+    val rows = qt.select(col("term"), Buckets.of(col("term"), nBuckets).as("b")).distinct()
       .limit(1001).collect()
     if (rows.length <= 1000)
       (rows.map(_.getInt(1)).distinct.sorted, Some(rows.map(_.getString(0)).distinct))
     else
-      (qt.select(bucketOf(nBuckets).as("b")).distinct()
-        .collect().map(_.getInt(0)).sorted, None)
+      (Buckets.touched(qt.select(Buckets.of(col("term"), nBuckets))), None)
   }
 
   /** Row-level term pushdown beside the partition-level bucket pruning:
@@ -127,21 +117,13 @@ object RetrievalIndexJob {
     require(nBuckets > 0, s"RetrievalIndexJob.addSegment: nBuckets must be > 0, got $nBuckets")
     require(segment.matches("[A-Za-z0-9_-]+"),
       s"RetrievalIndexJob.addSegment: segment name must be path-safe, got '$segment'")
-    import spark.implicits._
     val idx = Retrieval.buildIndex(docs, idCol, textCol)
-    idx.postings
-      .withColumn("bucket", bucketOf(nBuckets))
-      .repartition(nBuckets, col("bucket")) // one file per bucket (see build)
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(s"$outDir/segments/$segment/postings")
-    idx.termStats
-      .withColumn("bucket", bucketOf(nBuckets))
-      .repartition(nBuckets, col("bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(s"$outDir/segments/$segment/terms")
-    Seq((segment, idx.nDocs, idx.totalTerms, nBuckets))
-      .toDF("segment", "n_docs", "total_terms", "n_buckets")
-      .write.mode(SaveMode.Append).parquet(s"$outDir/segmeta")
+    Buckets.write(idx.postings.withColumn("bucket", Buckets.of(col("term"), nBuckets)),
+      "bucket", nBuckets, s"$outDir/segments/$segment/postings")
+    Buckets.write(idx.termStats.withColumn("bucket", Buckets.of(col("term"), nBuckets)),
+      "bucket", nBuckets, s"$outDir/segments/$segment/terms")
+    Buckets.writeMeta(spark, s"$outDir/segmeta",
+      Seq(SegMeta(segment, idx.nDocs, idx.totalTerms, nBuckets)), SaveMode.Append)
   }
 
   /** Search across every registered segment: global n_docs/avgdl from the
@@ -157,28 +139,24 @@ object RetrievalIndexJob {
       minMatchNum: Int = 3, minMatchDen: Int = 5,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val metas =
-      try spark.read.parquet(s"$outDir/segmeta").collect()
+      try Buckets.readMeta[SegMeta](spark, s"$outDir/segmeta")
       catch {
         case e: org.apache.spark.sql.AnalysisException =>
           throw new IllegalArgumentException(
             s"searchSegments: no segment registry at $outDir/segmeta", e)
       }
     require(metas.nonEmpty, s"searchSegments: no segments registered under $outDir")
-    val nBucketsAll = metas.map(_.getAs[Int]("n_buckets")).distinct
+    val nBucketsAll = metas.map(_.nBuckets).distinct
     require(nBucketsAll.length == 1,
       s"searchSegments: segments disagree on n_buckets: ${nBucketsAll.mkString(",")}")
     val nBuckets = nBucketsAll.head
-    val nDocs = metas.map(_.getAs[Long]("n_docs")).sum
-    val totalTerms = metas.map(_.getAs[Long]("total_terms")).sum
-    val segments = metas.map(_.getAs[String]("segment")).sorted
+    val nDocs = metas.map(_.nDocs).sum
+    val totalTerms = metas.map(_.totalTerms).sum
+    val segments = metas.map(_.segment).sorted
     val qt = Retrieval.queryTerms(queries).localCheckpoint(true)
     val (buckets, qtTerms) = collectTermBuckets(qt, nBuckets) // once — all segments share
-    val bucketIds = buckets.map(Integer.valueOf)
     def pruned(sub: String): DataFrame =
-      termPushdown(
-        spark.read.parquet(s"$outDir/segments/$sub")
-          .filter(col("bucket").isin(bucketIds: _*)),
-        qtTerms)
+      termPushdown(Buckets.read(spark, s"$outDir/segments/$sub", "bucket", buckets), qtTerms)
     val dfGlobal = segments.map(s => pruned(s"$s/terms"))
       .reduce(_ unionByName _)
       .join(broadcast(qt.select("term").distinct()), Seq("term"))

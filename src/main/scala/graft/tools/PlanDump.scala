@@ -30,6 +30,9 @@ object PlanDump {
       "/([^/\\s,\\]]*?)\\d+(?=[/\\s,\\]]|$)", "<tmp>/$1N")
     .replaceAll("( at \\w+\\.scala):\\d+", "$1:N")
 
+  /** Exits non-zero when any query failed, after every other plan is
+    * written, so a plan comparison cannot silently miss a query.
+    */
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
@@ -44,10 +47,23 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val failed = try dump(spark, sfDir, outDir, suffix, only) finally spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[plandump] ${failed.size} queries failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Write the canonical plan of each selected query to
+    * `<outDir>/<query>_<suffix>.txt`, going on past a query that fails.
+    * Returns the names of the failed queries.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String, suffix: String,
+      only: Option[Set[String]]): Seq[String] = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(p => n == p || n.startsWith(p + "_"))) }
-      .foreach { case (name, fn) =>
+      .flatMap { case (name, fn) =>
         try {
           val df = fn(spark, sfDir)
           val plan = df.queryExecution.explainString(
@@ -55,10 +71,11 @@ object PlanDump {
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), canonical(plan))
           System.err.println(s"[plandump] $name ok")
+          None
         } catch { case e: Throwable =>
           System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
+          Some(name)
         }
       }
-    spark.stop()
   }
 }

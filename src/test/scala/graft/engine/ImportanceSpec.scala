@@ -68,6 +68,22 @@ class ImportanceSpec extends AnyFunSuite {
     assert(d0.getAs[Long]("target_mass") == 2L + 2L + 0L)
   }
 
+  test("a document minCount prunes out entirely: NULL rel_mass, not selected") {
+    // minCount 2 prunes every bigram seen once; doc 4's only bigram, "lone
+    // pair", is one of them, so no raw-model term is left for its raw_mass
+    val withLone = raw.union(Seq((4L, "lone pair", "web")).toDF("doc_id", "text", "src"))
+    val w = Importance.importanceWeights(
+      withLone, withLone.filter($"src" === "wiki"), "doc_id", "text", tau = 0.0, minCount = 2L)
+    val byId = w.collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
+    val d4 = byId(4L)
+    assert(d4.getAs[Long]("raw_mass") == 0L && d4.getAs[Long]("target_mass") == 0L)
+    assert(d4.isNullAt(d4.fieldIndex("rel_mass")))
+    assert(!d4.getAs[Boolean]("selected"), "tau 0 selects every scored doc but this one")
+    assert(!d4.isNullAt(d4.fieldIndex("logratio_4dp")))
+    // the other documents are scored as before
+    assert(byId(0L).getAs[Boolean]("selected"))
+  }
+
   /** The operator with its model totals pulled to the driver (two eager
     * checkpoints and two `.head`s) before the scoring plan is built: the
     * reference oracle for the one-plan body.
@@ -100,11 +116,11 @@ class ImportanceSpec extends AnyFunSuite {
         sum(col("cr")).as("raw_mass"),
         sum(log((col("ct") + lit(1.0)) / lit((tt + v).toDouble)) -
           log((col("cr") + lit(1.0)) / lit((tr + v).toDouble))).as("__lr"))
-      .withColumn("rel_mass",
+      .withColumn("rel_mass", when(col("raw_mass") =!= 0L,
         (col("target_mass").cast("double") / lit(tt.toDouble)) /
-          (col("raw_mass").cast("double") / lit(tr.toDouble)))
+          (col("raw_mass").cast("double") / lit(tr.toDouble))))
       .withColumn("logratio_4dp", round(col("__lr"), 4))
-      .withColumn("selected", col("rel_mass") >= lit(tau))
+      .withColumn("selected", coalesce(col("rel_mass") >= lit(tau), lit(false)))
       .drop("__lr")
   }
 
@@ -112,11 +128,8 @@ class ImportanceSpec extends AnyFunSuite {
     "Importance.importanceWeights: empty target model",
     "Importance.importanceWeights: empty raw model")
 
-  /** Failures both bodies share: an empty model, or a document whose
-    * bigrams `minCount` pruned from the raw model entirely (raw_mass 0, so
-    * rel_mass divides by zero under ANSI).
-    */
-  private val knownFailures = emptyModel :+ "[DIVIDE_BY_ZERO]"
+  /** Failures both bodies share: an empty model. */
+  private val knownFailures = emptyModel
 
   test("random corpora: rows and doubles equal the driver-totals reference") {
     val token = Gen.frequency(

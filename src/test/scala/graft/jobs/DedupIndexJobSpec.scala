@@ -1,9 +1,11 @@
 package graft.jobs
 
-import graft.engine.{SparkTestBase, TempDirs}
+import graft.engine.{PropCheck, SparkTestBase, TempDirs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
+import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Incremental snapshot-dedup index: persisted build round-trip, the
@@ -182,5 +184,36 @@ class DedupIndexJobSpec extends AnyFunSuite with TempDirs {
     intercept[IllegalArgumentException] {
       DedupIndexJob.build(spark, snapshot, "text", "/tmp/x", nBuckets = 4, fpp = 1.5)
     }
+  }
+
+  test("random batches: novelAgainst equals a naive anti-join on the text") {
+    import spark.implicits._
+    val word = Gen.oneOf("alpha", "beta", "gamma", "delta", "eps")
+    val text: Gen[String] = Gen.frequency(
+      1 -> Gen.const(null: String),
+      1 -> Gen.const(""),
+      8 -> Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, word).map(_.mkString(" "))))
+    val cases = for {
+      snap <- Gen.choose(1, 30).flatMap(Gen.listOfN(_, text))
+      // fresh texts (repeats likely: the vocabulary is small) and copies of
+      // indexed texts under new ids; sometimes no rows at all
+      fresh <- Gen.choose(0, 20).flatMap(Gen.listOfN(_, text))
+      copies <- Gen.choose(0, 15).flatMap(Gen.listOfN(_, Gen.oneOf(snap)))
+      batch <- Gen.frequency(1 -> Gen.const(Nil), 7 -> Gen.const(fresh ++ copies))
+      nBuckets <- Gen.oneOf(1, 2, 7, 16)
+      // at fpp 0.5 about half the novel rows pass the bloom and need the confirm
+      fpp <- Gen.oneOf(0.01, 0.5)
+    } yield (snap, batch, nBuckets, fpp)
+    PropCheck(Prop.forAllNoShrink(cases) { case (snap, batch, nBuckets, fpp) =>
+      val out = tempDir("graft_dedup_idx_prop").toString
+      DedupIndexJob.build(spark, snap.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text"), "text", out, nBuckets, fpp)
+      val rows = batch.zipWithIndex.map { case (t, i) => (1000L + i, t) }
+      val indexed = snap.map(t => Option(t).getOrElse("")).toSet
+      val want = rows.filterNot { case (_, t) => indexed(Option(t).getOrElse("")) }.sorted
+      val got = DedupIndexJob.novelAgainst(spark, rows.toDF("doc_id", "text"), "text", out)
+        .as[(Long, String)].collect().toSeq.sorted
+      (got == want) :| s"snap=$snap batch=$batch nBuckets=$nBuckets fpp=$fpp\nwant=$want\ngot=$got"
+    }, minSuccessful = 16)
   }
 }

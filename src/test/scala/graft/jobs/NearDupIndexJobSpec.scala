@@ -1,8 +1,10 @@
 package graft.jobs
 
 import graft.core.Fingerprint
-import graft.engine.{Dedup, SparkTestBase, TempDirs}
+import graft.engine.{Dedup, PropCheck, SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
 class NearDupIndexJobSpec extends AnyFunSuite with TempDirs {
@@ -100,5 +102,34 @@ class NearDupIndexJobSpec extends AnyFunSuite with TempDirs {
     assert(!got.exists(p => p.a == p.b), s"self-pair leaked: ${got.toList}")
     // doc 0 still pairs with its near-identical sibling 1
     assert(got.exists(p => p.a == 0L && p.b == 1L))
+  }
+
+  test("random splits: build then update equals build from scratch") {
+    val word = Gen.oneOf("alpha", "beta", "gamma", "delta", "eps", "zeta")
+    val doc = Gen.choose(3, 10).flatMap(n => Gen.listOfN(n, word).map(_.mkString(" ")))
+    val cases = for {
+      n <- Gen.choose(1, 12)
+      texts <- Gen.listOfN(n, doc)
+      // docs [0, cut) are built, docs [cut, n) arrive as the update batch,
+      // which also repeats the first `again` indexed docs (already present
+      // by id, so they add nothing)
+      cut <- Gen.choose(1, n)
+      again <- Gen.choose(0, cut)
+      nBuckets <- Gen.oneOf(1, 2, 7, 16)
+    } yield (texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }, cut, again, nBuckets)
+    def tables(dir: String) = Seq("bands", "sigs")
+      .map(t => SparkTestBase.exactRows(spark.read.parquet(s"$dir/$t")))
+    PropCheck(Prop.forAllNoShrink(cases) { case (docs, cut, again, nBuckets) =>
+      val incDir = freshDir()
+      NearDupIndexJob.build(spark, docs.take(cut).toDS(), incDir, nBuckets)
+      val added = NearDupIndexJob.update(spark, (docs.drop(cut) ++ docs.take(again)).toDS(), incDir)
+      val fullDir = freshDir()
+      NearDupIndexJob.build(spark, docs.toDS(), fullDir, nBuckets)
+      val ctx = s"docs=$docs cut=$cut again=$again nBuckets=$nBuckets"
+      ((added == docs.size - cut) :| s"$ctx added=$added") &&
+        ((NearDupIndexJob.readMeta(spark, incDir) == NearDupIndexJob.readMeta(spark, fullDir)) :|
+          s"$ctx meta") &&
+        ((tables(incDir) == tables(fullDir)) :| s"$ctx tables")
+    }, minSuccessful = 12)
   }
 }

@@ -29,6 +29,24 @@ class PlanDumpSpec extends AnyFunSuite {
     assert(PlanDump.canonical(raw) == want)
   }
 
+  test("dump writes every plan it can and names the queries that failed") {
+    val out = java.nio.file.Files.createTempDirectory("graft_plandump")
+    try {
+      // a table directory holding lineitem only: q01 reads just that, q02
+      // also needs orders and fails without stopping the dump
+      import spark.implicits._
+      val sf = out.resolve("sf").toString
+      Seq(("A", "F", 1.0, 2.0, 0.1, java.sql.Timestamp.valueOf("1998-01-01 00:00:00")))
+        .toDF("l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice", "l_discount",
+          "l_shipdate")
+        .write.parquet(s"$sf/lineitem.parquet")
+      val failed = PlanDump.dump(spark, sf, out.toString, "t", Some(Set("q02", "q01")))
+      assert(failed == Seq("q02_broadcast_join"))
+      assert(out.resolve("q01_pushdown_agg_t.txt").toFile.length() > 0)
+      assert(!out.resolve("q02_broadcast_join_t.txt").toFile.exists())
+    } finally graft.jobs.Staging.deleteTree(out)
+  }
+
   test("two builds of one query dump the same canonical plan") {
     import spark.implicits._
     def build(): String = {
