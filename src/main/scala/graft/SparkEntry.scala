@@ -328,16 +328,8 @@ object SparkEntry {
     // ---- extraction pipeline (flagship path over real tables) ----
     "q23_extract_sha" -> ((s, dir) => {
       // text-passthrough extraction: sha + token counts oracle-checkable
-      import s.implicits._
-      t(s, dir, "documents").select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) =>
-          // only (n_tokens, sha) are consumed — the hand-pruned projection
-          // of extractOne (Catalyst cannot prune through the closure)
-          val (_, nTok, sha) = Extraction.extractTextStats(
-            PageRow(id.toString, null, Array.empty[Byte], text, ""))
-          (id, nTok.toLong, sha)
-        })
-        .toDF("doc_id", "n_tokens", "text_sha256")
+      withTextStats(t(s, dir, "documents").select(col("doc_id"), col("text")))
+        .select("doc_id", "n_tokens", "text_sha256")
         .orderBy(col("doc_id"))
     }),
     "q24_extract_entities" -> ((s, dir) => {
@@ -881,17 +873,12 @@ object SparkEntry {
       // at 100× input)
       val clean = s3.join(contaminated, Seq("doc_id"), "left_anti").localCheckpoint(true)
       val deduped = Dedup.dedupLines(clean, "doc_id", "page_text")
-      deduped.select(col("doc_id"), col("page_text")).as[(Long, String)]
-        .mapPartitions(_.map { case (i, txt) =>
-          // the pipeline's emitted surface is (tokens, sha) of the redacted
-          // text — the hand-pruned extractOne projection (same tokenizer
-          // boundaries, same sha; the scorer/merge kernels whose outputs
-          // this stage drops are skipped)
-          val (_, nTok, sha) = Extraction.extractTextStats(
-            PageRow(i.toString, null, Array.empty[Byte], Redact.redactPII(txt), ""))
-          (i, nTok.toLong, sha)
-        })
-        .toDF("doc_id", "n_tokens", "text_sha256")
+      // the pipeline's emitted surface is (tokens, sha) of the redacted text
+      val redacted = deduped.select(col("doc_id"), col("page_text")).as[(Long, String)]
+        .map { case (i, txt) => (i, Redact.redactPII(txt)) }
+        .toDF("doc_id", "text")
+      withTextStats(redacted)
+        .select("doc_id", "n_tokens", "text_sha256")
         .orderBy("doc_id")
     }),
     "q34_geometry" -> ((s, dir) => {
@@ -1081,11 +1068,10 @@ object SparkEntry {
     }),
     "q44_stream_extract" -> ((s, dir) => {
       // Structured Streaming flagship: stream the REAL documents table
-      // through the extraction pipeline (typed mapPartitions inside a
-      // stream); the oracle checks tokens + sha256 per document in DuckDB.
+      // through the extraction stats (plan columns inside a stream); the
+      // oracle checks tokens + sha256 per document in DuckDB.
       // The memory sink is an oracle surface only — the production sink is
       // a checkpointed file/Kafka sink (PLANS.md).
-      import s.implicits._
       // (deleted once the query stops: the memory sink holds the rows)
       val stage = java.nio.file.Files.createTempDirectory("graft_stream_docs")
       val qname = "graft_stream_extract_" + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -1107,15 +1093,8 @@ object SparkEntry {
         } else java.nio.file.Files.copy(srcP, stage.resolve("documents.parquet"))
         val schema = s.read.parquet(stage.toString).schema
         val stream = s.readStream.schema(schema).parquet(stage.toString)
-          .select(col("doc_id"), col("text")).as[(Long, String)]
-        val extracted = stream
-          .mapPartitions(_.map { case (id, text) =>
-            // tokens/sha only — the hand-pruned extractOne projection
-            val (_, nTok, sha) = Extraction.extractTextStats(
-              PageRow(id.toString, null, Array.empty[Byte], text, ""))
-            (id, nTok.toLong, sha)
-          })
-          .toDF("doc_id", "n_tokens", "text_sha256")
+          .select(col("doc_id"), col("text"))
+        val extracted = withTextStats(stream).select("doc_id", "n_tokens", "text_sha256")
         val q = extracted.writeStream.outputMode("append").format("memory").queryName(qname).start()
         q.processAllAvailable(); q.stop()
       } finally graft.jobs.Staging.deleteTree(stage)
@@ -1144,15 +1123,9 @@ object SparkEntry {
       // extractor must drop, script/title excluded, content in <article>);
       // the golden extracted text is the original text, so length/tokens/
       // sha256 are SQL-checkable against the raw table.
-      import s.implicits._
-      t(s, dir, "documents").select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) =>
-          // chars/tokens/sha only — the hand-pruned extractOne projection
-          val (et, nTok, sha) = Extraction.extractTextStats(PageRow(id.toString, null,
-            boilerplateWrap(text).getBytes(java.nio.charset.StandardCharsets.UTF_8), "", ""))
-          (id, et.length.toLong, nTok.toLong, sha)
-        })
-        .toDF("doc_id", "n_chars_extracted", "n_tokens", "text_sha256")
+      withTextStats(t(s, dir, "documents").select(col("doc_id"),
+        GraftFunctions.html_text(boilerplateWrap(col("text"))).as("text")))
+        .select("doc_id", "n_chars_extracted", "n_tokens", "text_sha256")
         .orderBy(col("doc_id"))
     }),
     "q49_fixture_golden" -> ((s, _) => {
@@ -1619,20 +1592,8 @@ object SparkEntry {
       // text, so every output column is SQL-checkable against the raw
       // table: ids/timestamps are closed-form, chars/tokens/sha replay
       // q48's extraction contract.
-      import s.implicits._
-      val warcDir = cachedWarcDir(s, dir)
-      graft.sources.Warc.read(s, warcDir)
-        .select(col("url"), col("warc_ts"), col("html"),
-          lit("").as("text"), lit("").as("lang"))
-        .as[PageRow]
-        .mapPartitions(_.map { p =>
-          // chars/tokens/sha only — the hand-pruned extractOne projection
-          val (et, nTok, sha) = Extraction.extractTextStats(p)
-          (p.url.substring(p.url.lastIndexOf('/') + 1).toLong,
-            p.warc_ts.getTime / 1000L,
-            et.length.toLong, nTok.toLong, sha)
-        })
-        .toDF("doc_id", "ts_epoch", "n_chars_extracted", "n_tokens", "text_sha256")
+      withTextStats(warcDocs(graft.sources.Warc.read(s, cachedWarcDir(s, dir))))
+        .select("doc_id", "ts_epoch", "n_chars_extracted", "n_tokens", "text_sha256")
         .orderBy("doc_id")
     }),
     "q76_heavy_hitters" -> ((s, dir) => {
@@ -1666,22 +1627,13 @@ object SparkEntry {
       // the whole chain as one text-level anti-join because extraction of
       // the wrapped page returns the original text byte-identically
       // (q48's contract) and the index is an exact summary (q74's).
-      import s.implicits._
       val warcDir = cachedWarcDir(s, dir)
       val snapshot = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .filter(col("doc_id") % 4 =!= 0)
       val idx = graft.jobs.DedupIndexJob.cachedIndexDir(
         s"$dir/documents#q74", s, snapshot, "text", nBuckets = 16)
-      val extracted = graft.sources.Warc.read(s, warcDir)
-        .select(col("url"), col("warc_ts"), col("html"),
-          lit("").as("text"), lit("").as("lang"))
-        .as[PageRow]
-        .mapPartitions(_.map { p =>
-          // text/tokens only — the hand-pruned extractOne projection
-          val (et, nTok, _) = Extraction.extractTextStats(p)
-          (p.url.substring(p.url.lastIndexOf('/') + 1).toLong, et, nTok.toLong)
-        })
-        .toDF("doc_id", "text", "n_tokens")
+      val extracted = withTextStats(warcDocs(graft.sources.Warc.read(s, warcDir)))
+        .select("doc_id", "text", "n_tokens")
         // one eager checkpoint: the batch lineage here is parse+extract —
         // novelAgainst otherwise re-executes it for the touched-bucket
         // collect AND both output branches (measured 1.5x the checkpointed
@@ -1702,22 +1654,13 @@ object SparkEntry {
       // relation as q77, so the oracle is identical; the memory sink is
       // the oracle surface, the production sink is the checkpointed file
       // sink evidenced by StreamFileSinkSpec.
-      import s.implicits._
       val warcDir = cachedWarcDir(s, dir)
       val snapshot = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .filter(col("doc_id") % 4 =!= 0)
       val idx = graft.jobs.DedupIndexJob.cachedIndexDir(
         s"$dir/documents#q74", s, snapshot, "text", nBuckets = 16)
-      val stream = graft.sources.Warc.readStream(s, warcDir)
-        .select(col("url"), col("warc_ts"), col("html"),
-          lit("").as("text"), lit("").as("lang"))
-        .as[PageRow]
-        .mapPartitions(_.map { p =>
-          // text/tokens only — the hand-pruned extractOne projection
-          val (et, nTok, _) = Extraction.extractTextStats(p)
-          (p.url.substring(p.url.lastIndexOf('/') + 1).toLong, et, nTok.toLong)
-        })
-        .toDF("doc_id", "text", "n_tokens")
+      val stream = withTextStats(warcDocs(graft.sources.Warc.readStream(s, warcDir)))
+        .select("doc_id", "text", "n_tokens")
       val novel = graft.jobs.DedupIndexJob.novelAgainstStream(s, stream, "text", idx)
         .select(col("doc_id"), col("n_tokens"),
           sha2(coalesce(col("text"), lit("")), 256).as("sha"))
@@ -1912,21 +1855,10 @@ object SparkEntry {
       // must be lossless vs the sequential parse. Archive+index build is
       // memoized per JVM (the q47/q74/q84 convention — trial 2 measures
       // the indexed read).
-      import s.implicits._
       val base = cachedIndexedWarcDir(s, dir)
       val idx = s.read.parquet(s"$base/index").filter(col("warc_type") === "response")
-      graft.sources.Warc.readIndexed(s, idx)
-        .select(col("url"), col("warc_ts"), col("html"),
-          lit("").as("text"), lit("").as("lang"))
-        .as[PageRow]
-        .mapPartitions(_.map { p =>
-          // chars/tokens/sha only — the hand-pruned extractOne projection
-          val (et, nTok, sha) = Extraction.extractTextStats(p)
-          (p.url.substring(p.url.lastIndexOf('/') + 1).toLong,
-            p.warc_ts.getTime / 1000L,
-            et.length.toLong, nTok.toLong, sha)
-        })
-        .toDF("doc_id", "ts_epoch", "n_chars_extracted", "n_tokens", "text_sha256")
+      withTextStats(warcDocs(graft.sources.Warc.readIndexed(s, idx)))
+        .select("doc_id", "ts_epoch", "n_chars_extracted", "n_tokens", "text_sha256")
         .orderBy("doc_id")
     }),
     "q92_canonical_dedup" -> ((s, dir) => {
@@ -2559,15 +2491,43 @@ object SparkEntry {
         s"replace(replace($acc, $pat, $rep), $pat, $rep)"
       }
 
-  /** The q48/q75 extraction-oracle HTML template: link-dense nav + footer
-    * the extractor must drop, script/title excluded, content in <article>
-    * — so the golden extracted text is exactly the wrapped text.
+  /** The q48/q75 extraction-oracle HTML template, as UTF-8 page bytes:
+    * link-dense nav + footer the extractor must drop, script/title
+    * excluded, content in <article> — so the golden extracted text is
+    * exactly the wrapped text. A null text has no page (null).
     */
-  private def boilerplateWrap(text: String): String =
-    "<html><head><title>t</title><script>var x=1;</script></head><body>" +
+  private def boilerplateWrap(text: Column): Column = concat(
+    lit("<html><head><title>t</title><script>var x=1;</script></head><body>" +
       "<nav><a href=\"/a\">home</a> <a href=\"/b\">about</a> <a href=\"/c\">contact</a></nav>" +
-      s"<article><p>$text</p></article>" +
-      "<footer><a href=\"/d\">privacy</a> <a href=\"/e\">terms</a></footer></body></html>"
+      "<article><p>"),
+    text,
+    lit("</p></article>" +
+      "<footer><a href=\"/d\">privacy</a> <a href=\"/e\">terms</a></footer></body></html>"),
+  ).cast("binary")
+
+  /** `pages` with its `text` column resolved (null reads as "") and the
+    * extraction contract's stats of that text beside it: `n_chars_extracted`
+    * in UTF-16 units (Java's `String.length`, not Spark's code-point
+    * `length`), `n_tokens` and the hex `text_sha256` — the fields
+    * [[Extraction.extractTextStats]] computes, as plan columns, so Catalyst
+    * drops every stat a query does not read.
+    */
+  private[graft] def withTextStats(pages: DataFrame): DataFrame = {
+    val text = col("text")
+    pages.withColumn("text", coalesce(text, lit(""))).select(col("*"),
+      (octet_length(encode(text, "UTF-16LE")) / 2).cast("long").as("n_chars_extracted"),
+      GraftFunctions.token_count(text).cast("long").as("n_tokens"),
+      sha2(text, 256).as("text_sha256"))
+  }
+
+  /** A WARC page set as q48-style documents: the doc id is the url's last
+    * path segment, `ts_epoch` the capture time in epoch seconds and `text`
+    * the page's extracted html text.
+    */
+  private def warcDocs(pages: DataFrame): DataFrame = pages.select(
+    substring_index(col("url"), "/", -1).cast("long").as("doc_id"),
+    unix_seconds(col("warc_ts")).as("ts_epoch"),
+    GraftFunctions.html_text(col("html")).as("text"))
 
   /** The page set q75 and q91 stage as WARC archives: each document's text
     * in the [[boilerplateWrap]] template at a closed-form url and capture
@@ -2575,17 +2535,12 @@ object SparkEntry {
     * the session's full parallelism, not a fixed file count — a fixed 8
     * made the sf1 staging 4x slower than the read it feeds).
     */
-  private def wrappedPages(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    t(s, dir, "documents").select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        (s"https://docs.example.com/d/$id",
-          new java.sql.Timestamp((1700000000L + id) * 1000L),
-          boilerplateWrap(text).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      })
-      .toDF("url", "warc_ts", "html")
+  private def wrappedPages(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
+      .select(concat(lit("https://docs.example.com/d/"), col("doc_id")).as("url"),
+        timestamp_seconds(col("doc_id") + 1700000000L).as("warc_ts"),
+        boilerplateWrap(col("text")).as("html"))
       .repartition(math.max(8, s.sparkContext.defaultParallelism))
-  }
 
   // q75's WARC staging, built once per sf dir per JVM (bench trial 2
   // measures the read+extract path, not the serialization); production

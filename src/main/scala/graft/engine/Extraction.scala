@@ -145,7 +145,7 @@ object Extraction {
     */
   private def resolveText(row: PageRow): String =
     if (row.text != null && row.text.nonEmpty) row.text
-    else if (row.html != null && row.html.nonEmpty) Html.extract(Html.decodeBytes(row.html)).text
+    else if (row.html != null && row.html.nonEmpty) graft.functions.StringKernels.htmlText(row.html)
     else ""
 
   /** The labels of a text whose whitespace tokens are `packed`: score →
@@ -191,14 +191,12 @@ object Extraction {
   }
 
   /** The (extracted_text, n_tokens, text_sha256) projection of
-    * [[extractOne]]. Catalyst cannot prune columns through an opaque
-    * mapPartitions closure, so callers that consume ONLY these three
-    * fields (sha/token-count oracle surfaces: q23/q44/q48/q59/q75/q77/q91)
-    * must do the pruning by hand — this shares extractOne's text
-    * resolution, counts with the same tokenizer boundary rules, and skips
-    * the scorer/merge/langid/simhash kernels whose outputs such callers
-    * drop (guide §1.2: don't compute what you throw away). Field-for-field
-    * agreement with [[extractOne]] is spec-pinned (ExtractionSpec).
+    * [[extractOne]], row by row: the reference the column form is checked
+    * against, and perfbench's `text_stats` kernel. Queries do not call it —
+    * they compute the same stats as plan columns (`graft_html_text`,
+    * `graft_token_count`, `sha2`), which Catalyst prunes to the ones they
+    * read. Agreement with [[extractOne]] and with the column form is
+    * spec-pinned (ExtractionSpec).
     */
   def extractTextStats(row: PageRow): (String, Int, String) = {
     val text = resolveText(row)

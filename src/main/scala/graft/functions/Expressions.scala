@@ -1,12 +1,12 @@
 package graft.functions
 
-import graft.core.{Fingerprint, Rx}
+import graft.core.{Fingerprint, Html, Rx}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** JVM kernels callable from generated code (whole-stage codegen emits
@@ -36,6 +36,12 @@ object StringKernels {
   }
 
   def simhash64(s: UTF8String): Long = Fingerprint.simhash64(s.toString)
+
+  /** A page's text from its html bytes: BOM-aware UTF-8 decode, then the
+    * boilerplate-stripped main text. The one html→text rule —
+    * [[graft.engine.Extraction]]'s html branch calls it too.
+    */
+  def htmlText(html: Array[Byte]): String = Html.extract(Html.decodeBytes(html)).text
 }
 
 /** Native token-count expression: codegen-friendly (stays inside the
@@ -73,6 +79,25 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   override def prettyName: String = "graft_simhash64"
 }
 
+/** Native html→text expression: binary page markup to its extracted main
+  * text ([[StringKernels.htmlText]]), so the text and the stats computed
+  * from it stay plan columns that Catalyst can prune.
+  */
+case class HtmlText(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires a binary argument, got ${child.dataType.catalogString}")
+  override def dataType: DataType = StringType
+  override def nullSafeEval(v: Any): Any =
+    UTF8String.fromString(StringKernels.htmlText(v.asInstanceOf[Array[Byte]]))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"org.apache.spark.unsafe.types.UTF8String.fromString(graft.functions.StringKernels.htmlText($c))")
+  override protected def withNewChildInternal(newChild: Expression): HtmlText = copy(child = newChild)
+  override def prettyName: String = "graft_html_text"
+}
+
 /** Deterministic 64-bit shuffle key — `rotl64((id + seed) * A, 32) * A`
   * with A = 6364136223846793005 (MMIX's odd multiplier), all arithmetic
   * wrapping mod 2^64 ([[graft.engine.Pack.seededShuffle]]). Spark's ANSI
@@ -107,10 +132,13 @@ case class ShuffleKey64(child: Expression, seed: Long) extends UnaryExpression {
   override def prettyName: String = "graft_shuffle_key64"
 }
 
-/** Column-level API + SQL registration for the native expressions. */
+/** Column-level API for the native expressions; [[GraftExtensions]]
+  * registers the SQL names of `graft_token_count` and `graft_simhash64`.
+  */
 object GraftFunctions {
   def token_count(c: Column): Column = ColumnBridge.column(TokenCount(ColumnBridge.expression(c)))
   def simhash64(c: Column): Column = ColumnBridge.column(SimHash64(ColumnBridge.expression(c)))
+  def html_text(c: Column): Column = ColumnBridge.column(HtmlText(ColumnBridge.expression(c)))
   def shuffle_key64(c: Column, seed: Long): Column =
     ColumnBridge.column(ShuffleKey64(ColumnBridge.expression(c), seed))
 
@@ -118,13 +146,5 @@ object GraftFunctions {
     if (exprs.length != 1)
       throw new IllegalArgumentException(s"$name expects exactly 1 argument, got ${exprs.length}")
     exprs.head
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("graft_token_count",
-      exprs => TokenCount(unary("graft_token_count", exprs)), "built-in")
-    registry.createOrReplaceTempFunction("graft_simhash64",
-      exprs => SimHash64(unary("graft_simhash64", exprs)), "built-in")
   }
 }

@@ -40,17 +40,6 @@ object AnnIndexJob {
   def autoSampleCap(nCells: Int): Int =
     math.max(2048, math.min(1 << 17, 32 * nCells))
 
-  /** [[build]] with size-derived quantizer parameters: one corpus count
-    * chooses nCells ≈ √N and a matching sample cap.
-    */
-  def buildAuto(
-      spark: SparkSession,
-      corpus: Dataset[(Long, Array[Float])],
-      outDir: String): Similarity.IvfIndex = {
-    val cells = autoCells(corpus.count())
-    build(spark, corpus, outDir, nCells = cells, sampleCap = autoSampleCap(cells))
-  }
-
   def build(
       spark: SparkSession,
       corpus: Dataset[(Long, Array[Float])],

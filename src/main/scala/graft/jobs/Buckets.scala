@@ -76,4 +76,12 @@ private[jobs] object Buckets {
     spark.read.parquet(path).select(fields.map(f => col(column(f))): _*)
       .toDF(fields: _*).as(enc).collect()
   }
+
+  /** [[readMeta]], or no rows when nothing was ever written at `path`. */
+  def readMetaIfAny[T <: Product: TypeTag](spark: SparkSession, path: String): Seq[T] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      readMeta[T](spark, path).toSeq
+    else Seq.empty
+  }
 }

@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.engine.Retrieval
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted inverted-index job — the lexical twin of [[AnnIndexJob]]: the
@@ -111,6 +111,9 @@ object RetrievalIndexJob {
     * existing segment file; the global df is reassembled at query time
     * from the PRUNED per-segment term tables (query-term-sized work).
     * Caller contract: segments hold disjoint doc ids (crawl batches).
+    * Adding a segment name again (a retried batch) replaces that segment:
+    * its files are overwritten and its `segmeta` row is rewritten, not
+    * appended, so the registry holds one row per name.
     */
   def addSegment(spark: SparkSession, outDir: String, docs: DataFrame,
       idCol: String, textCol: String, segment: String, nBuckets: Int = 64): Unit = {
@@ -122,8 +125,12 @@ object RetrievalIndexJob {
       "bucket", nBuckets, s"$outDir/segments/$segment/postings")
     Buckets.write(idx.termStats.withColumn("bucket", Buckets.of(col("term"), nBuckets)),
       "bucket", nBuckets, s"$outDir/segments/$segment/terms")
-    Buckets.writeMeta(spark, s"$outDir/segmeta",
-      Seq(SegMeta(segment, idx.nDocs, idx.totalTerms, nBuckets)), SaveMode.Append)
+    // the registry is one row per segment: read whole to the driver, so
+    // the overwrite below never reads the files it replaces
+    val registry = s"$outDir/segmeta"
+    val others = Buckets.readMetaIfAny[SegMeta](spark, registry).filterNot(_.segment == segment)
+    Buckets.writeMeta(spark, registry,
+      others :+ SegMeta(segment, idx.nDocs, idx.totalTerms, nBuckets))
   }
 
   /** Search across every registered segment: global n_docs/avgdl from the
@@ -138,13 +145,7 @@ object RetrievalIndexJob {
   def searchSegments(spark: SparkSession, outDir: String, queries: DataFrame,
       minMatchNum: Int = 3, minMatchDen: Int = 5,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val metas =
-      try Buckets.readMeta[SegMeta](spark, s"$outDir/segmeta")
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalArgumentException(
-            s"searchSegments: no segment registry at $outDir/segmeta", e)
-      }
+    val metas = Buckets.readMetaIfAny[SegMeta](spark, s"$outDir/segmeta")
     require(metas.nonEmpty, s"searchSegments: no segments registered under $outDir")
     val nBucketsAll = metas.map(_.nBuckets).distinct
     require(nBucketsAll.length == 1,

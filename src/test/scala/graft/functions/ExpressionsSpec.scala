@@ -77,4 +77,27 @@ class ExpressionsSpec extends AnyFunSuite {
       assert(df.collect().map(_.getInt(0)).toSeq == Seq(2, 2, 2, 2))
     } finally prev.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
   }
+
+  test("html_text runs StringKernels.htmlText inside whole-stage codegen; a string is refused") {
+    val spark = graft.engine.SparkTestBase.spark
+    import org.apache.spark.sql.execution.debug._
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val aqe = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(aqe)
+    try {
+      spark.conf.set(aqe, "false")
+      val (head, tail) = ("<html><body><nav><a href=\"/a\">home</a></nav><article><p>",
+        " plain words of page text the extractor keeps as content</p></article></body></html>")
+      val html = concat(lit(head), col("id").cast("string"), lit(tail))
+      val df = spark.range(2).select(GraftFunctions.html_text(html.cast("binary")).as("t"))
+      val code = df.queryExecution.debug.codegenToSeq().map(_._2).mkString("\n")
+      assert(code.contains("graft.functions.StringKernels.htmlText("))
+      assert(df.collect().map(_.getString(0)).toSeq ==
+        Seq(0, 1).map(i => s"$i plain words of page text the extractor keeps as content"))
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.range(1).select(GraftFunctions.html_text(html)).collect()
+      }
+      assert(e.getMessage.contains("graft_html_text requires a binary argument"))
+    } finally prev.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+  }
 }

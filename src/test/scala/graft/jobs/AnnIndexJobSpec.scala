@@ -107,17 +107,6 @@ class AnnIndexJobSpec extends AnyFunSuite with TempDirs {
       s"mean recall@5 collapsed at 64 cells/16 probes: ${recall.toSeq.sorted}")
   }
 
-  test("buildAuto derives cells/sample from the corpus count and builds a usable index") {
-    import spark.implicits._
-    val out = tempDir("graft_ann_auto").toString
-    AnnIndexJob.buildAuto(spark, corpus, out)
-    val loaded = AnnIndexJob.loadCentroids(spark, out)
-    assert(loaded.centroids.length == AnnIndexJob.autoCells(300)) // = 17
-    val queries = corpus.filter(_._1 < 2).collect().sortBy(_._1)
-    val res = AnnIndexJob.queryIndex(spark, out, queries, 3, nProbe = 4).collect()
-    assert(res.groupBy(_.query_id).forall(_._2.length == 3))
-  }
-
   test("autoCells follows sqrt(N) with clamps") {
     assert(AnnIndexJob.autoCells(0) == 4)
     assert(AnnIndexJob.autoCells(2048) == 45)

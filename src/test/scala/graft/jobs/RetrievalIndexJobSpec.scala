@@ -150,4 +150,28 @@ class RetrievalIndexJobSpec extends AnyFunSuite with TempDirs {
       RetrievalIndexJob.searchSegments(spark, out, queries)
     }
   }
+
+  test("adding a segment name again replaces it: one registry row, unchanged scores") {
+    val out = tempDir("graft_bm25_seg6").toString
+    val docs = Seq((0L, "alpha beta gamma"), (1L, "beta gamma delta"), (2L, "epsilon zeta eta"))
+      .toDF("doc_id", "text")
+    val q = Seq((0L, "beta gamma")).toDF("query_id", "qtext")
+    def scores(): Seq[(Long, Double)] = RetrievalIndexJob.searchSegments(spark, out, q)
+      .select("id", "score").as[(Long, Double)].collect().sortBy(_._1)
+      .map { case (id, sc) => (id, math.rint(sc * 1e4) / 1e4) }.toSeq
+    def registry(): Seq[(String, Long, Long, Int)] = spark.read.parquet(s"$out/segmeta")
+      .select("segment", "n_docs", "total_terms", "n_buckets").as[(String, Long, Long, Int)]
+      .collect().sortBy(_._1).toSeq
+    RetrievalIndexJob.addSegment(spark, out, docs, "doc_id", "text", "a", nBuckets = 4)
+    // df 2 of 3 docs and dl = avgdl = 2: each score is the idf, ln(1.6)
+    assert(scores() == Seq((0L, 0.47), (1L, 0.47)))
+    RetrievalIndexJob.addSegment(spark, out, docs, "doc_id", "text", "a", nBuckets = 4)
+    assert(scores() == Seq((0L, 0.47), (1L, 0.47)))
+    assert(registry() == Seq(("a", 3L, 6L, 4)))
+    // re-adding one segment keeps every other segment's row
+    RetrievalIndexJob.addSegment(spark, out, Seq((3L, "theta iota kappa")).toDF("doc_id", "text"),
+      "doc_id", "text", "b", nBuckets = 4)
+    RetrievalIndexJob.addSegment(spark, out, docs, "doc_id", "text", "a", nBuckets = 4)
+    assert(registry() == Seq(("a", 3L, 6L, 4), ("b", 1L, 2L, 4)))
+  }
 }
