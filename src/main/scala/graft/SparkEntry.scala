@@ -14,8 +14,10 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(graft.jobs.Staging.parquetSchema(spark, path)).parquet(path)
+  }
 
   /** Flagship: full extraction pipeline over the synthetic web corpus —
     * html → boilerplate strip → tokenize → score → merge, zero shuffle.
@@ -776,15 +778,7 @@ object SparkEntry {
       // each repeated line must survive only at its corpus-wide first
       // (doc_id, idx) occurrence. The oracle recomputes the construction
       // AND the dedup semantics independently in SQL.
-      import s.implicits._
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          val body = text.split(" ", -1) /* keep trailing empties: DuckDB string_split semantics, or a trailing-space doc diverges from the oracle */ .grouped(8).map(_.mkString(" ")).mkString("\n")
-          (id, s"CORPUS HEADER BOILERPLATE\n$body\nFooter ${id % 10}")
-        }
-        .toDF("doc_id", "text")
-      Dedup.dedupLines(docs, "doc_id", "text")
+      Dedup.dedupLines(boilerplateLines(s, dir), "doc_id", "text")
         .orderBy("doc_id") // behind the reassembly exchange — no double kernel
     }),
     "q59_llm_pipeline" -> ((s, dir) => {
@@ -1091,7 +1085,7 @@ object SparkEntry {
             }
           } finally listing.close() // the stream holds a directory fd
         } else java.nio.file.Files.copy(srcP, stage.resolve("documents.parquet"))
-        val schema = s.read.parquet(stage.toString).schema
+        val schema = graft.jobs.Staging.parquetSchema(s, s"$dir/documents.parquet")
         val stream = s.readStream.schema(schema).parquet(stage.toString)
           .select(col("doc_id"), col("text"))
         val extracted = withTextStats(stream).select("doc_id", "n_tokens", "text_sha256")
@@ -1733,15 +1727,7 @@ object SparkEntry {
       // documents. The header and footers must vanish from all docs;
       // natural body lines repeated across >= 3 docs vanish too, and the
       // oracle recomputes the DF rule independently.
-      import s.implicits._
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          val body = text.split(" ", -1).grouped(8).map(_.mkString(" ")).mkString("\n")
-          (id, s"CORPUS HEADER BOILERPLATE\n$body\nFooter ${id % 10}")
-        }
-        .toDF("doc_id", "text")
-      Dedup.stripCommonLines(docs, "doc_id", "text", minDocs = 3)
+      Dedup.stripCommonLines(boilerplateLines(s, dir), "doc_id", "text", minDocs = 3)
         .orderBy("doc_id")
     }),
     "q83_dsir_weights" -> ((s, dir) => {
@@ -2408,6 +2394,23 @@ object SparkEntry {
       .toDF("url", "html")
   }
 
+  /** q56's and q82's documents: each doc rebuilt as lines of 8 tokens
+    * wrapped in planted cross-document boilerplate, a corpus-wide header on
+    * every doc and a footer shared by every 10th.
+    */
+  private def boilerplateLines(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    t(s, dir, "documents").select(col("doc_id"), col("text"))
+      .as[(Long, String)]
+      .map { case (id, text) =>
+        // keep trailing empties: DuckDB string_split semantics, or a
+        // trailing-space doc diverges from the oracle
+        val body = text.split(" ", -1).grouped(8).map(_.mkString(" ")).mkString("\n")
+        (id, s"CORPUS HEADER BOILERPLATE\n$body\nFooter ${id % 10}")
+      }
+      .toDF("doc_id", "text")
+  }
+
   /** q88's crawl frontier: one candidate URL per doc on hosts
     * `h{id%7}.example` with path `/p{id%4}/page{id}` — every robots
     * verdict is doc_id arithmetic (see [[q88Robots]]).
@@ -2417,37 +2420,39 @@ object SparkEntry {
       concat(lit("https://h"), col("doc_id") % 7, lit(".example/p"),
         col("doc_id") % 4, lit("/page"), col("doc_id")).as("url"))
 
-  /** q88's per-host robots rules (host 6 deliberately has NO row):
-    * even hosts — a graftbot group (Disallow `/p{k%4}/`, wildcard-anchored
-    * Allow `/p{k%4}/page*0$`) that must SHADOW a disallow-everything `*`
-    * group; odd hosts — an inapplicable `other` group plus a `*` group
-    * (Disallow `/p1/` and `/p3/`, Allow `/p3/page1*`).
+  /** q88's per-host robots rules, [[parityRobots]] for hosts 0–5 (host 6
+    * deliberately has NO row).
     */
   private def q88Robots(s: SparkSession): DataFrame = {
     import s.implicits._
-    (0 to 5).map { k =>
-      val txt =
-        if (k % 2 == 0)
-          s"""# crawl policy for h$k
-             |User-agent: graftbot
-             |Disallow: /p${k % 4}/
-             |Allow: /p${k % 4}/page*0$$
-             |
-             |User-agent: *
-             |Disallow: /
-             |""".stripMargin
-        else
-          """User-agent: other
-            |Disallow: /
-            |
-            |User-agent: *
-            |Disallow: /p1/
-            |Disallow: /p3/
-            |Allow: /p3/page1*
-            |""".stripMargin
-      (s"h$k.example", txt)
-    }.toDF("host", "robots_txt")
+    (0 to 5).map(k => (s"h$k.example", parityRobots(k))).toDF("host", "robots_txt")
   }
+
+  /** The robots.txt of q88's and q94's host k, by k's parity: even — a
+    * graftbot group (Disallow `/p{k%4}/`, wildcard-anchored Allow
+    * `/p{k%4}/page*0$`) that must SHADOW a disallow-everything `*` group,
+    * under a comment line; odd — an inapplicable `other` group plus a `*`
+    * group (Disallow `/p1/` and `/p3/`, Allow `/p3/page1*`).
+    */
+  private def parityRobots(k: Int): String =
+    if (k % 2 == 0)
+      s"""# crawl policy for host $k
+         |User-agent: graftbot
+         |Disallow: /p${k % 4}/
+         |Allow: /p${k % 4}/page*0$$
+         |
+         |User-agent: *
+         |Disallow: /
+         |""".stripMargin
+    else
+      """User-agent: other
+        |Disallow: /
+        |
+        |User-agent: *
+        |Disallow: /p1/
+        |Disallow: /p3/
+        |Allow: /p3/page1*
+        |""".stripMargin
 
   /** q90's pinned BPE merge table (training order). Chosen from frequent
     * English bigrams so the synthetic corpus exercises every merge,
@@ -2590,27 +2595,8 @@ object SparkEntry {
     */
   private def q94Robots(s: SparkSession): DataFrame = {
     import s.implicits._
-    (0 to 22).filter(_ % 5 != 4).map { k =>
-      val txt =
-        if (k % 2 == 0)
-          s"""User-agent: graftbot
-             |Disallow: /p${k % 4}/
-             |Allow: /p${k % 4}/page*0$$
-             |
-             |User-agent: *
-             |Disallow: /
-             |""".stripMargin
-        else
-          """User-agent: other
-            |Disallow: /
-            |
-            |User-agent: *
-            |Disallow: /p1/
-            |Disallow: /p3/
-            |Allow: /p3/page1*
-            |""".stripMargin
-      (s"site$k.example", txt)
-    }.toDF("host", "robots_txt")
+    (0 to 22).filter(_ % 5 != 4).map(k => (s"site$k.example", parityRobots(k)))
+      .toDF("host", "robots_txt")
   }
 
   /** q95's segmented-index staging: two disjoint crawl-batch segments

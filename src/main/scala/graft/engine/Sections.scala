@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.jobs.TrainScorerJob
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,7 +17,8 @@ import org.apache.spark.sql.functions._
   * [[withNeighborFeatures]] → [[fitStartClassifier]]: per-line label
   * one-hots + annotation counts, widened with the ±n neighbor lines via
   * Window lag/lead (`prev_line_i_*` / `next_line_i_*`, zero-filled at the
-  * edges like the reference), fit with the distributed logistic trainer.
+  * edges like the reference), fit as a binary logistic by the driver-side
+  * trainer (`TrainScorerJob.fitSoftmaxLocal`, two classes).
   */
 object Sections {
 
@@ -88,18 +90,24 @@ object Sections {
   }
 
   /** Fit the section-start classifier: rows carry (features array, y 0/1).
-    * Delegates to the distributed logistic trainer (broadcast weights,
-    * per-partition gradient partials).
+    * The frame is gathered to the driver once, one array per partition in
+    * partition order, and fit there by the engine's one trainer; the start
+    * probability of a line is `predictProba(model, features)(1)`.
     */
-  def fitStartClassifier(frame: DataFrame, dim: Int, iters: Int = 120, lr: Double = 0.8): graft.jobs.TrainScorerJob.Fitted = {
+  def fitStartClassifier(frame: DataFrame, dim: Int, iters: Int = 120, lr: Double = 0.8): TrainScorerJob.FittedK = {
     val spark = frame.sparkSession
     import spark.implicits._
-    val ds = frame.select(col("y").cast("double"), col("features"))
-      .as[(Double, Seq[Double])]
-      .map { case (y, f) => graft.jobs.TrainScorerJob.Example(y, f.toArray) }
-      .persist()
-    try graft.jobs.TrainScorerJob.fitBinary(ds, dim, iters = iters, lr = lr)
-    finally ds.unpersist()
+    val parts = frame.select(col("y").cast("int"), col("features"))
+      .as[(Int, Seq[Double])]
+      .map { case (y, f) => TrainScorerJob.ExampleK(y, f.toArray) }
+      .rdd.glom().collect()
+    val l2 = 1e-4
+    // A two-class softmax started from zero keeps w1 = -w0, and its
+    // p1 = sigmoid((w1 - w0).x + b1 - b0). At (lr/2, 2*l2) that difference
+    // takes exactly the binary logistic step at (lr, l2), in real
+    // arithmetic: this is the binary logistic start classifier.
+    TrainScorerJob.fitSoftmaxLocal(parts.toIndexedSeq, 2, dim, Array(1.0, 1.0), iters,
+      lr = lr / 2, l2 = 2 * l2)
   }
 
   /** Deterministic line-level section-start score — retained as the

@@ -2,6 +2,8 @@ package graft.jobs
 
 import java.nio.file.{Files, Path}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
 /** Per-JVM memo for the staged on-disk builds behind the contract queries
   * (index stores, WARC archive sets): each (prefix, key) is built once into
@@ -9,6 +11,8 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
   * calls — bench trials, interactive sessions — read the built directory
   * instead of rebuilding it. Every directory made here is deleted at JVM
   * exit. Production jobs build against a durable path themselves.
+  * It also holds the inferred schema of each parquet table the contract
+  * queries read ([[parquetSchema]]).
   */
 object Staging {
   private final class Entry(prefix: String, private var build: String => Unit) {
@@ -34,6 +38,25 @@ object Staging {
     val k = (prefix, key)
     val e = entries.computeIfAbsent(k, _ => new Entry(prefix, build))
     try e.dir catch { case t: Throwable => entries.remove(k, e); throw t }
+  }
+
+  private val schemas = new ConcurrentHashMap[(String, Long), StructType]()
+
+  /** The schema `spark.read.parquet(path)` infers, inferred once per table
+    * version: keyed by the table root's qualified path and its modification
+    * time, so a table rewritten in place is inferred again. Inference runs
+    * a Spark job; a memoized schema lets a query be built with none. The
+    * first reader's parquet settings decide the memoized schema. A missing
+    * table fails as `spark.read.parquet` does.
+    */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val status = try Some(fs.getFileStatus(p)) catch { case _: java.io.FileNotFoundException => None }
+    status.fold(spark.read.parquet(path).schema) { st =>
+      schemas.computeIfAbsent((fs.makeQualified(p).toString, st.getModificationTime),
+        _ => spark.read.parquet(path).schema)
+    }
   }
 
   /** Best-effort recursive delete; a missing path is a no-op. */

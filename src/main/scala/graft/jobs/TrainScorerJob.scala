@@ -1,110 +1,21 @@
 package graft.jobs
 
-import graft.core.{Features, Rx, Span}
-import graft.engine.{Extraction, PageRow}
+import graft.core.{Features, Span}
+import graft.engine.{Extraction, ExtractedDoc}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** C1 classifier fit, Spark-native: full-batch logistic regression over the
-  * X1 span feature vectors (the reference trains a RandomForest on the same
-  * matrix, information_extraction.py:2950-2963; a logistic keeps inference a
-  * broadcastable pure function — SURVEY §7.3).
-  *
-  * Plan shape per iteration: broadcast weights → one narrow mapPartitions
-  * computing per-partition (gradient, loss) partials → small reduce →
-  * driver update. Deterministic given the input partitioning (partials are
-  * combined in partition order); inference is bit-deterministic everywhere.
+/** The engine's one classifier fit: full-batch softmax regression on the
+  * driver ([[fitSoftmaxLocal]]). It trains C1 over the X1 span feature
+  * vectors and the assembled frame (the reference trains a RandomForest on
+  * the same matrix, information_extraction.py:2950-2963; a linear model
+  * keeps inference a broadcastable pure function — SURVEY §7.3), and C5's
+  * section-start classifier as its two-class case
+  * (`Sections.fitStartClassifier`). The training set is gathered once, one
+  * array per partition; every step is driver arithmetic, with no Spark job
+  * per step. Deterministic given the partitioning (partials are combined in
+  * partition order); inference is bit-deterministic everywhere.
   */
 object TrainScorerJob {
-
-  final case class Example(label: Double, features: Array[Double])
-
-  final case class Fitted(
-      weights: Array[Double], bias: Double,
-      mean: Array[Double], scale: Array[Double],
-      trainLoss: Double, iterations: Int)
-
-  @inline private def sigmoid(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
-
-  /** Standardization stats (mean, stddev with epsilon floor) in one pass. */
-  private def stats(ds: Dataset[Example], dim: Int): (Array[Double], Array[Double]) = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val (n, sum, sumSq) = ds.mapPartitions { it =>
-      var n = 0L
-      val s = new Array[Double](dim)
-      val s2 = new Array[Double](dim)
-      it.foreach { ex =>
-        n += 1
-        var i = 0
-        while (i < dim) { s(i) += ex.features(i); s2(i) += ex.features(i) * ex.features(i); i += 1 }
-      }
-      Iterator.single((n, s, s2))
-    }.collect().foldLeft((0L, new Array[Double](dim), new Array[Double](dim))) { (a, c) =>
-      var i = 0
-      while (i < dim) { a._2(i) += c._2(i); a._3(i) += c._3(i); i += 1 }
-      (a._1 + c._1, a._2, a._3)
-    }
-    val mean = sum.map(_ / math.max(1L, n))
-    val scale = Array.tabulate(dim) { i =>
-      val v = sumSq(i) / math.max(1L, n) - mean(i) * mean(i)
-      math.max(1e-9, math.sqrt(math.max(0, v)))
-    }
-    (mean, scale)
-  }
-
-  /** Fit binary logistic weights; `ds` is cached by the caller. */
-  def fitBinary(
-      ds: Dataset[Example], dim: Int,
-      iters: Int = 60, lr: Double = 0.5, l2: Double = 1e-4): Fitted = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val (mean, scale) = stats(ds, dim)
-    val n = ds.count().toDouble
-    require(n > 0, "fitBinary: empty training set (would divide by n=0 into NaN weights)")
-    var w = new Array[Double](dim)
-    var b = 0.0
-    var loss = 0.0
-    val bcStats = spark.sparkContext.broadcast((mean, scale))
-    (0 until iters).foreach { _ =>
-      val bcW = spark.sparkContext.broadcast((w, b))
-      val partials = ds.mapPartitions { it =>
-        val (wts, bias) = bcW.value
-        val (m, s) = bcStats.value
-        val grad = new Array[Double](dim)
-        var gradB = 0.0
-        var l = 0.0
-        var cnt = 0L
-        it.foreach { ex =>
-          var z = bias
-          var i = 0
-          while (i < dim) { z += wts(i) * (ex.features(i) - m(i)) / s(i); i += 1 }
-          val p = sigmoid(z)
-          val err = p - ex.label
-          i = 0
-          while (i < dim) { grad(i) += err * (ex.features(i) - m(i)) / s(i); i += 1 }
-          gradB += err
-          l += -(ex.label * math.log(math.max(p, 1e-12)) +
-            (1 - ex.label) * math.log(math.max(1 - p, 1e-12)))
-          cnt += 1
-        }
-        Iterator.single((grad, gradB, l, cnt))
-      }.collect() // one small row per partition, combined in partition order
-      val (g, gB, l, _) = partials.foldLeft((new Array[Double](dim), 0.0, 0.0, 0L)) { (a, c) =>
-        var i = 0
-        while (i < dim) { a._1(i) += c._1(i); i += 1 }
-        (a._1, a._2 + c._2, a._3 + c._3, a._4 + c._4)
-      }
-      var i = 0
-      val wNew = new Array[Double](dim)
-      while (i < dim) { wNew(i) = w(i) - lr * (g(i) / n + l2 * w(i)); i += 1 }
-      w = wNew
-      b = b - lr * gB / n
-      loss = l / n
-      bcW.destroy()
-    }
-    bcStats.destroy() // same hygiene as the per-iteration bcW
-    Fitted(w, b, mean, scale, loss, iters)
-  }
 
   final case class ExampleK(y: Int, features: Array[Double])
 
@@ -270,52 +181,45 @@ object TrainScorerJob {
     z
   }
 
-  /** Score with a fitted model — pure function, broadcastable. */
-  def predict(m: Fitted, features: Array[Double]): Double = {
-    var z = m.bias
-    var i = 0
-    while (i < m.weights.length) { z += m.weights(i) * (features(i) - m.mean(i)) / m.scale(i); i += 1 }
-    sigmoid(z)
-  }
-
   /** Build a labeled training set from extraction output: every token span
-    * becomes an example, label 1 when the pipeline labeled it `targetLabel`
-    * (the C3 containment transfer onto tokenizer spans).
+    * becomes an example, class 1 when the pipeline labeled it `targetLabel`.
     */
-  def examplesFromCorpus(spark: SparkSession, nDocs: Long, partitions: Int, targetLabel: String): Dataset[Example] = {
-    import spark.implicits._
-    Extraction.extract(Extraction.syntheticPages(spark, nDocs, partitions))
-      .flatMap { doc =>
-        val positives = doc.labels.filter(_.label == targetLabel)
-          .map(l => Span(l.start, l.end)).toIndexedSeq
-        doc.spans.iterator.map { sp =>
-          val inside = positives.exists(p => p.start <= sp.start && sp.end <= p.end)
-          Example(if (inside) 1.0 else 0.0,
-            Features.convertToFeat(doc.extracted_text.substring(sp.start, sp.end)))
-        }
-      }
-  }
+  def examplesFromCorpus(spark: SparkSession, nDocs: Long, partitions: Int, targetLabel: String): Dataset[ExampleK] =
+    labeledExamples(spark, nDocs, partitions, targetLabel) { doc =>
+      doc.spans.iterator.map(sp => (sp.start, sp.end,
+        Features.convertToFeat(doc.extracted_text.substring(sp.start, sp.end))))
+    }
 
   /** X8 → C1: training examples carrying the ASSEMBLED feature frame (the
     * reference trains its classifier on exactly this 270-wide per-span
     * frame, information_extraction.py:2950-2963 over process_document_data
     * output). Same containment labeling as [[examplesFromCorpus]].
     */
-  def examplesFromFrame(spark: SparkSession, nDocs: Long, partitions: Int, targetLabel: String): Dataset[Example] = {
+  def examplesFromFrame(spark: SparkSession, nDocs: Long, partitions: Int, targetLabel: String): Dataset[ExampleK] =
+    labeledExamples(spark, nDocs, partitions, targetLabel) { doc =>
+      val text = doc.extracted_text
+      val cands: IndexedSeq[Span] = doc.spans.map(s => Span(s.start, s.end)).toIndexedSeq
+      graft.engine.FeatureFrame
+        .assembleDoc(text, graft.core.Geometry.syntheticGrid(text), cands, cands,
+          2, 2, firstWord = true, acrossLines = false, Nil, Nil)
+        .iterator.map(r => (r.start, r.end, r.features))
+    }
+
+  /** Extract `nDocs` synthetic pages and label each (start, end, features)
+    * row `rows` emits per document: class 1 when the span lies inside one of
+    * the document's `targetLabel` annotations (the C3 containment transfer
+    * onto tokenizer spans), else 0.
+    */
+  private def labeledExamples(spark: SparkSession, nDocs: Long, partitions: Int, targetLabel: String)(
+      rows: ExtractedDoc => Iterator[(Int, Int, Array[Double])]): Dataset[ExampleK] = {
     import spark.implicits._
     Extraction.extract(Extraction.syntheticPages(spark, nDocs, partitions))
-      .mapPartitions(_.flatMap { doc =>
-        val text = doc.extracted_text
-        val cands: IndexedSeq[Span] = doc.spans.map(s => Span(s.start, s.end)).toIndexedSeq
+      .flatMap { doc =>
         val positives = doc.labels.filter(_.label == targetLabel)
           .map(l => Span(l.start, l.end)).toIndexedSeq
-        graft.engine.FeatureFrame
-          .assembleDoc(text, graft.core.Geometry.syntheticGrid(text), cands, cands,
-            2, 2, firstWord = true, acrossLines = false, Nil, Nil)
-          .iterator.map { r =>
-            val inside = positives.exists(p => p.start <= r.start && r.end <= p.end)
-            Example(if (inside) 1.0 else 0.0, r.features)
-          }
-      })
+        rows(doc).map { case (start, end, f) =>
+          ExampleK(if (positives.exists(p => p.start <= start && end <= p.end)) 1 else 0, f)
+        }
+      }
   }
 }

@@ -12,6 +12,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Each plan is written in [[canonical]] form, so two dumps of the same
   * plan — from two commits, or two runs — are byte-identical files.
+  * q44 and q78 run their streams while they are built and return a scan
+  * of the memory sink, so their plans cannot show a change to their
+  * bodies.
   */
 object PlanDump {
   /** `plan` with the parts that vary from run to run masked: expression

@@ -7,8 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** C5: the TRAINED line-level section-start classifier (the reference's
   * template clf, information_extraction.py:2071-2191) — per-line label
   * one-hots + counts from the real extraction pipeline, ±5 neighbor lines
-  * via Window lag/lead, fit with the distributed logistic trainer. Held-out
-  * accuracy must clear 95% on a form corpus with known section structure.
+  * via Window lag/lead, fit as a binary logistic by the driver-side trainer
+  * (two-class `fitSoftmaxLocal`; the start probability is class 1's).
+  * Held-out accuracy must clear 95% on a form corpus with known section
+  * structure.
   */
 class SectionsTrainedSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -45,11 +47,25 @@ class SectionsTrainedSpec extends AnyFunSuite {
     frame.unpersist()
     assert(test.length == 20 * 16)
     val correct = test.count { case (y, f) =>
-      val p = TrainScorerJob.predict(model, f.toArray)
+      val p = TrainScorerJob.predictProba(model, f.toArray)(1)
       (p >= 0.5) == (y >= 0.5)
     }
     val acc = correct.toDouble / test.length
     assert(acc >= 0.95, s"held-out section-start accuracy $acc < 0.95")
+  }
+
+  test("the start classifier gathers its frame in one Spark job, not one per iteration") {
+    import spark.implicits._
+    val pages = (0L until 8L).map(d =>
+      PageRow(s"doc$d", null, Array.empty[Byte], docText(d), "")).toDS()
+    val frame = Sections.withNeighborFeatures(Sections.lineLabelFrame(Extraction.extract(pages)), n = 5)
+      .withColumn("y", (col("line_no") % 4 === 0).cast("int"))
+      .persist()
+    frame.count()
+    val (_, jobs) = SparkTestBase.jobsDuring(Sections.fitStartClassifier(frame, (Labels.all.length + 1) * 11))
+    frame.unpersist()
+    // 122 with the per-iteration distributed loop it replaced (120 iterations)
+    assert(jobs == 1)
   }
 
   test("neighbor widening is shaped and zero-filled at document edges") {

@@ -1,5 +1,8 @@
 package graft.engine
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark suites (forked test JVM). */
@@ -61,5 +64,38 @@ object SparkTestBase {
       keys.foreach(spark.conf.set(_, "-1"))
       body
     } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** `body`'s result and the number of Spark jobs it starts, its own threads' included
+    * (they inherit the job group the jobs are counted by). Listener events
+    * arrive in order: once a marker job started after `body` is seen, every
+    * job of `body` has been counted.
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val jobs = new AtomicInteger(0)
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case `marker` => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobsDuring")
+      val result = body
+      sc.setJobGroup(marker, "listener barrier")
+      sc.parallelize(Seq(1), 1).count()
+      require(markerSeen.await(60, TimeUnit.SECONDS), "the listener never saw the marker job")
+      (result, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.jobs
 
 import graft.engine.{Extraction, SparkTestBase, TempDirs}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 class ExtractJobSpec extends AnyFunSuite with TempDirs {
@@ -141,33 +140,8 @@ class ExtractJobSpec extends AnyFunSuite with TempDirs {
   test("a fresh run is two jobs plus two per bucket, all in the caller's job group") {
     val out = freshDir()
     val pages = Extraction.syntheticPages(spark, 200, 4)
-    val sc = spark.sparkContext
-    val group = s"extract-job-count-${System.nanoTime()}"
-    val marker = s"$group-marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case `marker` => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "ExtractJob.run")
-      ExtractJob.run(spark, pages, out, nBuckets = 4)
-      // listener events arrive in order: once the marker job is seen, every
-      // job of the run has been counted
-      sc.setJobGroup(marker, "listener barrier")
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get == 2 + 2 * 4)
+    val (_, jobs) = SparkTestBase.jobsDuring(ExtractJob.run(spark, pages, out, nBuckets = 4))
+    assert(jobs == 2 + 2 * 4)
   }
 
   test("lineage rows match the golden (bucket, n_rows, n_tokens, checksum)") {
