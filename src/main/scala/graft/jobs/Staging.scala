@@ -40,22 +40,33 @@ object Staging {
     try e.dir catch { case t: Throwable => entries.remove(k, e); throw t }
   }
 
-  private val schemas = new ConcurrentHashMap[(String, Long), StructType]()
+  private final class Inferred(val mtime: Long, private var read: () => StructType) {
+    // inferred under this holder's own lock, like Entry: a Spark job never
+    // runs inside the map's compute, so other tables' lookups do not wait
+    lazy val schema: StructType = { val s = read(); read = null; s }
+  }
+
+  private val schemas = new ConcurrentHashMap[String, Inferred]()
 
   /** The schema `spark.read.parquet(path)` infers, inferred once per table
-    * version: keyed by the table root's qualified path and its modification
-    * time, so a table rewritten in place is inferred again. Inference runs
-    * a Spark job; a memoized schema lets a query be built with none. The
-    * first reader's parquet settings decide the memoized schema. A missing
-    * table fails as `spark.read.parquet` does.
+    * version: keyed by the table root's qualified path and checked against
+    * its modification time, so a table rewritten in place is inferred
+    * again and replaces the older version's entry. Inference runs a Spark
+    * job; a memoized schema lets a query be built with none. The first
+    * reader's parquet settings decide the memoized schema. A failed
+    * inference is forgotten, and a missing table fails as
+    * `spark.read.parquet` does.
     */
   def parquetSchema(spark: SparkSession, path: String): StructType = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val status = try Some(fs.getFileStatus(p)) catch { case _: java.io.FileNotFoundException => None }
     status.fold(spark.read.parquet(path).schema) { st =>
-      schemas.computeIfAbsent((fs.makeQualified(p).toString, st.getModificationTime),
-        _ => spark.read.parquet(path).schema)
+      val key = fs.makeQualified(p).toString
+      val mtime = st.getModificationTime
+      val e = schemas.compute(key, (_, old) =>
+        if (old != null && old.mtime == mtime) old else new Inferred(mtime, () => spark.read.parquet(path).schema))
+      try e.schema catch { case t: Throwable => schemas.remove(key, e); throw t }
     }
   }
 

@@ -8,17 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class TrainScorerJobSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
-  /** The binary logistic at (lr, l2) as a two-class softmax: the one fit
-    * over the training set gathered one array per partition.
+  /** The section-start classifier's fit (the binary logistic at l2 = 1e-4)
+    * over a set of examples.
     */
-  private def fitLogistic(train: Dataset[TrainScorerJob.ExampleK], dim: Int, iters: Int,
-      lr: Double = 0.5, l2: Double = 1e-4): TrainScorerJob.FittedK =
-    TrainScorerJob.fitSoftmaxLocal(train.rdd.glom().collect().toIndexedSeq, 2, dim,
-      Array(1.0, 1.0), iters, lr = lr / 2, l2 = 2 * l2)
+  private def fitStart(train: Dataset[TrainScorerJob.ExampleK], dim: Int, iters: Int,
+      lr: Double = 0.5): TrainScorerJob.FittedK =
+    Sections.fitStartClassifier(train.toDF("y", "features"), dim, iters, lr)
 
   test("logistic fit separates date spans from the rest (C1 train -> predict)") {
     val train = TrainScorerJob.examplesFromCorpus(spark, 150, 4, "date")
-    val model = fitLogistic(train, graft.core.Features.width, iters = 40)
+    val model = fitStart(train, graft.core.Features.width, iters = 40)
     assert(model.trainLoss < 0.2, s"train loss ${model.trainLoss}")
     // held-out docs (disjoint url range via different count → different pages)
     val test = TrainScorerJob.examplesFromCorpus(spark, 40, 2, "date")
@@ -35,7 +34,7 @@ class TrainScorerJobSpec extends AnyFunSuite {
     val dim = graft.engine.FeatureFrame.width()
     assert(dim == 270)
     val train = TrainScorerJob.examplesFromFrame(spark, 120, 4, "date")
-    val model = fitLogistic(train, dim, iters = 40)
+    val model = fitStart(train, dim, iters = 40)
     val test = TrainScorerJob.examplesFromFrame(spark, 40, 2, "date").collect()
     val correct = test.count { ex =>
       (TrainScorerJob.predictProba(model, ex.features)(1) >= 0.5) == (ex.y == 1)
@@ -46,8 +45,8 @@ class TrainScorerJobSpec extends AnyFunSuite {
 
   test("fit is reproducible for a fixed partitioning") {
     val train = TrainScorerJob.examplesFromCorpus(spark, 60, 4, "amount").persist()
-    val a = fitLogistic(train, graft.core.Features.width, iters = 10)
-    val b = fitLogistic(train, graft.core.Features.width, iters = 10)
+    val a = fitStart(train, graft.core.Features.width, iters = 10)
+    val b = fitStart(train, graft.core.Features.width, iters = 10)
     assert(a.weights.map(_.toSeq).toSeq == b.weights.map(_.toSeq).toSeq && a.bias.toSeq == b.bias.toSeq)
     train.unpersist()
   }
@@ -69,23 +68,15 @@ class TrainScorerJobSpec extends AnyFunSuite {
       parts <- Gen.oneOf(1, 2, 3, 7)
       iters <- Gen.choose(1, 60)
       lr <- Gen.oneOf(0.1, 0.5, 0.8)
-      l2 <- Gen.oneOf(0.0, 1e-4)
-    } yield (dim, rows, parts, iters, lr, l2)
-    PropCheck(Prop.forAllNoShrink(input) { case (dim, rows, parts, iters, lr, l2) =>
+    } yield (dim, rows, parts, iters, lr)
+    PropCheck(Prop.forAllNoShrink(input) { case (dim, rows, parts, iters, lr) =>
       val frame = spark.sparkContext.parallelize(rows, parts).toDF("y", "features")
       val ref = {
         val ds = frame.select($"y".cast("double"), $"features").as[(Double, Seq[Double])]
           .map { case (y, f) => Example(y, f.toArray) }.persist()
-        try fitBinary(ds, dim, iters = iters, lr = lr, l2 = l2) finally ds.unpersist()
+        try fitBinary(ds, dim, iters = iters, lr = lr, l2 = 1e-4) finally ds.unpersist()
       }
-      val got = fitLogistic(frame.as[(Int, Seq[Double])].map { case (y, f) =>
-        TrainScorerJob.ExampleK(y, f.toArray) }, dim, iters, lr, l2)
-      // the start classifier is this fit at its l2
-      if (l2 == 1e-4) {
-        val start = Sections.fitStartClassifier(frame, dim, iters, lr)
-        assert(start.weights.map(_.toSeq).toSeq == got.weights.map(_.toSeq).toSeq &&
-          start.bias.toSeq == got.bias.toSeq)
-      }
+      val got = Sections.fitStartClassifier(frame, dim, iters, lr)
       assert(got.mean.toSeq == ref.mean.toSeq && got.scale.toSeq == ref.scale.toSeq)
       assert(math.abs(got.trainLoss - ref.trainLoss) <= 1e-9, s"loss ${got.trainLoss} vs ${ref.trainLoss}")
       rows.foreach { case (_, f) =>
